@@ -1,20 +1,27 @@
-"""Connected components — clusters from near-duplicate pairs.
+"""Iterative graph operators: connected components and BFS depths.
 
 Near-dup detection (MinHash/SimHash/cosine) yields PAIRS; deduplication
-needs CLUSTERS (keep one representative per component). This is the
-iterative min-label-propagation algorithm (the standard Spark shape for
-GraphX-style CC without GraphX):
+needs CLUSTERS (keep one representative per component). Two
+connected-components algorithms share one output contract (every node
+→ the minimum id of its component), and each caller picks the one that
+suits its graph's shape:
 
-- each node starts labeled with itself;
-- every round, each node takes the min label among itself and its
-  neighbors (one join + one aggregation per round);
-- converges in O(graph diameter) rounds — near-dup graphs are
-  overwhelmingly small-diameter clusters, so a handful of rounds.
+- ``connected_components``: min-label propagation (the standard Spark
+  shape for GraphX-style CC without GraphX). Every round, each node
+  takes the min label among itself and its neighbors (one join + one
+  aggregation); O(graph diameter) rounds — near-dup blob graphs
+  converge in about two.
+- ``connected_components_alternating``: large-star / small-star rounds,
+  O(log² n) on any topology — safe for chain-shaped clusters.
+
+``bfs_depths`` is the level-synchronous frontier BFS.
 
 Scale posture: per-round cost is one shuffle of |edges| + |labels|;
 ``localCheckpoint`` truncates lineage each round so the plan does not
 grow with iterations (a classic iterative-algorithm failure mode), and
-convergence is detected with a per-round changed-count action.
+convergence is detected with one scalar aggregate per round. A CC loop
+that reaches ``max_iter`` without converging raises instead of
+returning partial labels.
 
 Iterative + data-dependent round count → genuinely non-SQL-expressible
 (driver records a rows-only check for queries built on this; unit tests
@@ -73,19 +80,14 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    adapt_after: int = 3,
     plan_probe: PlanProbe | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = min
     node id reachable through the pair graph.
 
-    ``adapt_after``: round count after which a still-unconverged loop
-    re-materializes the static edge frame clustered by its join key
-    (``_persist_partitioned``) — blob graphs (the near-dup common case)
-    converge in ~2 rounds and never pay the extra materialization,
-    while a long-diameter graph amortizes it over its remaining rounds
-    (r14 crossover measurement in OPTIMIZATION_r14.md). ``plan_probe``
-    (see :data:`PlanProbe`) captures each round's pre-checkpoint plan."""
+    Raises ``RuntimeError`` if the labels are still changing after
+    ``max_iter`` rounds. ``plan_probe`` (see :data:`PlanProbe`)
+    captures each round's pre-checkpoint plan."""
     # Materialize the DIRECTED edges first: the mirrored union otherwise
     # embeds the pairs subtree twice in one plan (no subtree reuse), and
     # upstream pair producers (MinHash + exact-collapse expansion) are
@@ -96,14 +98,11 @@ def connected_components(
     edges = directed.union(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    # localCheckpoint to START (not the persist-with-layout variant):
-    # label-prop converges in ~2 rounds on near-dup blob graphs, and the
-    # r13 A/B measured the persist a wash at sf0.1 (6.63 vs 6.88 s) —
-    # the extra materialization job and columnar-cache reads offset the
-    # one saved edge exchange when the round count is small. A loop
-    # still running after ``adapt_after`` rounds switches to the
-    # persisted dst-clustered layout (see the loop body) — the r14
-    # long-diameter A/B figures are in OPTIMIZATION_r14.md.
+    # localCheckpoint, not the persist-with-layout variant: label-prop
+    # converges in ~2 rounds on near-dup blob graphs, and the r13 A/B
+    # measured the persist a wash at sf0.1 (6.63 vs 6.88 s) — the extra
+    # materialization job and columnar-cache reads offset the one saved
+    # edge exchange when the round count is small.
     edges = edges.localCheckpoint(eager=True)
 
     # Per-round shuffle sizing is AQE's job, not a session-conf mutation
@@ -134,13 +133,6 @@ def connected_components(
     # pair-producing subtree evaluates once.)
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
     for i in range(max_iter):
-        if i == adapt_after:
-            # Still unconverged: the graph is long-diameter (chain-
-            # shaped near-dup runs), so the remaining rounds amortize a
-            # dst-clustered persisted layout — each subsequent
-            # frontier join reads the edge side as a bare
-            # InMemoryTableScan, no per-round |E| exchange+sort.
-            edges = _persist_partitioned(edges, "dst")
         nbr_min = edges.join(labels, edges.dst == labels.node).select(
             F.col("src").alias("node"), F.col("comp")
         )
@@ -156,6 +148,10 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"label propagation did not converge within max_iter={max_iter} rounds"
+        )
     return labels
 
 
@@ -187,7 +183,8 @@ def connected_components_alternating(
 
     Result: every node maps to its component's minimum id — identical
     output contract to ``connected_components`` (pinned against it in
-    tests on random + path graphs).
+    tests on random + path graphs). Raises ``RuntimeError`` if the edge
+    set is still changing after ``max_iter`` rounds.
     """
     # Checkpoint before anything reads it: the input frame feeds the
     # iteration seed AND the isolated-node backfill — one evaluation of
@@ -250,6 +247,10 @@ def connected_components_alternating(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"alternating-star did not converge within max_iter={max_iter} rounds"
+        )
     # At fixpoint every edge is (node → its component min); nodes
     # that became isolated roots map to themselves via the union.
     comp = edges.select(F.col("u").alias("node"), F.col("v").alias("comp"))
@@ -269,13 +270,6 @@ def connected_components_alternating(
         .groupBy("node")
         .agg(F.min("comp").alias("comp"))
     )
-
-
-# Measured crossover for pagerank's static-edge layout (r14, 10M-edge
-# random digraph, same-process A/B — see OPTIMIZATION_r14.md): the
-# persisted src-clustered layout loses at 3 rounds, wins from ~10. The
-# constant is round-count economics, not a data-size tunable.
-_PAGERANK_PERSIST_MIN_ROUNDS = 10
 
 
 def dedup_by_components(
@@ -300,155 +294,41 @@ def dedup_by_components(
     return docs.join(losers, id_col, "left_anti")
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 15,
-    edge_layout: str = "auto",
-    plan_probe: PlanProbe | None = None,
-) -> DataFrame:
-    """(node, rank) by power iteration with uniform teleport and
-    dangling-mass redistribution; Σ rank = 1 at every round.
-
-    Loop hygiene, one step beyond ``connected_components``: the edge
-    set, node set, and degree table are eager-checkpointed once (they
-    are re-read every round), and because the round count is FIXED —
-    power iteration needs no data-dependent convergence probe — the
-    loop runs with ZERO driver actions: the per-round dangling mass is
-    a 1-row aggregate cross-joined back as a broadcast instead of a
-    ``collect``, and each round's rank frame is a lazy
-    ``localCheckpoint`` (plan truncated immediately; computed once,
-    when the caller's single action pulls the chain). Ten rounds
-    therefore cost ten |edges| shuffles pipelined in one job, not ten
-    job round-trips — measured ~4× on the sf0.1 battery vs the
-    collect-per-round form. Fixed ``n_iter`` (the standard 10-20) is
-    sound: geometric convergence makes further rounds
-    sub-float-precision.
-
-    Iterative + engine-specific float folding → rows-only at the
-    driver; tests pin values against a NumPy power iteration of the
-    same formulation.
-    """
-    from pyspark.sql import Window as W
-
-    # Degrees ride WITH the edges, attached by a window over the one
-    # pass that builds the graph — the expensive upstream (a pair
-    # self-join, typically) materializes exactly ONCE, into the single
-    # materialized frame every round re-reads. The per-round
-    # contribution pass is then one equi-join ranks⋈edges; no per-round
-    # degree join, no second copy of the edge set.
-    # ``edge_layout``: the checkpoint-vs-persisted-layout choice is
-    # ROUND-COUNT economics (r13 A/B: persist 1.4 s WORSE at 3 rounds
-    # at sf0.1 — extra materialization jobs + columnar-cache reads;
-    # r14 10M-edge A/B: persist WINS from ~10 rounds up, figures in
-    # OPTIMIZATION_r14.md). "auto" applies the measured crossover.
-    if edge_layout == "auto":
-        edge_layout = "persist" if n_iter >= _PAGERANK_PERSIST_MIN_ROUNDS else "checkpoint"
-    # repartition BEFORE distinct: hashpartitioning(src) satisfies both
-    # the dedup's all-column clustering and the degree window, so the
-    # whole build is ONE exchange instead of distinct's (src, dst)
-    # shuffle followed by the window's src shuffle (r14 A/B: 2.4 →
-    # 1.7 s at sf0.1).
-    e_deg = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition("src")
-        .distinct()
-        .withColumn("deg", F.count(F.lit(1)).over(W.partitionBy("src")))
-    )
-    if edge_layout == "persist":
-        # The window leaves the frame clustered AND sorted by src, but
-        # localCheckpoint would drop that layout (UnknownPartitioning);
-        # the persist keeps it visible to every round's ranks⋈edges
-        # join. Eager count: run-once semantics for the deep upstream.
-        e_deg = persist_tracked(e_deg)
-        e_deg.count()
-    else:
-        e_deg = e_deg.localCheckpoint(eager=True)
-    nodes = (
-        e_deg.select(F.col("src").alias("node"))
-        .union(e_deg.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    # The dangling-node SET is static; only its mass changes per round.
-    dangling_nodes = (
-        nodes.join(e_deg.select(F.col("src").alias("node")), "node", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for i in range(n_iter):
-        # no broadcast hint: a web-scale graph can have a HUGE dangling
-        # set (sinks are common) — AQE broadcasts when it fits, shuffles
-        # when it doesn't; semantics identical.
-        dangling = (
-            ranks.join(dangling_nodes, "node", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
-        )
-        contribs = (
-            e_deg.join(ranks, e_deg.src == ranks.node)
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new_rank = (
-            F.lit((1.0 - damping) / n_nodes)
-            + F.lit(damping) * F.col("_dangling") / F.lit(float(n_nodes))
-            + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-        )
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("node", new_rank.alias("rank"))
-        )
-        if plan_probe is not None:
-            plan_probe(f"round{i + 1}", new_ranks)
-        ranks = new_ranks.localCheckpoint(eager=False)
-    return ranks
-
-
 def bfs_depths(
     edges: DataFrame,
     source: int,
     max_depth: int = 4,
     src: str = "src",
     dst: str = "dst",
-    edge_layout: str = "persist",
     plan_probe: PlanProbe | None = None,
 ) -> DataFrame:
     """(node, depth) — minimum hop count from ``source`` for every node
     within ``max_depth`` hops, by frontier-expansion BFS.
 
-    The third iterative-graph template next to ``connected_components``
-    (data-dependent convergence) and ``pagerank`` (fixed rounds, zero
-    driver actions): BFS rounds are bounded by ``max_depth``, but the
-    frontier can DRAIN early, so each round's frontier is an EAGER
-    localCheckpoint probed with one cheap ``isEmpty`` — a driver action
+    The second iterative-graph template next to ``connected_components``
+    (data-dependent convergence): BFS rounds are bounded by
+    ``max_depth``, but the frontier can DRAIN early, so each round's
+    frontier is an EAGER localCheckpoint probed with one cheap
+    ``isEmpty`` — a driver action
     per round on an already-materialized bounded frame, not a recompute.
     Per round: one frontier⋈edges equi-join (the |frontier|-proportional
     shuffle BFS owes) + one anti-join against the visited set; both
-    sides are checkpointed so no round re-derives the upstream graph
+    sides are materialized so no round re-derives the upstream graph
     build. At web scale the visited frame is node-bounded and the
     frontier peaks at one BFS level — the classic level-synchronous
     plan (Pregel's BFS shape) in plain DataFrame ops.
 
-    Exact-oracle-expressible (unlike pagerank): min-depth semantics are
+    Exact-oracle-expressible: min-depth semantics are
     a recursive CTE with UNION dedup, so the driver hash gate covers
     the whole iterative loop.
     """
     # Clustered by src — the key every round's frontier⋈edges join uses —
-    # so each round moves only the frontier, not the full edge set.
-    # ("checkpoint" is the A/B control arm for the layout measurement;
-    # production default is the persisted layout, r13+r14 figures.)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if edge_layout == "persist":
-        # distinct rides the layout exchange (see _persist_partitioned).
-        e = _persist_partitioned(e, "src", distinct=True)
-    else:
-        e = e.distinct().localCheckpoint(eager=True)
+    # so each round moves only the frontier, not the full edge set
+    # (r13+r14 layout A/B); distinct rides the layout exchange (see
+    # _persist_partitioned).
+    e = _persist_partitioned(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")), "src", distinct=True
+    )
     spark = edges.sparkSession
     visited = spark.createDataFrame(
         [(int(source), 0)], "node bigint, depth int"

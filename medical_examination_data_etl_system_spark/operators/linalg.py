@@ -1,24 +1,18 @@
 """Distributed exact linear algebra over embedding columns.
 
-Two operators a 100 TB embedding pipeline needs ahead of any modeling:
-
-- ``quantized_gram_matrix``: the d×d Gram (uncentered second-moment)
-  matrix of an ``array<float>`` column, computed EXACTLY by quantizing
-  each component to a fixed-point BIGINT (``round(v * scale)``) and
-  summing int64 products. Floats are quantized JVM-side with the same
+- ``quantize_fixed_point``: each ``array<float>`` component to a
+  fixed-point BIGINT (``round(v * scale)``), JVM-side, with the same
   ``CAST(v AS DOUBLE) * scale → round → BIGINT`` tree an ANSI oracle
-  can mirror, so the result is engine-independent (no float summation
-  order anywhere). Each Arrow batch contributes one ``XᵀX`` partial via
-  a single BLAS-free integer matmul; only d(d+1)/2-row partials cross
-  the shuffle (2 080 rows for d=64 per batch), never vectors — at any
-  corpus size the reduce side is O(d²), not O(rows).
-- ``pca_project``: principal-component projection. The covariance is
-  assembled driver-side from the SAME single-sweep partials (Gram +
-  column sums — d² + d values, fixed-size by construction, a legal
-  driver materialization like the k-means centroids), eigen-solved with
-  numpy (d×d, microseconds), and the top-k component matrix is
-  broadcast back for a map-only Arrow-batched projection. One data
-  sweep for the fit, one for the transform; nothing quadratic in rows.
+  can mirror.
+- ``quantized_gram_matrix``: the d×d Gram (uncentered second-moment)
+  matrix of an ``array<float>`` column, computed EXACTLY by summing
+  int64 products of the quantized components, so the result is
+  engine-independent (no float summation order anywhere). Each Arrow
+  batch contributes one ``XᵀX`` partial via a single BLAS-free integer
+  matmul; only d(d+1)/2-row partials cross the shuffle (2 080 rows for
+  d=64 per batch), never vectors — at any corpus size the reduce side
+  is O(d²), not O(rows). Optional column sums and a row count ride
+  along in the same sweep (mean-centering needs no second scan).
 
 The reference engine (682-line single-process pandas,
 ``/root/reference/db_to_dataframe.py``) has no vector analytics; these
@@ -135,89 +129,3 @@ def quantized_gram_matrix(
     )
 
 
-def pca_components(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    k: int = 4,
-    scale: int = 1_000_000,
-):
-    """Fit: top-``k`` principal axes of the (mean-centered) covariance.
-
-    Returns ``(components: ndarray (d, k), mean: ndarray (d,), explained:
-    ndarray (k,))``. The d²-sized collect is fixed-cost (4 160 rows at
-    d=64) regardless of corpus size — the one legitimate driver
-    materialization in the whole fit.
-    """
-    import numpy as np
-
-    rows = quantized_gram_matrix(df, vec_col, scale, with_col_sums=True).collect()
-    # the (-1, -1) sentinel carries the non-null row count through the
-    # SAME sweep — no separate count() scan. On an empty/all-null input
-    # the sentinel is absent: fall through to the n-too-small error
-    # rather than leaking StopIteration (ADVICE r5).
-    n = next((r.s for r in rows if r.i == -1 and r.j == -1), 0)
-    if n < 2:
-        raise ValueError("pca needs at least 2 rows")
-    d = max(r.i for r in rows) + 1
-    gram = np.zeros((d, d), dtype=np.float64)
-    sums = np.zeros(d, dtype=np.float64)
-    for r in rows:
-        if r.i == -1:
-            continue
-        if r.j == -1:
-            sums[r.i] = r.s
-        else:
-            gram[r.i, r.j] = r.s
-            gram[r.j, r.i] = r.s
-    mean = sums / (n * scale)
-    cov = gram / (scale * scale * n) - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    components = evecs[:, order]
-    # Deterministic sign: make the largest-|.| coordinate positive so the
-    # projection is reproducible across LAPACK builds.
-    for c in range(components.shape[1]):
-        pivot = np.argmax(np.abs(components[:, c]))
-        if components[pivot, c] < 0:
-            components[:, c] = -components[:, c]
-    return components, mean, evals[order]
-
-
-def pca_project(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 4,
-    scale: int = 1_000_000,
-    decimals: int = 6,
-) -> DataFrame:
-    """Transform: ``(id, proj array<double>[k])`` — map-only Arrow
-    projection against the broadcast (d×k) component matrix. Rounded to
-    ``decimals`` so downstream comparisons aren't chasing LAPACK ulps.
-    """
-    components, mean, _ = pca_components(df, vec_col, k, scale)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((components, mean))
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), False),
-            T.StructField("proj", T.ArrayType(T.DoubleType(), False), False),
-        ]
-    )
-
-    src = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("v")
-    )
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        comp, mu = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["v"].to_numpy()).astype(np.float64) - mu
-            p = np.round(x @ comp, decimals)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "proj": list(p)})
-
-    return src.mapInPandas(project, schema=out_schema)

@@ -4,14 +4,21 @@
   The query set is broadcast (small side); the corpus is scanned once,
   map-only, with the dot product computed via higher-order functions
   (JVM-side, no Python). Per-query top-k via window rank.
-- ``lsh_bucketed_topk``: the scale path — sign-random-projection buckets
-  (deterministic hash-derived hyperplanes) shrink the candidate set from
-  |corpus| to |bucket|; exact cosine re-ranks within buckets. Recall<1
-  by construction (probe multiple buckets to trade cost for recall).
+- ``embedding_near_duplicates``: exact all-pairs cosine near-dups by
+  blocked GEMM — the small-scale oracle twin.
+- ``embedding_near_duplicates_srp``: the scale path — sign-random-
+  projection buckets (deterministic hash-derived hyperplanes) shrink
+  the candidate set from |corpus| to |bucket|; the same exact GEMM
+  kernel verifies within buckets. Recall<1 by construction (more
+  tables / probes trade cost for recall).
+- ``kmeans_assign_round1_quantized``, ``kmeans_iter2_quantized``,
+  ``pq_encode_quantized``, ``srp_buckets_quantized``: the k-means /
+  PQ / SRP kernels on int64-quantized vectors, so their outputs are
+  exact-oracle-checkable.
 
-At 100 TB the corpus side stays partitioned; only buckets matching a
-query's bucket are scanned (bucket id is a join key → hash join, no
-cartesian product).
+At 100 TB the corpus side stays partitioned; only vectors sharing a
+bucket are compared (bucket id is a join/grouping key → no cartesian
+product).
 """
 
 from __future__ import annotations
@@ -37,61 +44,6 @@ def l2_norm(v: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType(), False),
-        T.StructField("neighbor_id", T.LongType(), False),
-        T.StructField("cos_sim", T.DoubleType(), True),
-    ]
-)
-
-
-def _grouped_topk_kernel(k: int):
-    """applyInPandas kernel shared by the IVF and LSH re-ranks: one BLAS
-    matmul scores every (query, list-member) pair inside a bucket group
-    (rows side-tagged ``_is_q``), emitting each query's bucket-local
-    top-k. Vectors cross the Arrow boundary once per probe — never as
-    pair-expanded join rows (measured slower than even the interpreted
-    per-pair fold at 10×, the transfer dominates). The list is id-sorted
-    so the stable argsort breaks cosine ties on the smaller neighbor id,
-    matching the exact ranker's ordering."""
-    import numpy as np
-    import pandas as pd
-
-    def _bucket_topk(key, pdf):
-        qs = pdf[pdf["_is_q"]]
-        cs = pdf[~pdf["_is_q"]]
-        if not len(qs) or not len(cs):
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "cos_sim": pd.Series(dtype="float64")}
-            )
-        cs = cs.sort_values("_id")
-        cids = cs["_id"].to_numpy(dtype=np.int64)
-        qids = qs["_id"].to_numpy(dtype=np.int64)
-        cm = np.stack(cs["_v"].to_numpy()).astype(np.float64)
-        qm = np.stack(qs["_v"].to_numpy()).astype(np.float64)
-        cm = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-        qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        cos = qm @ cm.T
-        cos[qids[:, None] == cids[None, :]] = -np.inf  # self-matches
-        take = min(k, cos.shape[1])
-        order = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-        rows = np.repeat(np.arange(len(qids)), take)
-        cols = order.ravel()
-        keep = np.isfinite(cos[rows, cols])
-        return pd.DataFrame(
-            {
-                "query_id": qids[rows[keep]],
-                "neighbor_id": cids[cols[keep]],
-                "cos_sim": cos[rows[keep], cols[keep]],
-            }
-        )
-
-    return _bucket_topk
 
 
 def cosine_topk(
@@ -131,96 +83,6 @@ def cosine_topk(
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF (inverted-file) approximate search — sampled centroids
-# ---------------------------------------------------------------------------
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_centroids: int = 16,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k: assign every vector to its nearest
-    centroid (the inverted lists), probe each query's ``nprobe`` nearest
-    lists, exact-cosine re-rank inside them.
-
-    Centroids are a deterministic hash-sample of the corpus (k-means
-    refinement is an offline improvement, not a structural change). The
-    assignment pass is a single ``mapInPandas`` sweep — a numpy matmul
-    against the broadcast centroid matrix (C is small; cost O(n·C) with
-    BLAS). Candidates per query ≈ nprobe·n/C, so recall trades against
-    cost via nprobe — the standard IVF knob.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # Deterministic centroid sample: the num_centroids lowest xxhash64
-    # ids. Tiny → collected to the driver and closed over.
-    sampled = (
-        corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
-        .orderBy(F.xxhash64(F.col("_cid")))
-        .limit(num_centroids)
-        .collect()
-    )
-    cmat = np.array([list(r["_cv"]) for r in sampled], dtype=np.float64)
-    cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("_id", T.LongType(), False),
-            T.StructField("_v", T.ArrayType(T.FloatType()), True),
-            T.StructField("_bucket", T.IntegerType(), False),
-        ]
-    )
-
-    def _assign_factory(probes: int):
-        def _assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.array([list(v) for v in pdf["_v"]], dtype=np.float64)
-                vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-                sims = vm @ cmat.T
-                top = np.argsort(-sims, axis=1)[:, :probes]
-                out = pdf.loc[pdf.index.repeat(probes)].reset_index(drop=True)
-                out["_bucket"] = top.ravel().astype("int32")
-                yield out
-
-        return _assign
-
-    base = lambda df: df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))  # noqa: E731
-    c_assigned = base(corpus).mapInPandas(_assign_factory(1), schema=assign_schema)
-    q_assigned = base(queries).mapInPandas(_assign_factory(nprobe), schema=assign_schema)
-
-    # Per-bucket GEMM re-rank: corpus and query rows are UNIONed
-    # (side-tagged) and grouped by bucket, so each vector crosses the
-    # Arrow boundary ONCE per probe — a pair-expanded join would ship
-    # |queries|·nprobe·n/C full vector PAIRS (measured 2× slower than
-    # even the interpreted per-pair fold at 10×). Inside a bucket one
-    # BLAS matmul scores every (query, list-member) pair and emits only
-    # each query's bucket-local top-k (sorted by id first, so stable
-    # argsort breaks cosine ties on the smaller neighbor id); the global
-    # top-k over ≤ nprobe·k bucket-local rows is a cheap window.
-    tagged = c_assigned.withColumn("_is_q", F.lit(False)).unionByName(
-        q_assigned.withColumn("_is_q", F.lit(True))
-    )
-    bucket_topk = tagged.groupBy("_bucket").applyInPandas(
-        _grouped_topk_kernel(k), schema=_TOPK_SCHEMA
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        bucket_topk.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rank")
         .orderBy("query_id", "rank")
@@ -1553,177 +1415,9 @@ def embedding_near_duplicates_srp(
     return _finalize_pairs(emb, cand, threshold, id_col, vec_col).orderBy("id_a", "id_b")
 
 
-def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 4,
-    dim: int = 64,
-    num_tables: int = 4,
-    probes: int = 0,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's SRP bucket in any
-    of ``num_tables`` hash tables, re-ranked by the shared per-bucket
-    GEMM kernel (see ``_grouped_topk_kernel``). Returns the same shape
-    as ``cosine_topk``. A neighbor found in several tables yields
-    identical bucket-local rows — deduped before the global ranking so
-    it occupies one top-k slot.
-
-    ``probes`` is QUERY-SIDE multi-probe (the classic asymmetric form:
-    Lv et al., VLDB'07): each query row additionally searches its T
-    lowest-|margin| single-bit-flip buckets per table, so recall rises
-    at (1+T)× QUERY fan-out only — the corpus index is untouched, which
-    is the whole point at 10⁹ corpus rows vs a handful of queries.
-    Monotone: probes only add buckets searched, so the probed result's
-    per-query recall ≥ the probe-less one (pinned in tests)."""
-    c = with_srp_buckets(corpus, id_col, vec_col, num_planes, dim, num_tables=num_tables)
-    q = with_srp_buckets(
-        queries, id_col, vec_col, num_planes, dim, num_tables=num_tables, probes=probes
-    )
-    tagged = c.withColumn("_is_q", F.lit(False)).unionByName(
-        q.withColumn("_is_q", F.lit(True))
-    )
-    bucket_topk = (
-        tagged.groupBy("_table", "_bucket")
-        .applyInPandas(_grouped_topk_kernel(k), schema=_TOPK_SCHEMA)
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        bucket_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # k-means (Lloyd's) — centroid clustering on the embedding column
 # ---------------------------------------------------------------------------
-
-
-def kmeans_assign(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means over ``vec_col``: returns ``(id, cluster,
-    sq_dist)`` assignments after ``n_iter`` rounds.
-
-    Shape per round: ONE ``mapInPandas`` pass assigns every vector to
-    its nearest centroid (O(n·k) BLAS against the broadcast k×d
-    matrix — the IVF assignment kernel's cost model) AND reduces it to
-    k×d partial (sum, count) rows per partition in the same sweep —
-    no join-back, no per-dimension explode; the shuffle moves
-    partitions×k×d partials regardless of n (a posexplode update was
-    measured 1000× more shuffle rows at the 100× scale check). The
-    k×d centroid matrix (a few KB) collects to the driver between
-    rounds — the same scalar-state discipline as the CC convergence
-    digest; vectors themselves never collect.
-
-    Deterministic throughout: init is the k lowest-xxhash64 ids (the
-    IVF sampling discipline), assignment ties break on the lower
-    cluster index (stable argmin), and the trajectory is reproducible
-    run-to-run — tests pin exact-recovery on separated clusters and
-    non-increasing inertia over rounds. Iterative + float folding →
-    rows-only at the driver.
-    """
-    import numpy as np
-    import pandas as pd
-
-    sampled = (
-        vectors.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
-        .orderBy(F.xxhash64(F.col("_cid")))
-        .limit(k)
-        .collect()
-    )
-    cmat = np.array([list(r["_cv"]) for r in sampled], dtype=np.float64)
-
-    assign_schema = T.StructType(
-        [
-            T.StructField("_id", T.LongType(), False),
-            T.StructField("_cluster", T.IntegerType(), False),
-            T.StructField("_sq", T.DoubleType(), True),
-        ]
-    )
-    base = vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-
-    def _assign_with(cm: "np.ndarray"):
-        c_sq = (cm * cm).sum(axis=1)
-
-        def _assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.array([list(v) for v in pdf["_v"]], dtype=np.float64)
-                # argmin ||v-c||² = argmin(c·c − 2 v·c); stable argmin
-                # breaks ties on the lower cluster index
-                d = c_sq[None, :] - 2.0 * (vm @ cm.T)
-                cl = np.argmin(d, axis=1)
-                sq = d[np.arange(len(cl)), cl] + (vm * vm).sum(axis=1)
-                yield pd.DataFrame(
-                    {"_id": pdf["_id"].to_numpy(dtype=np.int64),
-                     "_cluster": cl.astype("int32"),
-                     "_sq": np.maximum(sq, 0.0)}
-                )
-
-        return _assign
-
-    partial_schema = T.StructType(
-        [
-            T.StructField("_cluster", T.IntegerType(), False),
-            T.StructField("_dim", T.IntegerType(), False),
-            T.StructField("_s", T.DoubleType(), True),
-            T.StructField("_n", T.LongType(), False),
-        ]
-    )
-
-    def _partials_with(cm: "np.ndarray"):
-        c_sq = (cm * cm).sum(axis=1)
-
-        def _partials(batches):
-            k_, d_ = cm.shape
-            sums = np.zeros((k_, d_))
-            counts = np.zeros(k_, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.array([list(v) for v in pdf["_v"]], dtype=np.float64)
-                cl = np.argmin(c_sq[None, :] - 2.0 * (vm @ cm.T), axis=1)
-                np.add.at(sums, cl, vm)
-                counts += np.bincount(cl, minlength=k_)
-            nz = counts > 0
-            if nz.any():
-                ks, ds = np.nonzero(nz[:, None] & np.ones((1, d_), dtype=bool))
-                yield pd.DataFrame(
-                    {"_cluster": ks.astype("int32"), "_dim": ds.astype("int32"),
-                     "_s": sums[ks, ds], "_n": counts[ks]}
-                )
-
-        return _partials
-
-    for _ in range(n_iter):
-        means = (
-            base.mapInPandas(_partials_with(cmat), schema=partial_schema)
-            .groupBy("_cluster", "_dim")
-            .agg((F.sum("_s") / F.sum("_n")).alias("_m"))
-            .collect()
-        )
-        new_c = cmat.copy()
-        for r in means:
-            new_c[r["_cluster"], r["_dim"]] = r["_m"]
-        cmat = new_c
-
-    final = base.mapInPandas(_assign_with(cmat), schema=assign_schema)
-    return final.select(
-        F.col("_id").alias(id_col),
-        F.col("_cluster").alias("cluster"),
-        F.col("_sq").alias("sq_dist"),
-    )
 
 
 def kmeans_assign_round1_quantized(
@@ -1739,12 +1433,10 @@ def kmeans_assign_round1_quantized(
     quantized to int64 at ``scale`` (the ``quantized_gram_matrix``
     discipline), distances computed in integer arithmetic
     (v·v − 2·v·c + c·c — exact, no float summation order anywhere),
-    argmin ties broken on the lower cluster index. Same distributed
-    shape as :func:`kmeans_assign`'s hot path — one map-only
+    argmin ties broken on the lower cluster index. One map-only
     ``mapInPandas`` BLAS pass against the broadcast k×d matrix, no
-    shuffle at all before the consumer — so a driver hash row on this
-    variant certifies the BLAS-assignment plumbing that the iterative
-    float loop (rows-only by construction) runs on.
+    shuffle at all before the consumer, so a driver hash row
+    certifies the BLAS-assignment plumbing of a Lloyd round.
 
     int64 bounds: |x| ≤ 2^12 after quantization at 1e6 needs
     d·(2·scale·2^12)² ≤ 2^63 — holds through d ≈ 10⁴ for unit-norm

@@ -93,129 +93,6 @@ def heavy_hitters(
 # ---------------------------------------------------------------------------
 
 
-def _unit_hash(col) -> "F.Column":
-    """xxhash64 mapped to a uniform double in [0, 1): the KMV sample
-    space. The affine map keeps relative order, so 'k smallest hashes'
-    is the same set before and after."""
-    return (F.xxhash64(col) / F.lit(float(2**64))) + F.lit(0.5)
-
-
-def kmv_sketches(
-    df: DataFrame, group_col: str, key_col: str, k: int = 256
-) -> DataFrame:
-    """Per-group KMV sketch rows ``(group, h, rnk)``: the ``k`` smallest
-    DISTINCT unit-interval hashes of ``key_col``.
-
-    Built from pure DataFrame ops (distinct → window rank ≤ k), so the
-    sketch build is one distinct shuffle + one group-partitioned rank —
-    no UDF, no driver state. Each sketch is ≤ k rows; every downstream
-    estimate (distinct count, union, intersection, Jaccard) works on
-    these tiny frames, which is the point: set algebra over 10¹¹-row
-    segments becomes arithmetic over k-row sketches.
-
-    Estimator (Beyer et al. 2007): with θ = k-th smallest hash,
-    ``ndv ≈ (k − 1)/θ``; union sketches merge by re-taking the k
-    smallest of the concatenation (mergeable without rescan).
-    """
-    from pyspark.sql import Window
-
-    hashed = (
-        df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("key"))
-        .distinct()
-        .select("grp", _unit_hash(F.col("key")).alias("h"))
-        .distinct()
-    )
-    w = Window.partitionBy("grp").orderBy("h")
-    return (
-        hashed.select("grp", "h", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def kmv_overlap_estimates(
-    df: DataFrame, group_col: str, key_col: str, k: int = 256
-) -> DataFrame:
-    """Pairwise set-overlap estimates between ALL groups from their KMV
-    sketches: (grp_a, grp_b, est_a, est_b, est_union, est_jaccard,
-    est_intersection). The pair work is O(groups² × k) on sketch rows —
-    constant at any corpus size; only the sketch build touches data.
-
-    Jaccard uses the unbiased KMV form: among the k smallest hashes of
-    the UNION sketch, the fraction present in BOTH input sketches;
-    intersection = jaccard × est_union (inclusion-exclusion on
-    estimates drifts negative at low overlap; this form stays in
-    range). theta of a (truncated) sketch is simply its max hash.
-    """
-    from pyspark.sql import Window
-
-    from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
-
-    sk = persist_tracked(kmv_sketches(df, group_col, key_col, k).select("grp", "h"))
-    groups_a = sk.select(F.col("grp").alias("grp_a")).distinct()
-    groups_b = sk.select(F.col("grp").alias("grp_b")).distinct()
-    # every sketch row replicated to each counterpart group (tiny ×
-    # tiny — broadcast nested loop, never a cartesian over data rows)
-    side_a = sk.select(F.col("grp").alias("grp_a"), "h").crossJoin(F.broadcast(groups_b))
-    side_b = sk.select(F.col("grp").alias("grp_b"), "h").crossJoin(F.broadcast(groups_a))
-    pairs = (
-        side_a.select("grp_a", "grp_b", "h")
-        .unionByName(side_b.select("grp_a", "grp_b", "h"))
-        .filter(F.col("grp_a") < F.col("grp_b"))
-        .dropDuplicates(["grp_a", "grp_b", "h"])
-    )
-    w = Window.partitionBy("grp_a", "grp_b").orderBy("h")
-    union_k = pairs.select(
-        "grp_a", "grp_b", "h", F.row_number().over(w).alias("rnk")
-    ).filter(F.col("rnk") <= k)
-    in_a = sk.select(F.col("grp").alias("grp_a"), "h", F.lit(1).alias("in_a"))
-    in_b = sk.select(F.col("grp").alias("grp_b"), "h", F.lit(1).alias("in_b"))
-    marked = (
-        union_k.join(in_a, ["grp_a", "h"], "left")
-        .join(in_b, ["grp_b", "h"], "left")
-        .fillna(0, subset=["in_a", "in_b"])
-    )
-    per_pair = marked.groupBy("grp_a", "grp_b").agg(
-        F.count(F.lit(1)).alias("ku"),
-        F.max("h").alias("theta_u"),
-        F.sum(F.col("in_a") * F.col("in_b")).alias("n_both"),
-    )
-    sizes = (
-        sk.groupBy("grp")
-        .agg(F.count(F.lit(1)).alias("kk"), F.max("h").alias("theta"))
-        .select(
-            "grp",
-            F.when(F.col("kk") < k, F.col("kk").cast("double"))
-            .otherwise((F.col("kk") - 1) / F.col("theta"))
-            .alias("est"),
-        )
-    )
-    return (
-        per_pair.join(
-            sizes.select(F.col("grp").alias("grp_a"), F.col("est").alias("est_a")),
-            "grp_a",
-        )
-        .join(
-            sizes.select(F.col("grp").alias("grp_b"), F.col("est").alias("est_b")),
-            "grp_b",
-        )
-        .select(
-            "grp_a",
-            "grp_b",
-            F.round("est_a", 1).alias("est_a"),
-            F.round("est_b", 1).alias("est_b"),
-            F.round(
-                F.when(F.col("ku") < k, F.col("ku").cast("double"))
-                .otherwise((F.col("ku") - 1) / F.col("theta_u")),
-                1,
-            ).alias("est_union"),
-            F.round(F.col("n_both") / F.col("ku"), 4).alias("est_jaccard"),
-        )
-        .withColumn(
-            "est_intersection", F.round(F.col("est_jaccard") * F.col("est_union"), 1)
-        )
-    )
-
-
 def _md5_hash60(col) -> "F.Column":
     """First 15 hex chars of md5(key) as a 60-bit integer — the
     engine-agnostic KMV sample space (the ``_cms_bucket`` discipline
@@ -227,11 +104,11 @@ def _md5_hash60(col) -> "F.Column":
 def kmv_overlap_exact(
     df: DataFrame, group_col: str, key_col: str, k: int = 256
 ) -> DataFrame:
-    """:func:`kmv_overlap_estimates` made exact-hash-checkable: the
-    same sketch build and pairwise set algebra, but over md5-derived
-    60-bit INTEGER hashes (deterministic in any engine, unlike the
-    xxhash64 unit-interval space) with integer outputs — ``ku``,
-    ``theta_u``, ``n_both`` — plus estimates that are each ONE float
+    """Pairwise set-overlap estimates between ALL groups from their KMV
+    (k-minimum-values) sketches, exact-hash-checkable: the sketches are
+    built over md5-derived 60-bit INTEGER hashes (deterministic in any
+    engine, unlike an xxhash64 sample space) with integer outputs —
+    ``ku``, ``theta_u``, ``n_both`` — plus estimates that are each ONE float
     division of integers rounded once (no float folding anywhere), so
     a DuckDB oracle reproduces every column bit-for-bit. Same scale
     shape: one distinct shuffle + one group rank builds ≤ k-row

@@ -9,7 +9,6 @@ from medical_examination_data_etl_system_spark.pipeline.ingest import records_to
 from medical_examination_data_etl_system_spark.pipeline.dims import fallback_dims
 from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.clean import postprocess_multilang
-from medical_examination_data_etl_system_spark.pipeline.render import render_reports
 from medical_examination_data_etl_system_spark.pipeline.run import process_records
 
 __all__ = [
@@ -18,6 +17,5 @@ __all__ = [
     "fallback_dims",
     "enrich",
     "postprocess_multilang",
-    "render_reports",
     "process_records",
 ]

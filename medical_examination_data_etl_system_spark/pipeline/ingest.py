@@ -68,10 +68,11 @@ def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
     raw = spark.read.schema(RECORD_SCHEMA).json(path)
     from pyspark.sql import Window as W
 
-    # The unpartitioned window funnels record HEADERS (not findings)
-    # through one task — bounded by the ord bit-layout's 2^23-records-
-    # per-batch cap, so this is a small frame by construction; the heavy
-    # exploded data stays fully distributed.
+    # The unpartitioned window funnels every WHOLE nested record (its
+    # ITEMS and FINDINGS arrays ride along) through one task. The ord
+    # bit layout caps a batch at 2^23 records, but not the bytes per
+    # record, so this single-task stage grows with the batch; only the
+    # data exploded after it is distributed.
     return raw.withColumn(
         "_rec_idx",
         F.dense_rank().over(W.orderBy("RECORD_ID")).cast("long") - 1,

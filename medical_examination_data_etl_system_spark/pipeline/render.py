@@ -8,13 +8,11 @@ Parity with reference text_processing.py:33-141, Spark-first:
 - The rewrite lookup (reference :76 + :124 ``summary_translated.get``)
   is a broadcast left join against the persisted distinct-summary
   rewrite table (see ``pipeline.llm``) — not a driver-side dict.
-- U2 (the renderer, reference :66-126) is genuinely row-procedural:
-  order-preserving nested grouping GROUP → SUMMARY [→ COMMENT] with
-  first-seen block regrouping. v1 implements it as a grouped-map
-  ``applyInPandas`` per RECORD_ID — one Arrow batch per record group,
-  pure-Python tree assembly inside. The record is the natural
-  parallelism unit at scale (records are small; skew is bounded by
-  record size, and AQE splits skewed shuffle partitions).
+- U2 (the renderer, reference :66-126) is row-procedural in the
+  reference: order-preserving nested grouping GROUP → SUMMARY
+  [→ COMMENT] with first-seen block regrouping. ``render_reports_sql``
+  expresses the same tree assembly as windows + aggregation +
+  higher-order functions, so no Python runs in the render path.
 
 Indentation contract (reference :69-73,116-124):
 GROUP at col 0, item line at 4 spaces, comment line at 8, summary line at
@@ -23,12 +21,8 @@ GROUP at col 0, item line at 4 spaces, comment line at 8, summary line at
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from medical_examination_data_etl_system_spark.schemas import LANGU_MAP
 
@@ -56,139 +50,8 @@ def with_generic_columns(df: DataFrame) -> DataFrame:
     return df.withColumns({dst: _lang_pick(src) for dst, src in _GENERIC_SRC.items()})
 
 
-# ---------------------------------------------------------------------------
-# Per-record tree assembly (pure Python, runs inside applyInPandas)
-# ---------------------------------------------------------------------------
-
-
-def _groups_in_encounter_order(rows: list[dict], key: str) -> list[tuple[str, list[dict]]]:
-    """All rows per distinct key value; values in first-occurrence order.
-
-    Semantics of pandas ``groupby(key, sort=False)`` iteration
-    (reference text_processing.py:80,84,87): groups are keyed by value
-    (non-adjacent rows with the same value unify), ordered by the key's
-    first appearance.
-    """
-    acc: dict[str, list[dict]] = {}
-    for r in rows:
-        acc.setdefault(r[key], []).append(r)
-    return list(acc.items())
-
-
-def _first_seen_item_names(rows: Iterable[dict]) -> list[str]:
-    """First-occurrence item-name dedup by ITEM_CODE (reference :129-141)."""
-    seen: set[str] = set()
-    names: list[str] = []
-    for r in rows:
-        code = str(r["ITEM_CODE"]).strip()
-        if code not in seen:
-            seen.add(code)
-            names.append(str(r["ITEM_NAME"]).strip())
-    return names
-
-
-def _dedup_keep_first(values: Iterable[str]) -> list[str]:
-    seen: set[str] = set()
-    out: list[str] = []
-    for v in values:
-        if v not in seen:
-            seen.add(v)
-            out.append(v)
-    return out
-
-
-def render_record(lang_no: str, rows: list[dict]) -> str:
-    """Assemble one record's indented report (reference :66-126).
-
-    ``rows`` must be in encounter order (sorted by ``ord``) and carry
-    GROUP, ITEM_CODE, ITEM_NAME, COMMENT_G, SUMMARY, REWRITTEN.
-    """
-    default_text = LANGU_MAP.get(str(lang_no).strip(), "")
-    lines: list[str] = []
-
-    for group_val, group_rows in _groups_in_encounter_order(rows, "GROUP"):
-        lines.append(str(group_val).strip())
-
-        # Build summary blocks (reference :83-101)
-        blocks: list[dict] = []
-        for summary_val, srows in _groups_in_encounter_order(group_rows, "SUMMARY"):
-            stripped = str(summary_val).strip()
-            rewritten = str(srows[0]["REWRITTEN"]).strip()
-            if summary_val == default_text:
-                # Default-summary branch: one block per distinct comment
-                for comment_val, crows in _groups_in_encounter_order(srows, "COMMENT_G"):
-                    blocks.append(
-                        {
-                            "items": _first_seen_item_names(crows),
-                            "comments": [str(comment_val).strip()],
-                            "summary": stripped,
-                            "rewritten": rewritten,
-                        }
-                    )
-            else:
-                blocks.append(
-                    {
-                        "items": _first_seen_item_names(srows),
-                        "comments": _dedup_keep_first(str(r["COMMENT_G"]).strip() for r in srows),
-                        "summary": stripped,
-                        "rewritten": rewritten,
-                    }
-                )
-
-        # First-seen block regrouping (reference :103-110): stable-sort
-        # blocks by (first index at which their items-tuple appeared,
-        # original index).
-        first_seen: dict[tuple, int] = {}
-        for i, b in enumerate(blocks):
-            first_seen.setdefault(tuple(b["items"]), i)
-        ordered = sorted(enumerate(blocks), key=lambda t: (first_seen[tuple(t[1]["items"])], t[0]))
-
-        # Emission (reference :112-124): item line only when the items
-        # tuple changes; comment line when present; summary line with a
-        # trailing newline.
-        last_key: tuple | None = None
-        for _, b in ordered:
-            key = tuple(b["items"])
-            if key != last_key:
-                lines.append(f"    {'、'.join(b['items'])}")
-                last_key = key
-            if b["comments"]:
-                lines.append(f"        {'、'.join(b['comments'])}")
-            if b["summary"]:
-                lines.append(f"            {b['rewritten']}\n")
-
-    return "\n".join(lines)
-
-
-_RENDER_SCHEMA = T.StructType(
-    [
-        T.StructField("record_id", T.StringType(), True),
-        T.StructField("report", T.StringType(), True),
-        T.StructField("request", T.StringType(), True),
-        T.StructField("rec_ord", T.LongType(), True),
-    ]
-)
-
-
-def _render_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("ord")
-    lang_no = str(pdf["LANG_NO"].iloc[0]).strip()
-    rows = pdf[["GROUP", "ITEM_CODE", "ITEM_NAME", "COMMENT_G", "SUMMARY", "REWRITTEN"]].to_dict(
-        "records"
-    )
-    report = render_record(lang_no, rows)
-    return pd.DataFrame(
-        {
-            "record_id": [str(pdf["RECORD_ID"].iloc[0])],
-            "report": [report],
-            "request": [pdf["request"].iloc[0]],
-            "rec_ord": [int(pdf["rec_ord"].iloc[0])],
-        }
-    )
-
-
 def _prepare_render_rows(cleaned: DataFrame, rewrites: DataFrame) -> DataFrame:
-    """Shared renderer input: generic per-language columns + REWRITTEN."""
+    """Renderer input: generic per-language columns + REWRITTEN."""
     df = with_generic_columns(cleaned)
     df = df.withColumn("_summary_key", F.trim(F.col("SUMMARY")))
     rw = rewrites.select(
@@ -221,26 +84,13 @@ def _prepare_render_rows(cleaned: DataFrame, rewrites: DataFrame) -> DataFrame:
     )
 
 
-def render_reports(cleaned: DataFrame, rewrites: DataFrame) -> DataFrame:
-    """Grouped-map renderer (v1): one Arrow batch per record, Python tree
-    assembly inside (reference logic near-verbatim).
-
-    ``rewrites`` is the persisted output of
-    ``llm.rewrite_distinct_summaries`` keyed by (LANG_NO, SUMMARY).
-    """
-    narrow = _prepare_render_rows(cleaned, rewrites)
-    return narrow.groupBy("RECORD_ID").applyInPandas(_render_group, schema=_RENDER_SCHEMA)
-
-
 def render_reports_sql(cleaned: DataFrame, rewrites: DataFrame) -> DataFrame:
-    """Pure-Spark renderer (v2): the same tree assembly as
-    ``render_record``, expressed as windows + aggregation + higher-order
-    functions — no Python in the render path.
-
-    Why it exists (100 TB posture): v1 funnels each record through an
-    Arrow batch and a Python callback; a skewed giant record serializes
-    on one Python worker. Here every step is JVM-side and the only
-    per-record state is the collected block list.
+    """Pure-Spark renderer: the reference's per-record tree assembly
+    (text_processing.py:66-126) expressed as windows + aggregation +
+    higher-order functions — no Python in the render path. Every step
+    is JVM-side and the only per-record state is the collected block
+    list, so a skewed giant record never serializes on one Python
+    worker.
 
     Semantics mapping (reference text_processing.py:66-126):
     - encounter-order value grouping (GROUP / SUMMARY / COMMENT) →
@@ -257,8 +107,6 @@ def render_reports_sql(cleaned: DataFrame, rewrites: DataFrame) -> DataFrame:
     - line assembly → ``concat_ws('\\n', ...)`` (skips NULL parts) per
       block, ``array_join(sort_array(collect_list(...)))`` per record.
     """
-    from medical_examination_data_etl_system_spark.schemas import LANGU_MAP
-
     rows = _prepare_render_rows(cleaned, rewrites)
     # One COARSE exchange for the whole renderer (r14, guide §2.4):
     # every window/groupBy below is keyed by a superset of

@@ -13,7 +13,6 @@ from datetime import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.observability import timed_stage
 from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
@@ -23,7 +22,6 @@ from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
 from medical_examination_data_etl_system_spark.pipeline.llm import rewrite_distinct_summaries
 from medical_examination_data_etl_system_spark.pipeline.render import (
-    render_reports,
     render_reports_sql,
     with_generic_columns,
 )
@@ -35,7 +33,6 @@ def process_records(
     dims: dict[str, DataFrame] | None = None,
     output_dir: str | None = None,
     llm_mode: str = "azure",
-    renderer: str = "sql",
 ) -> DataFrame:
     """records → (record_id, report, request), ordered by batch position.
 
@@ -56,23 +53,15 @@ def process_records(
             dims = resolve_dims(spark, flat)
     with timed_stage("enrich"):
         enriched = enrich(flat, dims)
-    return reports_from_fact(
-        enriched, output_dir=output_dir, llm_mode=llm_mode, renderer=renderer
-    )
+    return reports_from_fact(enriched, output_dir=output_dir, llm_mode=llm_mode)
 
 
 def reports_from_fact(
     fact: DataFrame,
     output_dir: str | None = None,
     llm_mode: str = "azure",
-    renderer: str = "sql",
 ) -> DataFrame:
-    """E3 parity: any SUBSET ∪ {ord, request} fact frame → reports.
-
-    ``renderer``: "sql" (default) = pure-Spark windows/HOF renderer;
-    "python" = grouped-map applyInPandas renderer. Byte-identical
-    output — both run against the same goldens.
-    """
+    """E3 parity: any SUBSET ∪ {ord, request} fact frame → reports."""
     with timed_stage("clean"):
         # Persisted barrier (r13): `cleaned` has two consumers — the
         # distinct-summary rewrite branch and the renderer (three with
@@ -91,8 +80,7 @@ def reports_from_fact(
         generic = with_generic_columns(cleaned)
         rewrites = rewrite_distinct_summaries(generic, mode=llm_mode)
     with timed_stage("render"):
-        render = render_reports_sql if renderer == "sql" else render_reports
-        reports = render(cleaned, rewrites).orderBy("rec_ord").drop("rec_ord")
+        reports = render_reports_sql(cleaned, rewrites).orderBy("rec_ord").drop("rec_ord")
 
     if output_dir:
         with timed_stage("csv_checkpoint_text_processed"):

@@ -16,13 +16,12 @@ def records_from_documents(docs: DataFrame, max_records: int | None = None) -> l
 
     record r ← docs with doc_id // 5 == r; items split doc ids by parity.
     LANG_NO cycles 1-4 by record index; comments are document texts.
+    ``max_records=None`` uses every document.
     """
-    rows = (
-        docs.select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit((max_records * 5) if max_records else 1 << 31)
-        .collect()
-    )
+    ordered = docs.select("doc_id", "text").orderBy("doc_id")
+    if max_records is not None:
+        ordered = ordered.limit(max_records * 5)
+    rows = ordered.collect()
     records: dict[int, dict] = {}
     for row in rows:
         rid = row["doc_id"] // 5

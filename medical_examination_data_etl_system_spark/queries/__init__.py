@@ -128,9 +128,6 @@ def table_rowcount(spark: SparkSession, sf_dir: str, table: str) -> int | None:
 # cut displaced or never listed, then r09-stale rows in name order (the
 # r09 tail rolls to r15). Every windowed name is hash-green in the
 # local replica before commit (scripts/parity_subset.py).
-# Retired rows-only originals (VERDICT r8 #2) are in RETIRED below —
-# out of the driver/bench registry, still importable and pytest-smoked
-# (tests/test_retired.py).
 WINDOW_SIZE = 50
 
 _WINDOW_PLAN: list[tuple[str, str]] = [
@@ -261,53 +258,6 @@ if _restr and max(_restr) >= WINDOW_SIZE:
     )
 
 
-# Retired rows-only originals (VERDICT r8 #2, executing the written
-# retirement policy in SURVEY.md §2b): each is the production variant of
-# a driver-green exact-oracle twin (X137-X148) that certifies the same
-# distributed shape with an exact DuckDB hash, so re-benching the
-# rows-only original every round buys no new evidence. They leave the
-# driver/bench registry but stay fully implemented, importable through
-# retired_queries(), and smoke-run per rotation-equivalent by
-# tests/test_retired.py (rows>0 + stable schema at sf0.001) plus their
-# pre-existing semantic pins (recall/property tests).
-#   original -> certifying exact twin
-#   docs_near_dup_minhash   -> docs_minhash_md5_exact   (X147)
-#   docs_near_dup_simhash   -> docs_simhash_md5_exact   (X148)
-#   emb_ivf_topk            -> emb_ivf_topk_exact       (X140)
-#   emb_lsh_topk            -> emb_srp_topk_exact       (X141)
-#   graph_pagerank_parts    -> graph_pagerank_int3      (X142)
-#   emb_kmeans_clusters     -> emb_kmeans_iter2_exact   (X143/X137)
-#   emb_pca_project         -> emb_power_iteration_exact (X144)
-#   agg_kmv_overlap         -> agg_kmv_overlap_exact    (X145)
-#   agg_hll_rollup          -> agg_hll_md5_rollup_exact (X146)
-RETIRED = frozenset({
-    "docs_near_dup_minhash",
-    "docs_near_dup_simhash",
-    "emb_ivf_topk",
-    "emb_lsh_topk",
-    "graph_pagerank_parts",
-    "emb_kmeans_clusters",
-    "emb_pca_project",
-    "agg_kmv_overlap",
-    "agg_hll_rollup",
-})
-
-
-def retired_queries() -> dict[str, QueryDef]:
-    """The retired rows-only originals (see RETIRED above): implemented,
-    tested, callable — just no longer part of the driver/bench surface."""
-    from medical_examination_data_etl_system_spark.queries import analytics, datapipe, relational
-
-    out: dict[str, QueryDef] = {}
-    for mod in (datapipe, relational, analytics):
-        for name in RETIRED & mod.QUERIES.keys():
-            out[name] = mod.QUERIES[name]
-    missing = RETIRED - out.keys()
-    if missing:
-        raise ValueError(f"RETIRED names not found in their modules: {missing}")
-    return out
-
-
 def all_queries() -> dict[str, QueryDef]:
     from medical_examination_data_etl_system_spark.queries import (
         analytics,
@@ -330,11 +280,6 @@ def all_queries() -> dict[str, QueryDef]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(mod.QUERIES)
-    absent = RETIRED - merged.keys()
-    if absent:
-        raise ValueError(f"RETIRED names not in any module registry: {absent}")
-    for name in RETIRED:
-        merged.pop(name)
     missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in merged]
     if missing:
         # A typo or a rename here would silently demote the query out of

@@ -196,42 +196,6 @@ ORDER BY from_type, to_type
 """
 
 
-def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality over the co-purchase part graph (parts
-    sharing an order are linked, both directions): top-20 parts.
-    Edge build is one self-join on the order key — pair count per
-    order is quadratic in order SIZE, which TPC-H bounds at 7 lines,
-    so edges stay linear in lineitem. Iterative float folding →
-    rows-only at the driver; values pinned vs NumPy in tests."""
-    from pyspark.sql import Window
-
-    from medical_examination_data_etl_system_spark.operators.clustering import pagerank
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
-    ranks = pagerank(edges, n_iter=10)
-    # Top-20 via orderBy().limit() → TakeOrderedAndProject (per-partition
-    # heap + driver merge), NOT an unpartitioned row_number window that
-    # would funnel every node's rank through one task. The row_number
-    # that derives ``rnk`` runs AFTER the limit, over 20 rows.
-    top = ranks.orderBy(F.desc("rank"), F.asc("node")).limit(20)
-    w = Window.orderBy(F.desc("rank"), F.asc("node"))
-    return (
-        top.withColumn("rnk", F.row_number().over(w))
-        .select(F.col("node").alias("l_partkey"), F.round("rank", 6).alias("rank"), "rnk")
-        .orderBy("rnk")
-    )
-
-
 def graph_pagerank_int3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PageRank power-iteration loop under a FULL exact oracle —
     the chip-the-rows-only move (docs_semantic_dedup → CC,
@@ -244,23 +208,21 @@ def graph_pagerank_int3(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB (Spark ``div`` and DuckDB ``//`` both truncate toward
     zero). The graph is the DIRECTED co-purchase graph (low part key →
     high part key within an order), so sink nodes EXIST and the
-    dangling-mass path is exercised, unlike the symmetric float
-    variant where it is vacuous.
+    dangling-mass path is exercised (on a symmetric graph it would be
+    vacuous).
 
-    Same loop hygiene as the production float pagerank
-    (operators/clustering.pagerank): edge set eager-checkpointed once,
-    per-round dangling mass a 1-row broadcast aggregate (zero in-loop
-    driver actions), each round's rank frame a lazy localCheckpoint.
-    At 100 TB the per-round cost is one |edges| equi-join shuffle —
-    identical physical shape to the float path this row certifies."""
+    Loop hygiene: edge set eager-checkpointed once, per-round dangling
+    mass a 1-row broadcast aggregate (zero in-loop driver actions),
+    each round's rank frame a lazy localCheckpoint. At 100 TB the
+    per-round cost is one |edges| equi-join shuffle."""
     BASE = 1_000_000_000_000
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
-    # Degrees ride WITH the edges (clustering.pagerank's discipline):
-    # the out-degree is attached by one window over the single edge-
-    # build pass, so the expensive self-join materializes exactly once
-    # and each round is ONE ranks⋈edges equi-join — no per-round
-    # degree groupBy or second copy of the edge set.
+    # Degrees ride WITH the edges: the out-degree is attached by one
+    # window over the single edge-build pass, so the expensive self-join
+    # materializes exactly once and each round is ONE ranks⋈edges
+    # equi-join — no per-round degree groupBy or second copy of the
+    # edge set.
     # repartition BEFORE distinct (r14): hashpartitioning(src)
     # satisfies both the dedup's (src, dst) clustering and the degree
     # window, so the edge build pays ONE exchange instead of two
@@ -652,8 +614,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
 """
 
 
-
-
 def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path mining: the 15 most common 3-step event-type paths across
     user timelines (two stacked leads over one (user, ts, event_id)
@@ -777,7 +737,6 @@ FROM (SELECT *, row_number() OVER (ORDER BY day DESC) AS rn FROM scored)
 WHERE rn <= 60
 ORDER BY day
 """
-
 
 
 def events_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4251,7 +4210,6 @@ QUERIES = {
     "events_transition_matrix": QueryDef(events_transition_matrix, TRANSITION_SQL),
     "events_retention_cohorts": QueryDef(events_retention_cohorts, RETENTION_SQL),
     "events_gap_fill_hourly": QueryDef(events_gap_fill_hourly, GAP_FILL_SQL),
-    "graph_pagerank_parts": QueryDef(graph_pagerank_parts, None),
     "graph_pagerank_int3": QueryDef(graph_pagerank_int3, PAGERANK_INT3_SQL),
     "events_cumulative_distinct": QueryDef(events_cumulative_distinct, CUMULATIVE_DISTINCT_SQL),
     "events_ewma_smoothing": QueryDef(events_ewma_smoothing, EWMA_SQL),

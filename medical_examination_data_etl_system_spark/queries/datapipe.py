@@ -208,12 +208,6 @@ ORDER BY source
 """
 
 
-def docs_near_dup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs (threshold 0.5). Hash-based → rows-only."""
-    docs = load(spark, sf_dir, "documents")
-    return minhash_near_duplicates(docs, threshold=0.5)
-
-
 def docs_minhash_md5_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash+LSH near-dup path under a FULL exact oracle — the
     md5 sketch-chip (agg_cms → KMV/HLL lineage) applied to the
@@ -223,9 +217,9 @@ def docs_minhash_md5_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     band split into four independent 32-bit components, band keys from
     that band's digest). Banding, candidate generation, and the
     verified exact Jaccard all replay in DuckDB value-exactly, so the
-    whole shape docs_near_dup_minhash runs — shingle explode, pure-min
-    signature agg, band-bucket join, inverted-index verification —
-    carries a driver hash row."""
+    whole shape minhash_near_duplicates runs — shingle explode,
+    pure-min signature agg, band-bucket join, inverted-index
+    verification — carries a driver hash row."""
     from medical_examination_data_etl_system_spark.operators.dedup import minhash_md5_exact
 
     docs = load(spark, sf_dir, "documents")
@@ -311,15 +305,9 @@ SELECT id_a, id_b, jaccard FROM expanded ORDER BY id_a, id_b
 """
 
 
-def docs_near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming≤3 near-dup pairs. Hash-based → rows-only."""
-    docs = load(spark, sf_dir, "documents")
-    return simhash_near_duplicates(docs)
-
-
 def docs_simhash_md5_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SimHash near-dup kernel under a FULL exact oracle — the md5
-    chip applied to docs_near_dup_simhash (rows-only by xxhash64):
+    chip applied to simhash_near_duplicates (rows-only by xxhash64):
     count-weighted bit-majority fingerprints over 60-bit md5 token
     hashes, 4×15-bit pigeonhole banding, bit_count(xor) verification,
     mandatory certified exact-collapse + member expansion
@@ -544,22 +532,6 @@ SELECT doc_id,
 FROM t
 ORDER BY doc_id
 """
-
-
-def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRP-LSH bucketed approximate top-5 (scale path). Rows-only."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return similarity.lsh_bucketed_topk(emb, queries, k=5)
-
-
-def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (sampled-centroid inverted lists, nprobe=2) approximate top-5.
-    Approximate → rows-only; recall vs exact is pinned in
-    tests/test_similarity.py."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    return similarity.ivf_topk(emb, queries, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1294,23 +1266,6 @@ ORDER BY label, dim
 """
 
 
-def emb_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-means (k=8, 5 Lloyd rounds) over the embeddings; cluster
-    sizes + mean squared distance. Iterative float folding → rows-only;
-    exact-recovery and monotone-inertia pins live in
-    tests/test_similarity.py."""
-    emb = load(spark, sf_dir, "embeddings")
-    assigned = similarity.kmeans_assign(emb, k=8, n_iter=5)
-    return (
-        assigned.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg("sq_dist"), 6).alias("avg_sq_dist"),
-        )
-        .orderBy("cluster")
-    )
-
-
 def emb_kmeans_assign_round1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k-means BLAS-assignment kernel under a FULL exact oracle
     (VERDICT r6 #6): one Lloyd half-round against the k=8 lowest-id
@@ -1409,12 +1364,11 @@ def emb_kmeans_iter2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the centroid UPDATE. Coordinates update as ``sum(qv) div count``
     in int64 — Spark ``div`` and DuckDB ``//`` both truncate toward
     zero, negatives included — so round-2 centroids and therefore the
-    round-2 argmin are bit-identical across engines; the iterative
-    float k-means (emb_kmeans_clusters) stays rows-only by
-    construction, but every distributed stage it loops over is now
-    hash-certified: BLAS assign, (cluster, dim) partial-sum update,
-    bounded k·d centroid pull, re-broadcast. Output: per-vector
-    round-2 cluster, exact squared distance, moved flag."""
+    round-2 argmin are bit-identical across engines, and every
+    distributed stage a Lloyd loop runs is hash-certified: BLAS
+    assign, (cluster, dim) partial-sum update, bounded k·d centroid
+    pull, re-broadcast. Output: per-vector round-2 cluster, exact
+    squared distance, moved flag."""
     from medical_examination_data_etl_system_spark.operators.similarity import (
         kmeans_iter2_quantized,
     )
@@ -1479,9 +1433,8 @@ def emb_ivf_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     query→centroid distance, ties → lower list), then exact int64 L2
     via JVM higher-order functions (zip_with + aggregate — no Python
     in the distance path) and a per-query top-5 window. Every stage of
-    the production IVF path (emb_ivf_topk, rows-only by its float
-    scoring) — partition, probe, candidate join, rank — is replayed
-    value-exactly by DuckDB.
+    an IVF search — partition, probe, candidate join, rank — is
+    replayed value-exactly by DuckDB.
 
     Scale shape: the probe table is 10 broadcast rows; candidates are
     the probed lists (~nprobe/nlist of the corpus), joined to their
@@ -1708,9 +1661,8 @@ def emb_srp_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector, exact int64 L2 via zip_with+aggregate, per-query top-5.
     Query buckets are derived driver-side from the same collected
     quantized planes (5 vectors × 6 planes — bounded), so the bucketed
-    corpus is scanned exactly once. Certifies the production
-    emb_lsh_topk shape (bucket equi-join pruning + rank; rows-only by
-    its seeded float hashing) value-exactly."""
+    corpus is scanned exactly once. Certifies the LSH top-k shape
+    (bucket equi-join pruning + rank) value-exactly."""
     import numpy as np
 
     from pyspark.sql import Window
@@ -2473,9 +2425,7 @@ ORDER BY 1, 2
 
 
 def emb_power_iteration_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The eigen-solver LOOP under an exact oracle — the chip that
-    reaches the one kernel family still rows-only end-to-end
-    (emb_pca_project's eigendecomposition): three power-iteration
+    """The eigen-solver LOOP under an exact oracle: three power-iteration
     rounds toward the Gram matrix's dominant eigenvector carried out
     ENTIRELY in int64 (what the row certifies is the loop arithmetic —
     convergence rate is the data's λ2/λ1, orthogonal to correctness). The Gram sweep is the driver-hash-verified
@@ -2560,26 +2510,6 @@ SELECT CAST(jdim AS INTEGER) AS dim, CAST(v AS BIGINT) AS v_scaled
 FROM v3 ORDER BY dim
 """
 )
-
-
-def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA projection to 4 components (fit = the Gram sweep above +
-    a d×d driver eigh; transform = map-only Arrow GEMM against the
-    broadcast components). Rows-only: eigenvectors aren't ANSI-SQL-
-    expressible; pytest pins variance ordering, centering, and
-    agreement with a local numpy PCA."""
-    from medical_examination_data_etl_system_spark.operators.linalg import pca_project
-
-    emb = load(spark, sf_dir, "embeddings")
-    proj = pca_project(emb, "embedding", "vec_id", k=4)
-    return proj.select(
-        "vec_id",
-        F.col("proj")[0].alias("pc1"),
-        F.col("proj")[1].alias("pc2"),
-        F.col("proj")[2].alias("pc3"),
-        F.col("proj")[3].alias("pc4"),
-    ).orderBy("vec_id")
-
 
 
 def emb_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2858,11 +2788,12 @@ def docs_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC dedup end-to-end — the marquee LLM-corpus pass that
     composes three existing kernels: exact cosine near-dup pairs
     (blocked GEMM, the emb_near_dup_cosine plan) → connected components
-    (min-label propagation) → keep the min-id representative per
-    cluster; per-label removal summary. Everything upstream of the
-    summary is the SAME code the individual driver rows already pin;
-    the composition itself is pinned here by a full-precision oracle:
-    the pair set hash-matches the mirrored-formula SQL (r4-green), and
+    (alternating-star, see _semantic_dedup_summary) → keep the min-id
+    representative per cluster; per-label removal summary. Everything
+    upstream of the summary is the SAME code the individual driver rows
+    already pin; the composition itself is pinned here by a
+    full-precision oracle: the pair set hash-matches the
+    mirrored-formula SQL (r4-green), and
     the transitive closure is a recursive CTE with min-label
     propagation (pruned to labels < destination — the component min
     always floods), so even the ITERATIVE stage is exact-hash covered,
@@ -3714,7 +3645,6 @@ QUERIES = {
     "docs_semantic_dedup": QueryDef(docs_semantic_dedup, SEMANTIC_DEDUP_SQL),
     "docs_semantic_dedup_srp": QueryDef(docs_semantic_dedup_srp, None),
     "text_token_stats": QueryDef(text_token_stats, TOKEN_STATS_SQL),
-    "emb_kmeans_clusters": QueryDef(emb_kmeans_clusters, None),
     "emb_kmeans_assign_round1": QueryDef(emb_kmeans_assign_round1, KMEANS_ASSIGN_R1_SQL),
     "emb_kmeans_iter2_exact": QueryDef(emb_kmeans_iter2_exact, KMEANS_ITER2_SQL),
     "emb_srp_bucket_profile": QueryDef(emb_srp_bucket_profile, SRP_BUCKET_SQL),
@@ -3729,10 +3659,8 @@ QUERIES = {
     "text_quality_langid": QueryDef(text_quality_langid, QUALITY_SQL),
     "docs_curation_pipeline": QueryDef(docs_curation_pipeline, CURATION_SQL),
     "docs_dedup_exact": QueryDef(docs_dedup_exact, DEDUP_EXACT_SQL),
-    "docs_near_dup_minhash": QueryDef(docs_near_dup_minhash, None),
     "docs_minhash_md5_exact": QueryDef(docs_minhash_md5_exact, MINHASH_MD5_SQL),
     "docs_simhash_md5_exact": QueryDef(docs_simhash_md5_exact, SIMHASH_MD5_SQL),
-    "docs_near_dup_simhash": QueryDef(docs_near_dup_simhash, None),
     "docs_near_dup_components": QueryDef(docs_near_dup_components, None),
     "docs_near_dup_components_alt": QueryDef(docs_near_dup_components_alt, None),
     "docs_ngram_jaccard": QueryDef(docs_ngram_jaccard, NGRAM_JACCARD_SQL),
@@ -3740,14 +3668,11 @@ QUERIES = {
     "emb_near_dup_cosine": QueryDef(emb_near_dup_cosine, EMB_NEAR_DUP_SQL),
     "emb_near_dup_srp": QueryDef(emb_near_dup_srp, None),
     "text_rolling_fingerprint": QueryDef(text_rolling_fingerprint, ROLLING_FP_SQL),
-    "emb_lsh_topk": QueryDef(emb_lsh_topk, None),
-    "emb_ivf_topk": QueryDef(emb_ivf_topk, None),
     "multimodal_doc_embedding_join": QueryDef(multimodal_doc_embedding_join, MULTIMODAL_JOIN_SQL),
     "multimodal_binary_features": QueryDef(multimodal_binary_features, MULTIMODAL_BINARY_SQL),
     "multimodal_frame_sample": QueryDef(multimodal_frame_sample, FRAME_SAMPLE_SQL),
     "multimodal_resize": QueryDef(multimodal_resize, RESIZE_SQL),
     "emb_gram_matrix": QueryDef(emb_gram_matrix, GRAM_SQL),
-    "emb_pca_project": QueryDef(emb_pca_project, None),
     "emb_power_iteration_exact": QueryDef(emb_power_iteration_exact, POWER_ITER_SQL),
     "emb_standardize": QueryDef(emb_standardize, STANDARDIZE_SQL),
     "multimodal_phash_near_dup": QueryDef(multimodal_phash_near_dup, PHASH_NEAR_DUP_SQL),

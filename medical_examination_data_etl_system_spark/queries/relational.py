@@ -1108,8 +1108,6 @@ ORDER BY event_type
 """
 
 
-
-
 def join_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER reconciliation — the missing member of the join
     battery: per-day order counts from two derived "systems" (urgent
@@ -1384,68 +1382,10 @@ ORDER BY custkey, okey_a, okey_b
 """
 
 
-def agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch rollup: per-(status, priority) HLL sketches of
-    distinct customers, REUSED via hll_union_agg for the per-status and
-    global levels — the fact table scans once; coarser levels merge the
-    fine-grained sketches instead of re-shuffling raw keys. This is the
-    sketch-reuse pattern exact distinct-counts can't have (distinct keys
-    must re-shuffle per level; sketches are tiny and commutative).
-    Rows-only: estimates are sketch-implementation-specific (pytest pins
-    them within tolerance of exact).
-    """
-    o = load(spark, sf_dir, "orders")
-    fine = o.groupBy("o_orderstatus", "o_orderpriority").agg(
-        F.hll_sketch_agg("o_custkey").alias("sk"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    lvl0 = fine.select(
-        F.lit(0).alias("level"), "o_orderstatus", "o_orderpriority",
-        F.hll_sketch_estimate("sk").alias("approx_customers"), "n_orders",
-    )
-    by_status = fine.groupBy("o_orderstatus").agg(
-        F.hll_union_agg("sk").alias("sk"), F.sum("n_orders").alias("n_orders")
-    )
-    lvl1 = by_status.select(
-        F.lit(1).alias("level"), "o_orderstatus",
-        F.lit(None).cast("string").alias("o_orderpriority"),
-        F.hll_sketch_estimate("sk").alias("approx_customers"), "n_orders",
-    )
-    lvl2 = by_status.groupBy().agg(
-        F.hll_union_agg("sk").alias("sk"), F.sum("n_orders").alias("n_orders")
-    ).select(
-        F.lit(2).alias("level"),
-        F.lit(None).cast("string").alias("o_orderstatus"),
-        F.lit(None).cast("string").alias("o_orderpriority"),
-        F.hll_sketch_estimate("sk").alias("approx_customers"), "n_orders",
-    )
-    return lvl0.unionByName(lvl1).unionByName(lvl2).orderBy(
-        "level", "o_orderstatus", "o_orderpriority"
-    )
-
-
-def agg_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer-audience overlap between order-priority segments via
-    KMV sketches (operators/sketch.kmv_overlap_estimates): distinct
-    counts, union, Jaccard, and intersection estimated from k=256
-    minimum hashes per segment — the set ALGEBRA HLL sketches cannot do
-    (HLL unions but never intersects). Sketch build = one distinct
-    shuffle + one rank; all pairwise math runs on ≤ k-row frames.
-    Rows-only (estimates); pytest pins each estimate within tolerance
-    of exact and Jaccard/intersection consistency.
-    """
-    from medical_examination_data_etl_system_spark.operators.sketch import kmv_overlap_estimates
-
-    o = load(spark, sf_dir, "orders")
-    return kmv_overlap_estimates(o, "o_orderpriority", "o_custkey", k=256).orderBy(
-        "grp_a", "grp_b"
-    )
-
-
 def agg_kmv_overlap_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KMV set-algebra kernel under a FULL exact oracle — the
-    sketch-chip discipline (agg_cms_user_counts' md5 move) applied to
-    agg_kmv_overlap, which is rows-only by its xxhash64 sample space:
+    sketch-chip discipline (agg_cms_user_counts' md5 move), in place
+    of an xxhash64 sample space that would leave it rows-only:
     md5-derived 60-bit integer hashes make the k-minimum sketch, the
     union-k merge, theta, and the both-membership count engine-
     deterministic INTEGERS; the two estimates are each one float
@@ -1509,8 +1449,8 @@ _HLL_ALPHA_NUM = 0.7213 / (1 + 1.079 / 512) * 512 * 512 * float(2**40)
 
 def agg_hll_md5_rollup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HLL sketch-rollup kernel under a FULL exact oracle — the
-    md5 chip applied to agg_hll_rollup (rows-only on Spark's native
-    hll_sketch_agg, whose binary is engine-specific): registers are
+    md5 chip, in place of Spark's native hll_sketch_agg (whose binary
+    is engine-specific, so a rollup on it is rows-only): registers are
     hand-built from md5-derived 60-bit hashes (bucket = h mod 512,
     rank = trailing-zeros+1 of the remaining bits, capped at 40 — an
     equally geometric variable, and ``round(log2(h2 & -h2))`` is exact
@@ -1865,8 +1805,6 @@ QUERIES = {
     "dedup_first_lineitem_per_order": QueryDef(dedup_first_lineitem_per_order, DEDUP_FIRST_SQL),
     "agg_grouping_sets": QueryDef(agg_grouping_sets, GROUPING_SETS_SQL),
     "join_interval_overlap": QueryDef(join_interval_overlap, INTERVAL_OVERLAP_SQL),
-    "agg_hll_rollup": QueryDef(agg_hll_rollup, None),
-    "agg_kmv_overlap": QueryDef(agg_kmv_overlap, None),
     "join_bloom_prefilter": QueryDef(join_bloom_prefilter, BLOOM_PREFILTER_SQL),
     "agg_cms_user_counts": QueryDef(agg_cms_user_counts, CMS_USER_COUNTS_SQL),
     "agg_kmv_overlap_exact": QueryDef(agg_kmv_overlap_exact, KMV_EXACT_SQL),

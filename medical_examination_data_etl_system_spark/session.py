@@ -3,11 +3,13 @@
 One place to encode the engine's execution posture:
 - AQE on (runtime shuffle coalescing, skew-join splitting) — the 100 TB
   answer to skewed RECORD_ID / join keys.
-- Arrow on — every pandas-interop boundary (grouped-map renderer, LLM
-  mapInPandas stage) crosses via Arrow batches, not pickled rows.
+- Arrow on — every pandas-interop boundary (LLM mapInPandas stage,
+  the Arrow-batched vector kernels) crosses via Arrow batches, not
+  pickled rows.
 - UTC session timezone — parity with DuckDB oracle timestamps.
-- shuffle partitions sized by env (local test: ~cores; cluster: the
-  deployment overrides via spark-submit conf, these are defaults only).
+- local cores, shuffle partitions and driver heap sized to the box
+  unless the env says otherwise (cluster: the deployment overrides via
+  spark-submit conf, these are defaults only).
 """
 
 from __future__ import annotations
@@ -16,6 +18,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DEFAULT_HEAP_MB = 16 << 10
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """Default driver heap for a box with ``phys_bytes`` of physical
+    memory: 40 % of it in MiB, capped at 16g."""
+    return f"{min(_MAX_DEFAULT_HEAP_MB, int(phys_bytes * 0.4) >> 20)}m"
+
 
 def get_spark(
     app_name: str = "medical_examination_data_etl_system_spark",
@@ -23,21 +33,24 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with the engine's standard conf."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    heap = default_driver_memory(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         # Local mode runs executors inside the driver JVM, whose default
         # heap is 1 GiB — at 10× test volume that fails broadcast builds
         # and OOM-kills the JVM mid-query (observed in the sf1-equivalent
-        # scale check). 16g clears that with mild startup cost — a much
-        # larger heap measurably stalls early queries while the JVM grows
-        # into it (48g cost ~30 s of first-query latency). A real
+        # scale check). The cap is 16g: a much larger heap measurably
+        # stalls early queries while the JVM grows into it (48g cost
+        # ~30 s of first-query latency). The 40 % share leaves room for
+        # the JVM's off-heap memory and the Python workers — a fixed 16g
+        # heap on a 15 GB box got the JVM OOM-killed mid-suite. A real
         # cluster's spark-submit conf overrides this (it only applies at
         # JVM launch).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -15,10 +15,6 @@ operators over the REAL query-side graph builds and writes
 - ``docs_near_dup_components_alt`` (star rounds): the neighborhood
   minimum rides a window over ONE exchange per half-round (no
   groupBy+join of the mirrored frame).
-- label-prop CC past ``adapt_after``: the edge side of the per-round
-  join reads the dst-clustered cache.
-- ``pagerank`` (operator surface, n_iter>=crossover): the per-round
-  contribution join's edge side is the src-clustered cache.
 
 Usage: python scripts/capture_loop_plans.py [--sf DIR] [--tag r14]
 """
@@ -92,27 +88,6 @@ def main() -> None:
         )
         clustering.connected_components_alternating(
             pairs, plan_probe=probe_for("semantic_dedup_star", {2})
-        ).write.format("noop").mode("overwrite").save()
-
-    # --- label-prop CC: pre- and post-adaptation rounds on a
-    # long-diameter graph (a chain forces the adapt_after switch) ---
-    chain = spark.range(12).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    with cache_scope():
-        clustering.connected_components(
-            chain, plan_probe=probe_for("labelprop_cc", {3, 5})
-        ).write.format("noop").mode("overwrite").save()
-
-    # --- pagerank operator at the persist-layout round count ---
-    with cache_scope():
-        clustering.pagerank(
-            edges, n_iter=clustering._PAGERANK_PERSIST_MIN_ROUNDS,
-            plan_probe=probe_for("pagerank_persist", {2}),
-        ).write.format("noop").mode("overwrite").save()
-    with cache_scope():
-        clustering.pagerank(
-            edges, n_iter=3, plan_probe=probe_for("pagerank_ckpt", {2})
         ).write.format("noop").mode("overwrite").save()
 
 

@@ -69,7 +69,6 @@ UNPARTITIONED_WINDOW_ALLOWED = {
     "events_top_paths": "frame = |event_type|^3 path-count rows",
     "customer_rfm_segments": "frame = one row per customer (dimension-bounded; exact global quartiles need a total order)",
     "customer_gini_revenue": "frame = one row per customer (dimension-bounded; Gini needs a total order)",
-    "graph_pagerank_parts": "frame = the post-limit top-20 rows",
     "graph_pagerank_int3": "frame = the post-limit top-20 rows",
     "orders_purged_cv_folds": "day-index window = one row per distinct day (time-bounded domain)",
     "customer_ipw_spend": "overall-ATE fold = one row per market segment (dimension-bounded, <=5 rows)",

@@ -22,9 +22,10 @@ import sys
 # fact barrier in the pipeline, the alternating-star semantic dedup,
 # the Spearman tie-group algebra, and the repartition-before-distinct
 # graph builds — see OPTIMIZATION_r14.md. Queries whose code paths
-# gained only dormant machinery — plan probes, the adapt_after switch
-# that never fires on the benched blob graphs — keep their historical
-# bests: the executed sf0.1 plan is identical.)
+# gained only dormant machinery — plan probes, a label-propagation
+# layout switch (since removed) that never fired on the benched blob
+# graphs — keep their historical bests: the executed sf0.1 plan is
+# identical.)
 CHANGED: set[str] = {
     "pipeline_e2e_reports",
     "pipeline_render_reports",

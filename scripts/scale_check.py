@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark import get_spark
 from medical_examination_data_etl_system_spark.operators.cache import cache_scope
-from medical_examination_data_etl_system_spark.queries import all_queries, load, retired_queries
+from medical_examination_data_etl_system_spark.queries import all_queries, load
 
 SRC = "/root/testdata/sf0.1"
 
@@ -44,14 +44,11 @@ DIMS = ["region", "nation", "customer", "supplier", "part"]
 
 HEAVY_EXTENSION = [
     "docs_dedup_exact",
-    "docs_near_dup_minhash",
-    "docs_near_dup_simhash",
     "docs_near_dup_components",
     "docs_near_dup_components_alt",
     "docs_ngram_jaccard",
     "docs_curation_pipeline",
     "emb_near_dup_srp",
-    "emb_ivf_topk",
     "events_asof_attribution",
     "window_running_total",
     "skew_salted_count_distinct",
@@ -76,13 +73,10 @@ HEAVY_EXTENSION = [
     "docs_token_entropy",
     "docs_heavy_hitter_terms",
     "layout_zorder_cluster",
-    "emb_kmeans_clusters",
     "docs_weighted_sample",
     "docs_fuzzy_levenshtein",
-    "graph_pagerank_parts",
     # round-7 additions: linalg / sketch / rank / interval / stream-state
     "emb_gram_matrix",
-    "emb_pca_project",
     "emb_standardize",
     "lineitem_spearman_corr",
     "join_interval_overlap",
@@ -93,7 +87,6 @@ HEAVY_EXTENSION = [
     "multimodal_phash_near_dup",
     "events_linear_attribution",
     "events_conversion_latency",
-    "agg_kmv_overlap",
     "stream_running_ewma",
     # round-8 additions: renderer at scale, exact-oracle BFS, CMS, blocklist,
     # semantic dedup (exact pair stage — the quadratic oracle twin by design),
@@ -235,7 +228,7 @@ def main() -> None:
         synthesize(spark, replicas, out)
     print(f"synthesis: {time.perf_counter() - t0:.1f}s", flush=True)
 
-    qs = {**all_queries(), **retired_queries()}  # retired shapes stay scale-checkable
+    qs = all_queries()
     names = only[0] if only else [n for n in qs if n.startswith("q")] + HEAVY_EXTENSION
     timings = {}
     for name in names:

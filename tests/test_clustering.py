@@ -1,8 +1,10 @@
-"""Exact component assertions for connected_components, plus the
-pairs→clusters→dedup integration over the real MinHash output."""
+"""Exact component assertions for both connected-components
+algorithms, plus the pairs→clusters→dedup integration over the real
+MinHash output."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -112,71 +114,17 @@ def test_dedup_by_components_algorithms_agree_on_same_pairs(spark):
     assert a == b and len(a) > 0
 
 
-class TestPageRank:
-    @staticmethod
-    def _numpy_pagerank(edges, n_iter=15, d=0.85):
-        import numpy as np
-
-        nodes = sorted({x for e in edges for x in e})
-        idx = {v: i for i, v in enumerate(nodes)}
-        n = len(nodes)
-        out = {v: 0 for v in nodes}
-        for s, _ in edges:
-            out[s] += 1
-        r = np.full(n, 1.0 / n)
-        for _ in range(n_iter):
-            nr = np.zeros(n)
-            dangling = sum(r[idx[v]] for v in nodes if out[v] == 0)
-            for s, t in edges:
-                nr[idx[t]] += r[idx[s]] / out[s]
-            r = (1 - d) / n + d * dangling / n + d * nr
-        return {v: r[idx[v]] for v in nodes}
-
-    def test_matches_numpy_power_iteration(self, spark):
-        from pyspark.sql import Row
-
-        from medical_examination_data_etl_system_spark.operators.clustering import pagerank
-
-        # chain + hub + a dangling sink
-        edges = [(1, 2), (2, 3), (3, 1), (1, 4), (2, 4), (3, 4)]
-        df = spark.createDataFrame([Row(src=s, dst=t) for s, t in edges])
-        got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=15).collect()}
-        want = self._numpy_pagerank(edges, n_iter=15)
-        assert set(got) == set(want)
-        for v in want:
-            assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
-        assert abs(sum(got.values()) - 1.0) < 1e-9
-
-    def test_rank_mass_conserved_on_real_graph(self, spark):
-        from medical_examination_data_etl_system_spark.queries import retired_queries
-
-        top = retired_queries()["graph_pagerank_parts"].fn(spark, "/root/testdata/sf0.001").collect()
-        assert len(top) == 20
-        assert top == sorted(top, key=lambda r: r["rnk"])
-        assert all(r["rank"] > 0 for r in top)
-
-
-def test_components_adaptive_layout_matches_checkpoint_arm(spark):
-    """r14: a loop still unconverged after `adapt_after` rounds switches
-    the static edge frame to the persisted dst-clustered layout. The
-    switch is layout-only: components on a long chain must be identical
-    to the never-adapting arm, and the persist must be scope-released."""
-    from medical_examination_data_etl_system_spark.operators.cache import (
-        cache_scope,
-        tracked_frames,
+@pytest.mark.parametrize("algorithm", ["label_prop", "alternating"])
+def test_unconverged_loop_raises_naming_max_iter(spark, algorithm):
+    """A 10-node path needs more than 3 rounds in either algorithm; a
+    loop cut off at ``max_iter`` must raise, not return partial labels."""
+    from medical_examination_data_etl_system_spark.operators.clustering import (
+        connected_components_alternating,
     )
 
-    pairs = _pairs(spark, [(i, i + 1) for i in range(1, 20)] + [(30, 31)])
-    before = len(tracked_frames())
-    with cache_scope():
-        adaptive = {
-            r["node"]: r["comp"]
-            for r in connected_components(pairs, adapt_after=3).collect()
-        }
-        never = {
-            r["node"]: r["comp"]
-            for r in connected_components(pairs, adapt_after=10**9).collect()
-        }
-    assert adaptive == never
-    assert set(adaptive.values()) == {1, 30}
-    assert len(tracked_frames()) == before
+    cc = {"label_prop": connected_components, "alternating": connected_components_alternating}[
+        algorithm
+    ]
+    path = _pairs(spark, [(i, i + 1) for i in range(1, 10)])
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        cc(path, max_iter=3)

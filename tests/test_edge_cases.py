@@ -208,3 +208,29 @@ def test_table_rowcount_reprobes_when_table_appears(spark, tmp_path):
         assert q.table_rowcount(spark, d, "orders") == 7
     finally:
         q._ROWCOUNTS.pop((d, "orders"), None)
+
+
+def test_default_driver_memory_fits_the_box():
+    """The default heap is 40 % of physical memory in MiB, capped at
+    16g — never a fixed 16g that outgrows a small box. Pure arithmetic:
+    no JVM."""
+    from medical_examination_data_etl_system_spark.session import default_driver_memory
+
+    gib = 1 << 30
+    assert default_driver_memory(15 * gib) == "6144m"
+    assert default_driver_memory(64 * gib) == "16384m"
+
+
+def test_records_from_documents_without_limit(spark, sf_smoke):
+    """``max_records=None`` synthesizes a record from every document
+    (it used to overflow a Java int in ``limit``)."""
+    from medical_examination_data_etl_system_spark.pipeline.synthesize import (
+        records_from_documents,
+    )
+
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    doc_ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    records = records_from_documents(docs)
+    assert len(records) == len({d // 5 for d in doc_ids})
+    assert sum(len(i["FINDINGS"]) for r in records for i in r["ITEMS"]) == len(doc_ids)
+    assert records[:2] == records_from_documents(docs, max_records=2)

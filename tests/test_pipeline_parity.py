@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
@@ -46,24 +45,21 @@ def _assert_reports_match(engine_rows, ref_df: pd.DataFrame):
             )
 
 
-@pytest.mark.parametrize("renderer", ["sql", "python"])
-def test_sample_request_parity(spark, renderer):
+def test_sample_request_parity(spark):
     records = sample_request()
-    engine = process_records(spark, records, renderer=renderer).collect()
+    engine = process_records(spark, records).collect()
     ref = run_reference(records)
     _assert_reports_match(engine, ref)
 
 
-@pytest.mark.parametrize("renderer", ["sql", "python"])
-def test_multilang_edge_parity(spark, renderer):
+def test_multilang_edge_parity(spark):
     records = multilang_edge_batch()
-    engine = process_records(spark, records, renderer=renderer).collect()
+    engine = process_records(spark, records).collect()
     ref = run_reference(records)
     _assert_reports_match(engine, ref)
 
 
-@pytest.mark.parametrize("renderer", ["sql", "python"])
-def test_custom_fact_parity(spark, renderer):
+def test_custom_fact_parity(spark):
     """Non-fallback dim content: real summaries (non-default renderer
     branch, A8 block merge), GROUPNO 0/null sentinel, A2 dedup."""
     fact, records = custom_fact_frame()
@@ -74,7 +70,7 @@ def test_custom_fact_parity(spark, renderer):
         "request",
         F.udf(lambda rid: req_json.get(rid, ""))(F.col("RECORD_ID")),
     ).select(*SUBSET, "ord", "request")
-    engine = reports_from_fact(sdf, renderer=renderer).collect()
+    engine = reports_from_fact(sdf).collect()
 
     ref = run_reference_from_fact(fact.drop(columns=["ord"]), records)
     assert len(engine) == len(ref)

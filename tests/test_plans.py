@@ -124,16 +124,16 @@ def test_salted_join_explodes_dim_not_fact(spark):
 
 
 def test_renderer_sql_has_no_python_eval(spark):
-    """The default renderer must contain no Python evaluation operator."""
+    """The renderer must contain no Python evaluation operator."""
     import json
 
     from medical_examination_data_etl_system_spark.pipeline import process_records
 
     recs = json.load(open("/root/reference/sample_request.json"))
-    df = process_records(spark, recs, renderer="sql")
+    df = process_records(spark, recs)
     plan = _formatted_plan(df)
     for marker in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan, f"Python operator {marker} in sql-renderer plan"
+        assert marker not in plan, f"Python operator {marker} in renderer plan"
 
 
 def test_embedding_near_dup_never_packs_blocks(spark):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from medical_examination_data_etl_system_spark.queries import all_queries, load, retired_queries
+from medical_examination_data_etl_system_spark.queries import all_queries, load
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -139,15 +139,15 @@ def test_rolling_fp_collapse_parity(spark):
 
 
 def test_pagerank_topk_plan_take_ordered(spark):
-    df = retired_queries()["graph_pagerank_parts"].fn(spark, SF_DIR)
+    df = all_queries()["graph_pagerank_int3"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     rows = df.collect()
     assert [r.rnk for r in rows] == list(range(1, len(rows) + 1))
-    assert all(rows[i].rank >= rows[i + 1].rank for i in range(len(rows) - 1))
+    assert all(rows[i].rank_scaled >= rows[i + 1].rank_scaled for i in range(len(rows) - 1))
 
 # ---------------------------------------------------------------------------
-# ADVICE r5 guards: gram overflow, pca empty input
+# ADVICE r5 guards: gram overflow
 # ---------------------------------------------------------------------------
 
 
@@ -175,16 +175,6 @@ def test_gram_values_unchanged_under_decimal_reduce(spark):
         for j in range(i, 4):
             assert got[(i, j)] == g[i, j]
 
-
-def test_pca_empty_input_clean_error(spark):
-    from medical_examination_data_etl_system_spark.operators.linalg import pca_components
-
-    empty = spark.createDataFrame([], "embedding array<float>")
-    with pytest.raises(ValueError, match="at least 2 rows"):
-        pca_components(empty)
-    allnull = spark.createDataFrame([Row(embedding=None)], "embedding array<float>")
-    with pytest.raises(ValueError, match="at least 2 rows"):
-        pca_components(allnull)
 
 # ---------------------------------------------------------------------------
 # ADVICE r5: stateful EWMA null poisoning matches the batch oracle
