@@ -197,21 +197,6 @@ def with_rolling_fingerprint(
     return staged.withColumn(out_col, F.array_min(grams)).drop("_rfp_norm")
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column set to a document frame."""
-    text = F.col(text_col)
-    feats = quality_features(text)
-    out = df
-    for name, col in feats.items():
-        out = out.withColumn(name, col)
-    return (
-        out.withColumn("bpe_tokens", bpe_token_count(text))
-        .withColumn("quality", quality_score(text))
-        .withColumn("lang_pred", lang_id(text))
-        .withColumn("fingerprint", content_fingerprint(text))
-    )
-
-
 def tfidf_top_terms(
     docs: DataFrame,
     text_col: str = "text",

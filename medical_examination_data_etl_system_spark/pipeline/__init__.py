@@ -6,7 +6,6 @@ composed flow (parity with reference text_processing.py:144-177).
 """
 
 from medical_examination_data_etl_system_spark.pipeline.ingest import records_to_df, flatten
-from medical_examination_data_etl_system_spark.pipeline.dims import fallback_dims
 from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.clean import postprocess_multilang
 from medical_examination_data_etl_system_spark.pipeline.run import process_records
@@ -14,7 +13,6 @@ from medical_examination_data_etl_system_spark.pipeline.run import process_recor
 __all__ = [
     "records_to_df",
     "flatten",
-    "fallback_dims",
     "enrich",
     "postprocess_multilang",
     "process_records",

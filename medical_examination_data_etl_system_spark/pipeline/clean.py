@@ -14,8 +14,9 @@ Spark's no-implicit-order model:
   1-row broadcast cross-join — no driver round-trip, no global window.
 
 All expressions are built-in column functions: the whole stage stays in
-whole-stage codegen; the only shuffles are the dedup window (hash by the
-8-col dedup key) and the per-record re-rank (hash by RECORD_ID).
+whole-stage codegen; the only exchanges are one ``repartition("RECORD_ID")``,
+which clusters the dedup window and both per-record windows, plus the
+1-row GROUPNO max gathered to a single partition and broadcast back.
 """
 
 from __future__ import annotations

@@ -1,10 +1,11 @@
-"""Dimension tables: offline fallback generator + pluggable loaders.
+"""Dimension tables: pluggable loaders + the env-gated source choice.
 
-Parity with reference db_to_dataframe.py:61-95 (fallback) / :98-141
-(MongoDB). The engine treats dims as plain DataFrames; where they come
-from (parquet, JDBC, Mongo connector) is a loader concern. The fallback
-derives deterministic dims from the fact table's distinct keys so the
-whole pipeline runs offline — same guarantee the reference makes.
+Parity with reference db_to_dataframe.py:98-141 (MongoDB). The engine
+treats dims as plain DataFrames; where they come from (parquet, JDBC,
+Mongo connector) is a loader concern. With no dim source, ``resolve_dims``
+returns no tables and ``enrich`` computes the reference's offline
+fallback names (db_to_dataframe.py:61-95) from the fact's own keys, so
+the whole pipeline runs offline — same guarantee the reference makes.
 """
 
 from __future__ import annotations
@@ -19,79 +20,6 @@ from medical_examination_data_etl_system_spark.schemas import (
     ITEM_META_SCHEMA,
     SUMMARY_TBL_SCHEMA,
 )
-
-
-def fallback_dims(flat: DataFrame) -> dict[str, DataFrame]:
-    """Synthesize the four dim tables from distinct fact keys.
-
-    Reference parity (db_to_dataframe.py:63-95):
-    - item_meta: one row per distinct ITEM_CODE with '項目/项目/Item {code}'
-      names. The reference stamps every row with the FIRST record's
-      ORG_ID (``.iloc[0]``); the engine uses the distinct
-      (ITEM_CODE, ORG_ID) pairs instead — identical for single-org
-      batches, and correct (instead of silently join-missing) for
-      multi-org batches.
-    - item_group_map: every code → GROUPNO 1, '範例分類/Sample Group/…'.
-    - diag_tbl: identity DIAG_CODE → SUMMARY_CODE, empty comment names.
-    - summary_tbl: every summary code with empty names (so the
-      per-language defaults kick in downstream).
-    """
-    code = F.col("ITEM_CODE")
-    item_meta = (
-        flat.select(
-            F.trim(code.cast("string")).alias("ITEM_CODE"),
-            F.trim(F.col("ORG_ID").cast("string")).alias("ORG_ID"),
-        )
-        .distinct()
-        .select(
-            "ITEM_CODE",
-            F.concat(F.lit("項目 "), F.col("ITEM_CODE")).alias("TCNAME_ITEM"),
-            F.concat(F.lit("项目 "), F.col("ITEM_CODE")).alias("SCNAME_ITEM"),
-            F.concat(F.lit("項目 "), F.col("ITEM_CODE")).alias("JPNAME_ITEM"),
-            F.concat(F.lit("Item "), F.col("ITEM_CODE")).alias("ENNAME_ITEM"),
-            "ORG_ID",
-        )
-    )
-
-    item_group_map = (
-        flat.select(F.trim(code.cast("string")).alias("ITEM_CODE"))
-        .distinct()
-        .select(
-            "ITEM_CODE",
-            F.lit(1).cast("int").alias("GROUPNO"),
-            F.lit("範例分類").alias("TCNAME_GROUP"),
-            F.lit("Sample Group").alias("ENNAME_GROUP"),
-            F.lit("サンプル分類").alias("JPNAME_GROUP"),
-            F.lit("示例分类").alias("SCNAME_GROUP"),
-        )
-    )
-
-    diag_tbl = (
-        flat.select(F.trim(F.col("DIAG_CODE").cast("string")).alias("DIAG_CODE"))
-        .distinct()
-        .select(
-            "DIAG_CODE",
-            F.col("DIAG_CODE").alias("SUMMARY_CODE"),
-            F.lit("").alias("ENNAME_COMMENT"),
-            F.lit("").alias("JPNAME_COMMENT"),
-            F.lit("").alias("SCNAME_COMMENT"),
-        )
-    )
-
-    summary_tbl = diag_tbl.select(
-        F.col("SUMMARY_CODE"),
-        F.lit("").alias("TCNAME_SUMMARY"),
-        F.lit("").alias("SCNAME_SUMMARY"),
-        F.lit("").alias("ENNAME_SUMMARY"),
-        F.lit("").alias("JPNAME_SUMMARY"),
-    ).distinct()
-
-    return {
-        "item_meta": item_meta,
-        "item_group_map": item_group_map,
-        "diag_tbl": diag_tbl,
-        "summary_tbl": summary_tbl,
-    }
 
 
 def dims_from_parquet(spark, base_dir: str) -> dict[str, DataFrame]:
@@ -196,7 +124,7 @@ def dims_from_mongo(
         except ImportError as exc:  # pragma: no cover
             raise ImportError(
                 "dims_from_mongo needs pymongo (or pass client_factory=); "
-                "offline callers use fallback_dims/dims_from_parquet"
+                "offline callers pass no dims or use dims_from_parquet"
             ) from exc
         client_factory = pymongo.MongoClient
 
@@ -232,13 +160,14 @@ def dims_from_mongo(
 def resolve_dims(spark, flat: DataFrame) -> dict[str, DataFrame]:
     """Env-gated dim source selection, reference-style: with MONGO_URI
     set the dims come from MongoDB (``$in`` on the batch's distinct item
-    codes); otherwise the deterministic fallback keeps the pipeline
-    fully offline (reference ``use_demo_fallback``)."""
+    codes); otherwise no tables (``{}``), for which ``enrich`` computes
+    the deterministic fallback names and the pipeline stays fully
+    offline (reference ``use_demo_fallback``)."""
     import os
 
     uri = os.environ.get("MONGO_URI")
     if not uri:
-        return fallback_dims(flat)
+        return {}
     item_codes = [
         r["ITEM_CODE"]
         for r in flat.select(F.trim(F.col("ITEM_CODE").cast("string")).alias("ITEM_CODE"))

@@ -1,12 +1,18 @@
-"""Enrichment: four broadcast left equi-joins against the dim tables.
+"""Enrichment: four broadcast left equi-joins against the dim tables,
+or one projection when there are none.
 
 Parity with reference db_to_dataframe.py:144-184 (key normalization +
 J1-J4 merges + SUBSET projection), Spark-first:
 
-- Dim tables derive from (or are filtered by) the request's key space —
-  they are small by construction, so every join is an explicit
+- Supplied dim tables (Mongo, parquet) are filtered by the request's
+  key space — small by construction, so every join is an explicit
   ``F.broadcast``: no shuffle of the fact table, which is the side that
   scales to 100 TB.
+- With no dim tables, the reference's offline fallback
+  (db_to_dataframe.py:61-95) builds each dim row as a pure function of
+  its own key, so joining it back onto the fact is an identity lookup:
+  the engine computes the same columns from the fact's keys in one
+  ``select`` — no aggregate, no join, no job.
 - Key normalization (trim + cast-to-string, reference :144-162) happens
   once on each side before joining.
 - Suffix collisions (pandas ``suffixes=('_ITEM','_GROUP')``) don't arise:
@@ -27,12 +33,44 @@ def _norm_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.withColumns({k: F.trim(F.col(k).cast("string")) for k in present})
 
 
-def enrich(flat: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
+def _fallback_names(fact: DataFrame) -> DataFrame:
+    """The left joins against the reference's fallback dims, as one
+    projection over the normalized fact keys.
+
+    Join semantics carry over exactly: an equi-join on a null key never
+    matches, so the item names need ITEM_CODE and ORG_ID, the group
+    columns need ITEM_CODE, and the comment and summary names (all '')
+    need DIAG_CODE; otherwise the column is null, as an unmatched left
+    join leaves it, and clean's per-language defaults apply.
+    """
+    item = F.col("ITEM_CODE")
+    has_item, has_diag = item.isNotNull(), F.col("DIAG_CODE").isNotNull()
+    has_item_org = has_item & F.col("ORG_ID").isNotNull()
+    names = {
+        "GROUPNO": F.when(has_item, F.lit(1)),
+        "TCNAME_GROUP": F.when(has_item, F.lit("範例分類")),
+        "ENNAME_GROUP": F.when(has_item, F.lit("Sample Group")),
+        "JPNAME_GROUP": F.when(has_item, F.lit("サンプル分類")),
+        "SCNAME_GROUP": F.when(has_item, F.lit("示例分类")),
+        "TCNAME_ITEM": F.when(has_item_org, F.concat(F.lit("項目 "), item)),
+        "ENNAME_ITEM": F.when(has_item_org, F.concat(F.lit("Item "), item)),
+        "JPNAME_ITEM": F.when(has_item_org, F.concat(F.lit("項目 "), item)),
+        "SCNAME_ITEM": F.when(has_item_org, F.concat(F.lit("项目 "), item)),
+        **{c: F.when(has_diag, F.lit("")) for c in SUBSET if c.endswith(("_COMMENT", "_SUMMARY"))},
+    }
+    return fact.select(*[names.get(c, F.col(c)).alias(c) for c in SUBSET], "ord", "request")
+
+
+def enrich(flat: DataFrame, dims: dict[str, DataFrame] | None) -> DataFrame:
     """fact ⋈ item_meta ⋈ item_group_map ⋈ diag_tbl ⋈ summary_tbl.
 
-    All left joins, all broadcast. Returns SUBSET ∪ {ord, request}.
+    All left joins, all broadcast; with no ``dims`` (``None`` or empty),
+    the offline fallback projection instead. Returns SUBSET ∪ {ord,
+    request}.
     """
     fact = _norm_keys(flat, ["ITEM_CODE", "ORG_ID", "DIAG_CODE"])
+    if not dims:
+        return _fallback_names(fact)
 
     item_meta = _norm_keys(dims["item_meta"], ["ITEM_CODE", "ORG_ID"])
     item_group_map = _norm_keys(dims["item_group_map"], ["ITEM_CODE"])

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECORD_SCHEMA
@@ -61,13 +61,17 @@ def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
     The 100 TB path — ``records_to_df`` materializes a Python list on
     the driver (right for the API's request/response shape, wrong for
     bulk). Files are read with the explicit RECORD_SCHEMA (no inference,
-    SURVEY.md §1.2); the batch position ``_rec_idx`` — which the API path
-    pins by driver-side enumerate — is re-derived deterministically as a
-    dense rank over RECORD_ID, since files carry no meaningful row order.
+    SURVEY.md §1.2).
     """
-    raw = spark.read.schema(RECORD_SCHEMA).json(path)
-    from pyspark.sql import Window as W
+    return with_batch_position(spark.read.schema(RECORD_SCHEMA).json(path))
 
+
+def with_batch_position(raw: DataFrame) -> DataFrame:
+    """RECORD_SCHEMA rows → BATCH_SCHEMA rows. The batch position
+    ``_rec_idx`` — which the API path pins by driver-side enumerate — is
+    re-derived deterministically as a dense rank over RECORD_ID, since
+    files and stream micro-batches carry no meaningful row order.
+    """
     # The unpartitioned window funnels every WHOLE nested record (its
     # ITEMS and FINDINGS arrays ride along) through one task. The ord
     # bit layout caps a batch at 2^23 records, but not the bytes per
@@ -75,7 +79,7 @@ def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
     # data exploded after it is distributed.
     return raw.withColumn(
         "_rec_idx",
-        F.dense_rank().over(W.orderBy("RECORD_ID")).cast("long") - 1,
+        F.dense_rank().over(Window.orderBy("RECORD_ID")).cast("long") - 1,
     ).select(*[f.name for f in BATCH_SCHEMA.fields])
 
 

@@ -36,9 +36,10 @@ def process_records(
 ) -> DataFrame:
     """records → (record_id, report, request), ordered by batch position.
 
-    With no ``dims``, deterministic fallback dims are derived from the
-    batch itself (reference db_to_dataframe.py:61-95). With no
-    ``output_dir``, no CSV artifacts are written.
+    With no ``dims``, ``resolve_dims`` picks the source: MongoDB when
+    MONGO_URI is set, else no tables, for which ``enrich`` computes the
+    reference's offline fallback names (db_to_dataframe.py:61-95) in one
+    projection. With no ``output_dir``, no CSV artifacts are written.
     """
     # Stage timings (reference utils.py:7-15 parity) land on the
     # medical_examination_data_etl_system_spark.timing logger + observability.recorded_timings().

@@ -92,20 +92,9 @@ SUBSET_2_KEEP = [
     "SCNAME_SUMMARY",
 ]
 
-# Engine-internal columns carried alongside SUBSET
-ORD_COL = "ord"  # bigint encounter-order key (SURVEY.md §1.3)
-REQUEST_COL = "request"  # JSON echo of the originating record (replaces J5 scan)
-
 # ---------------------------------------------------------------------------
-# Per-language projections (reference text_processing.py:15-28)
+# Per-language texts (reference text_processing.py:23-28)
 # ---------------------------------------------------------------------------
-
-LANG_SUBSET = {
-    "1": ["RECORD_ID", "LANG_NO", "GROUPNO", "TCNAME_GROUP", "ITEM_CODE", "TCNAME_ITEM", "COMMENT", "TCNAME_SUMMARY"],
-    "2": ["RECORD_ID", "LANG_NO", "GROUPNO", "ENNAME_GROUP", "ITEM_CODE", "ENNAME_ITEM", "ENNAME_COMMENT", "ENNAME_SUMMARY"],
-    "3": ["RECORD_ID", "LANG_NO", "GROUPNO", "JPNAME_GROUP", "ITEM_CODE", "JPNAME_ITEM", "JPNAME_COMMENT", "JPNAME_SUMMARY"],
-    "4": ["RECORD_ID", "LANG_NO", "GROUPNO", "SCNAME_GROUP", "ITEM_CODE", "SCNAME_ITEM", "SCNAME_COMMENT", "SCNAME_SUMMARY"],
-}
 
 # Default "no additional information" text per language
 # (reference text_processing.py:23-28 / llm_processing.py:10)
@@ -178,16 +167,6 @@ SUMMARY_TBL_SCHEMA = T.StructType(
         T.StructField("JPNAME_SUMMARY", T.StringType(), True),
     ]
 )
-
-# Output contract (reference text_processing.py:57)
-REPORT_SCHEMA = T.StructType(
-    [
-        T.StructField("record_id", T.StringType(), True),
-        T.StructField("report", T.StringType(), True),
-        T.StructField("request", T.StringType(), True),
-    ]
-)
-
 
 def ensure_columns(df: DataFrame, columns: list[str], fill: str = "") -> DataFrame:
     """Backfill any missing contract column with a literal.

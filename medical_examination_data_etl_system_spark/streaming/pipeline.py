@@ -6,24 +6,21 @@ pipeline (flatten → enrich → clean → rewrite → render) via
 reusing battle-tested batch logic with streaming input, exactly-once
 via the checkpointed sink.
 
-Per-batch dims default to the deterministic fallback derivation (the
-batch pipeline's behavior with no dims); production passes static dim
-frames once and they broadcast into every micro-batch.
+With no dims, each micro-batch gets the deterministic fallback names
+(``enrich``'s projection, the batch pipeline's behavior with no dims);
+production passes static dim frames once and they broadcast into every
+micro-batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql import Window as W
 
 from medical_examination_data_etl_system_spark.operators.cache import cache_scope
-from medical_examination_data_etl_system_spark.pipeline.dims import fallback_dims
 from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
-from medical_examination_data_etl_system_spark.pipeline.ingest import flatten
+from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, with_batch_position
 from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
-from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECORD_SCHEMA
+from medical_examination_data_etl_system_spark.schemas import RECORD_SCHEMA
 
 
 def read_records_stream(
@@ -58,12 +55,8 @@ def stream_reports(
         # stream's lifetime. The write action runs inside the scope, so
         # the barrier is consumed before release.
         with cache_scope():
-            nested = batch_df.withColumn(
-                "_rec_idx",
-                F.dense_rank().over(W.orderBy("RECORD_ID")).cast("long") - 1,
-            ).select(*[f.name for f in BATCH_SCHEMA.fields])
-            flat = flatten(nested)
-            enriched = enrich(flat, dims if dims is not None else fallback_dims(flat))
+            flat = flatten(with_batch_position(batch_df))
+            enriched = enrich(flat, dims)
             reports = reports_from_fact(enriched, llm_mode=llm_mode)
             reports.write.mode("append").parquet(output_path)
 

@@ -1,5 +1,6 @@
-"""Battery-wide physical-plan audit: builds every query's executed
-plan and flags the anti-patterns the 100 TB posture forbids —
+"""Battery-wide physical-plan audit: builds the executed plan of every
+registry query and of the API entry point (``process_records`` on the
+committed sample request, named ``api:process_records``) and flags the anti-patterns the 100 TB posture forbids —
 row-at-a-time Python UDFs (BatchEvalPython) and unbounded cartesian
 products — plus Exchange counts as a shuffle budget overview.
 
@@ -15,11 +16,16 @@ Exit code 1 if any query trips a fatal flag.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+API_ENTRY = "api:process_records"
+SAMPLE_REQUEST = os.path.join(ROOT, "tests", "sample_request.json")
 
 FATAL = ("BatchEvalPython", "CartesianProduct")
 INFO = (
@@ -107,16 +113,20 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from medical_examination_data_etl_system_spark import get_spark
     from medical_examination_data_etl_system_spark.operators.cache import cache_scope
+    from medical_examination_data_etl_system_spark.pipeline import process_records
     from medical_examination_data_etl_system_spark.queries import all_queries
 
     spark = get_spark(app_name="plan-audit")
-    qs = all_queries()
-    names = sys.argv[2:] or list(qs)
+    builders = {name: (lambda qd=qd: qd.fn(spark, sf_dir)) for name, qd in all_queries().items()}
+    with open(SAMPLE_REQUEST, encoding="utf-8") as f:
+        sample = json.load(f)
+    builders[API_ENTRY] = lambda: process_records(spark, sample)
+    names = sys.argv[2:] or list(builders)
     rc = 0
     for name in names:
         try:
             with cache_scope():
-                jplan = qs[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+                jplan = builders[name]()._jdf.queryExecution().executedPlan()
                 plan = jplan.toString()
                 n_upw = _count_unpartitioned_windows(jplan)
         except Exception as exc:  # noqa: BLE001 — report, keep sweeping

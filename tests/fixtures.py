@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pandas as pd
 
 
 def sample_request() -> list[dict]:
-    with open("/root/reference/sample_request.json") as f:
+    """The reference's ``POST /process`` sample shape (FIXTURES.md A1):
+    one LANG_NO "1" record, two items, one finding each."""
+    with open(os.path.join(os.path.dirname(__file__), "sample_request.json"), encoding="utf-8") as f:
         return json.load(f)
 
 

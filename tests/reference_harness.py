@@ -15,6 +15,7 @@ The reference files are loaded from disk read-only; nothing under
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import types
 from typing import Any
@@ -38,6 +39,11 @@ def _load_reference():
     global _loaded
     if _loaded:
         return
+    if not os.path.isdir(_REFERENCE_PATH):
+        raise FileNotFoundError(
+            f"the reference implementation tree {_REFERENCE_PATH} is missing: "
+            "the golden byte-parity tests run the reference code itself"
+        )
     # Stubs for deps that fallback/mock mode never touches.
     _stub_module("pymongo", MongoClient=None)
     _stub_module("openai", OpenAI=None)

@@ -1,6 +1,6 @@
 """Mongo dim-loader parity (reference db_to_dataframe.py:98-141) with a
-stubbed client — no pymongo needed; the loader's contract is the same
-dict[str, DataFrame] the fallback produces, so the pipeline is
+stubbed client — no pymongo needed; the loader returns the same
+dict[str, DataFrame] any dim source does, so the pipeline is
 source-agnostic."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ from __future__ import annotations
 import json
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
-from medical_examination_data_etl_system_spark.pipeline.dims import dims_from_mongo, fallback_dims
+from medical_examination_data_etl_system_spark.pipeline.dims import dims_from_mongo
 
 
 class _FakeCollection:
@@ -80,8 +80,6 @@ def test_mongo_dims_shapes_and_renames(spark):
     dims = dims_from_mongo(
         spark, "mongodb://stub", ["I001"], client_factory=lambda uri: client
     )
-    fallback = fallback_dims  # schema contract source of truth below
-
     meta = dims["item_meta"]
     assert set(meta.columns) == {
         "ITEM_CODE", "TCNAME_ITEM", "SCNAME_ITEM", "JPNAME_ITEM", "ENNAME_ITEM", "ORG_ID",
@@ -106,8 +104,8 @@ def test_mongo_dims_shapes_and_renames(spark):
 
 
 def test_mongo_dims_drive_the_pipeline(spark):
-    """The loaded dims satisfy the same contract as fallback_dims: the
-    full pipeline runs and the enriched names appear in the report."""
+    """The loaded dims satisfy the enrich contract: the full pipeline
+    runs and the enriched names appear in the report."""
     client = _fake_client("mongodb://stub")
     records = [
         {
@@ -135,6 +133,8 @@ def test_mongo_dims_drive_the_pipeline(spark):
 
 
 def test_resolve_dims_defaults_to_fallback(spark, monkeypatch):
+    """Offline there are no dim tables: ``resolve_dims`` returns ``{}``
+    and the report carries enrich's fallback names."""
     monkeypatch.delenv("MONGO_URI", raising=False)
     from medical_examination_data_etl_system_spark.pipeline.dims import resolve_dims
     from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
@@ -142,7 +142,7 @@ def test_resolve_dims_defaults_to_fallback(spark, monkeypatch):
     records = [{"RECORD_ID": "R1", "ORG_ID": "O", "LANG_NO": "1",
                 "ITEMS": [{"ITEM_CODE": "X", "FINDINGS": [
                     {"DIAG_CODE": "D", "COMMENT": "c", "SUMMARY_CODE": "S"}]}]}]
-    flat = flatten(records_to_df(spark, records))
-    dims = resolve_dims(spark, flat)
-    assert set(dims) == {"item_meta", "item_group_map", "diag_tbl", "summary_tbl"}
-    assert dims["item_meta"].collect()[0]["ITEM_CODE"] == "X"
+    assert resolve_dims(spark, flatten(records_to_df(spark, records))) == {}
+    report = process_records(spark, records).collect()[0]["report"]
+    assert "項目 X" in report
+    assert "範例分類" in report

@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
-from medical_examination_data_etl_system_spark.pipeline.dims import fallback_dims
 from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.ingest import (
     flatten,
@@ -26,7 +25,7 @@ def test_jsonl_ingest_matches_api_path(spark, tmp_path):
 
     nested = records_from_json_files(spark, str(src))
     flat = flatten(nested)
-    enriched = enrich(flat, fallback_dims(flat))
+    enriched = enrich(flat, {})
     got = {r["record_id"]: r["report"] for r in reports_from_fact(enriched).collect()}
 
     want = {

@@ -125,15 +125,27 @@ def test_salted_join_explodes_dim_not_fact(spark):
 
 def test_renderer_sql_has_no_python_eval(spark):
     """The renderer must contain no Python evaluation operator."""
-    import json
-
     from medical_examination_data_etl_system_spark.pipeline import process_records
 
-    recs = json.load(open("/root/reference/sample_request.json"))
-    df = process_records(spark, recs)
+    from .fixtures import sample_request
+
+    df = process_records(spark, sample_request())
     plan = _formatted_plan(df)
     for marker in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan, f"Python operator {marker} in renderer plan"
+
+
+def test_fallback_enrich_is_one_projection(spark):
+    """With no dim tables, enrich computes the fallback names from the
+    fact's own keys: no join and no aggregate in the plan."""
+    from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
+    from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
+
+    from .fixtures import multilang_edge_batch
+
+    plan = _simple_plan(enrich(flatten(records_to_df(spark, multilang_edge_batch())), {}))
+    assert "Join" not in plan
+    assert "Aggregate" not in plan
 
 
 def test_embedding_near_dup_never_packs_blocks(spark):

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
 from medical_examination_data_etl_system_spark.pipeline.clean import postprocess_multilang
-from medical_examination_data_etl_system_spark.pipeline.dims import fallback_dims
 from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
 from medical_examination_data_etl_system_spark.schemas import SUBSET
@@ -53,7 +52,7 @@ _SETTINGS = settings(
 
 def _cleaned(spark, records):
     flat = flatten(records_to_df(spark, records))
-    return postprocess_multilang(enrich(flat, fallback_dims(flat)))
+    return postprocess_multilang(enrich(flat, {}))
 
 
 @given(records=_BATCH)
