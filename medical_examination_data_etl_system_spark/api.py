@@ -26,7 +26,6 @@ def handle_process_request(
     spark: SparkSession,
     payload: list[dict[str, Any]] | dict[str, Any],
     output_dir: str | None = None,
-    llm_mode: str = "azure",
 ) -> dict[str, list[dict[str, str]]]:
     """`POST /process` semantics: dict payloads are promoted to a
     1-element batch (reference text_processing.py:152); returns
@@ -35,7 +34,7 @@ def handle_process_request(
     # cleaned fact; a long-lived server must release it after the
     # response's collect, not accumulate one cached frame per request.
     with cache_scope():
-        reports = process_records(spark, payload, output_dir=output_dir, llm_mode=llm_mode)
+        reports = process_records(spark, payload, output_dir=output_dir)
         return reports_to_json(reports)
 
 

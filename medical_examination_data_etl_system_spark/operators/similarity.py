@@ -187,9 +187,8 @@ def with_srp_buckets(
     bucket_col: str = "_bucket",
     num_tables: int = 1,
     probes: int = 0,
-    carry_vectors: bool = True,
 ) -> DataFrame:
-    """(id, vec, table, bucket, home): SRP bucket per row, hash table,
+    """(id, table, bucket, home): SRP bucket per row, hash table,
     and probe slot, via one map-only ``mapInPandas`` sweep — all
     num_tables·num_planes sign bits come from a single V @ P.T matmul,
     packed per table. No shuffle; the plane matrix is closed over
@@ -218,13 +217,14 @@ def with_srp_buckets(
     which moves a near-orthogonal pair between buckets — irrelevant to
     the near-dup regime the bucketing targets.
 
-    ``carry_vectors=False`` drops ``_v`` from the OUTPUT (the matmul
-    still reads it): every row is emitted L·(1+probes)× , and the r11
-    deep-cap decomposition measured the ~300 B vector payload on each
-    copy — not the kernel, not the group count — as essentially the
-    entire probed wall clock (emit+shuffle-only 1,538 s of a 1,533 s
-    run). Consumers that can re-attach vectors from a broadcast (the
-    GEMM kernel's lookup path) shuffle ~26 B rows instead."""
+    The OUTPUT carries ids only (the matmul reads ``vec_col``): every
+    row is emitted L·(1+probes)×, and the r11 deep-cap decomposition
+    measured the ~300 B vector payload on each copy — not the kernel,
+    not the group count — as essentially the entire probed wall clock
+    (emit+shuffle-only 1,538 s of a 1,533 s run). Consumers re-attach
+    vectors after the emit (a broadcast lookup in the GEMM kernel, or
+    a JVM join on ``_id``), so the emit and its shuffle move ~26 B
+    rows."""
     import numpy as np
     import pandas as pd
 
@@ -233,15 +233,14 @@ def with_srp_buckets(
     planes = srp_plane_matrix(spark, num_planes * num_tables, dim)
     weights = (1 << np.arange(num_planes)).astype(np.int64)
 
-    fields = [T.StructField("_id", T.LongType(), False)]
-    if carry_vectors:
-        fields.append(T.StructField("_v", T.ArrayType(T.FloatType()), True))
-    fields += [
-        T.StructField("_table", T.IntegerType(), False),
-        T.StructField(bucket_col, T.LongType(), False),
-        T.StructField("_home", T.BooleanType(), False),
-    ]
-    out_schema = T.StructType(fields)
+    out_schema = T.StructType(
+        [
+            T.StructField("_id", T.LongType(), False),
+            T.StructField("_table", T.IntegerType(), False),
+            T.StructField(bucket_col, T.LongType(), False),
+            T.StructField("_home", T.BooleanType(), False),
+        ]
+    )
     copies = 1 + probes
 
     def _assign(batches):
@@ -261,12 +260,9 @@ def with_srp_buckets(
                 ],
                 axis=1,
             )  # (n, L·copies): per table, home then probe slots
-            if carry_vectors:
-                out = pdf.loc[pdf.index.repeat(num_tables * copies)].reset_index(drop=True)
-            else:
-                out = pd.DataFrame(
-                    {"_id": np.repeat(pdf["_id"].to_numpy(), num_tables * copies)}
-                )
+            out = pd.DataFrame(
+                {"_id": np.repeat(pdf["_id"].to_numpy(), num_tables * copies)}
+            )
             out["_table"] = np.tile(
                 np.repeat(np.arange(num_tables, dtype=np.int32), copies), len(pdf)
             )
@@ -289,27 +285,21 @@ _PAIR_SCHEMA = T.StructType(
 )
 
 
-def _gemm_pairs_factory(threshold: float, vecs=None, cross_slab_only: bool = False):
+def _gemm_pairs_factory(threshold: float, vecs=None):
     """applyInPandas kernel: cosine GEMM between the two sides of a
     block-pair group, emitting (id_a<id_b) CANDIDATE pairs at
     ``threshold − 1e-4`` (margin covers the final rounding half-step).
 
     ``vecs`` is an optional Broadcast of ``(sorted_ids, normalized
-    float64 matrix)``: when the shuffled rows carry no ``_v`` column
-    (``carry_vectors=False`` — the r11 volume fix, see
-    ``with_srp_buckets``), the kernel re-attaches vectors by binary
-    search on the broadcast index instead. The candidate set is
-    identical either way: both paths normalize with the SAME zero-norm
-    guard (a zero vector maps to the zero row → cos 0 against
-    everything, never NaN — ADVICE r11 #3 pinned the carry path to the
-    broadcast convention in tests).
-
-    ``cross_slab_only`` is the slab-pass mask (see
-    ``embedding_near_duplicates_srp``'s slab-sharded broadcast): rows
-    carry a ``_sx`` boolean (slab-membership flag) and only pairs with
-    ``_sx_a != _sx_b`` are emitted — within-slab pairs belong to that
-    slab's own diagonal pass, so each pair is emitted by exactly one
-    pass and the union over passes is the single-broadcast pair set.
+    float64 matrix)`` (:func:`_normalized_vectors_broadcast`): the
+    shuffled rows then carry no ``_v`` column, and the kernel
+    re-attaches vectors by binary search on the broadcast index. With
+    no broadcast the rows carry ``_v`` (attached by the SRP fetch join,
+    or by the exact twin past its budget) and the kernel normalizes it
+    here. The candidate set is identical either way: both normalize
+    with the SAME zero-norm guard (a zero vector maps to the zero row →
+    cos 0 against everything, never NaN — ADVICE r11 #3, pinned in
+    tests).
 
     The kernel PRUNES; it does not produce the reported value. BLAS
     summation order is blocked/pairwise, so its float64 cosine differs
@@ -372,15 +362,9 @@ def _gemm_pairs_factory(threshold: float, vecs=None, cross_slab_only: bool = Fal
                 return _empty()
             ids = pdf["_id"].to_numpy(dtype=np.int64)
             g = pdf["_g"].to_numpy(dtype=np.int64)
-            if vecs is not None and "_v" not in pdf.columns:
-                v = _lookup(ids)
-            else:
-                v = _normalize(_mat(pdf["_v"]))
+            v = _lookup(ids) if vecs is not None else _normalize(_mat(pdf["_v"]))
             home = (
                 pdf["_home"].to_numpy(dtype=bool) if "_home" in pdf.columns else None
-            )
-            slab = (
-                pdf["_sx"].to_numpy(dtype=bool) if cross_slab_only else None
             )
             order = np.argsort(g, kind="stable")
             gs = g[order]
@@ -398,9 +382,6 @@ def _gemm_pairs_factory(threshold: float, vecs=None, cross_slab_only: bool = Fal
                 if home is not None:
                     h = home[idx]
                     hit &= h[:, None] | h[None, :]
-                if slab is not None:
-                    sx = slab[idx]
-                    hit &= sx[:, None] != sx[None, :]
                 hit &= sub_ids[:, None] < sub_ids[None, :]
                 ia, ib = np.nonzero(hit)
                 if len(ia):
@@ -429,7 +410,7 @@ def _gemm_pairs_factory(threshold: float, vecs=None, cross_slab_only: bool = Fal
             return _empty()
         ids_a = side_a["_id"].to_numpy(dtype=np.int64)
         ids_b = side_b["_id"].to_numpy(dtype=np.int64)
-        if vecs is not None and "_v" not in pdf.columns:
+        if vecs is not None:
             na = _lookup(ids_a)
             nb = _lookup(ids_b)
         else:
@@ -437,10 +418,6 @@ def _gemm_pairs_factory(threshold: float, vecs=None, cross_slab_only: bool = Fal
             nb = _normalize(_mat(side_b["_v"]))
         cos = na @ nb.T
         hit = cos >= threshold - 1e-4
-        if cross_slab_only:
-            sx_a = side_a["_sx"].to_numpy(dtype=bool)
-            sx_b = side_b["_sx"].to_numpy(dtype=bool)
-            hit &= sx_a[:, None] != sx_b[None, :]
         if "_home" in pdf.columns:
             # Multi-probe groups: a pair needs at least one HOME side —
             # two probe copies meeting here have their own home bucket
@@ -499,13 +476,10 @@ def _finalize_pairs(
     )
 
 
-def _normalized_vector_data(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int | None = None
-):
-    """Driver-side ``(sorted_ids, row-normalized float64 matrix)`` for
-    the GEMM kernel's id→vector lookup path (``carry_vectors=False``).
-    One bounded driver pull — callers gate on an explicit byte budget
-    before calling (and the slab loop calls this per ≤budget slab).
+def _normalized_vectors_broadcast(emb: DataFrame, id_col: str, vec_col: str):
+    """Broadcast of ``(sorted_ids, row-normalized float64 matrix)`` for
+    the GEMM kernel's id→vector lookup path. One bounded driver pull —
+    callers gate on an explicit byte budget before calling.
 
     MEMORY MODEL (ADVICE r11 #1 — sizing guidance, not a hidden ×1):
     the transient ``toPandas`` materialization costs ~2-3× the n·dim·8
@@ -515,263 +489,26 @@ def _normalized_vector_data(
     ~python-workers-per-executor × budget. Size
     ``broadcast_corpus_bytes`` ≈ executor_overhead_mem / cores-per-
     executor; the 256 MB default assumes ≥8 GB of off-heap headroom at
-    32 workers (the local[32] test box) — LOWER it on thin executors
-    and let the slab loop absorb the difference."""
+    32 workers (the local[32] test box) — LOWER it on thin executors,
+    where the corpus then takes the co-partitioned fetch join."""
     import numpy as np
 
     pdf = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
     ids = pdf["_id"].to_numpy(dtype=np.int64)
     if not len(ids):
-        # An empty slab (id-hash imbalance on tiny corpora) must still
-        # merge/concatenate cleanly with its 2-D siblings.
-        return ids, np.zeros((0, dim or 1), dtype=np.float64)
-    try:
-        mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64, copy=False)
-    except (ValueError, TypeError):
-        mat = np.array([list(v) for v in pdf["_v"]], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, mat = ids[order], mat[order]
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms
-
-
-def _normalized_vectors_broadcast(emb: DataFrame, id_col: str, vec_col: str):
-    """Broadcast wrapper of :func:`_normalized_vector_data` (see its
-    docstring for the per-Python-worker memory model)."""
-    return emb.sparkSession.sparkContext.broadcast(
-        _normalized_vector_data(emb, id_col, vec_col)
-    )
-
-
-# Seed decorrelating the slab id-hash from the shard (7919), pack (6007)
-# and sample (104729) hashes.
-_SLAB_SEED = 9377
-
-
-def _slab_expr(id_col, n_slabs: int):
-    """Deterministic slab tag of an id column: pmod(xxhash64(id, seed),
-    n_slabs). Evaluated Spark-side only (filters + the ``_sx`` flag) —
-    the kernel never recomputes it.
-
-    The id is cast to long BEFORE hashing: xxhash64 is type-dependent
-    (hash(1:int) != hash(1:long)), and this expression is evaluated both
-    on the raw ``id_col`` (pass membership, slab matrix pulls) and on
-    the post-bucketing ``_id`` column, which the kernel schema fixes at
-    LongType — without the canonical cast an IntegerType id would give
-    the two call sites DIFFERENT slab tags and silently drop cross-slab
-    pairs (ADVICE r12 #1, reproduced: 3128 of 8325 pairs lost at S=3)."""
-    return F.pmod(
-        F.xxhash64(F.col(id_col).cast("long"), F.lit(_SLAB_SEED)), F.lit(n_slabs)
-    )
-
-
-def _slab_pass_candidates(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    num_planes: int,
-    dim: int,
-    num_tables: int,
-    target_block_rows: int,
-    size_sample_mod: int,
-    probes: int,
-    n_slabs: int,
-) -> DataFrame:
-    """Candidate pairs via the SLAB-SHARDED broadcast loop (VERDICT r11
-    #3 — closing the broadcast-budget cliff). RETAINED FOR A/B AND THE
-    INVARIANCE PINS, not production: the r13 same-box A/B measured the
-    co-partitioned fetch join (``_fetch_join_candidates``, now the
-    past-budget default) at 134.7 s vs this loop's 296.4 s at S=3 on
-    the same deep-cap plan, and the loop's S× cost model loses further
-    ground as S grows. Reachable via ``past_budget="slab"`` only.
-
-    Mechanism: ids hash into ``n_slabs``
-    slabs, each slab's normalized matrix ≤ the byte budget, and every
-    unordered slab pair (si ≤ sj) runs ONE bucketed GEMM pass over only
-    the rows of those two slabs, with the pass broadcast holding just
-    the two slabs' vectors. A candidate pair (a, b) needs a shared
-    (table, bucket) — its SRP codes don't depend on the slab filter —
-    so it appears in exactly the (slab(a), slab(b)) pass: diagonal
-    passes keep within-slab pairs, off-diagonal passes mask to
-    cross-slab (``_sx``), and the union over passes IS the
-    single-broadcast pair set (pinned in tests).
-
-    Cost model vs the vector-carrying fallback: a row in slab s joins
-    its diagonal pass plus the S−1 off-diagonal passes — S passes — so
-    total id-only (~26 B) emit+shuffle volume is S× the
-    single-broadcast run, cheaper than carrying ~300 B vectors while
-    S < vector_bytes/id_bytes (≈12 at 64-dim float32); the caller caps
-    S at ``max_broadcast_slabs`` and reverts to carry past it. SRP
-    hashing also runs S× (once per pass a row joins); the per-bucket
-    SHARD PLAN is computed once globally and reused (conservative for
-    any subset). Measured at the r12 deep-cap plan (k=13/L=64/T=6,
-    200k adversarial vectors): budget forced to 40 MB → S=3 reads
-    2.45× the same-run single-broadcast wall — at-model (≤S×, fixed
-    costs amortized) and ~3× under the 1,533 s carry wall the budget
-    cliff used to reinstate; the cliff-adjacent S=2 case is measured
-    in SURVEY's round log.
-
-    Execution is EAGER per pass (persist + count) so at most one pass
-    broadcast (2 slabs ≈ 2× budget per Python worker) is resident
-    executor-side at a time — the previous pass's broadcast is
-    unpersisted as soon as its candidates are materialized. Slab
-    matrices are pulled once (S bounded driver pulls) and staged on
-    driver-local disk between passes, so driver memory stays ~3× budget
-    while driver disk holds one corpus copy for the loop's duration."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from .cache import persist_tracked
-
-    sc = emb.sparkSession.sparkContext
-    probes = min(max(0, probes), num_planes)
-    slab_of = _slab_expr(id_col, n_slabs)
-    shards = persist_tracked(
-        srp_shard_plan(
-            emb, id_col, vec_col, num_planes, dim, num_tables,
-            target_block_rows, size_sample_mod, probes,
-        )
-    )
-    # Each pass RE-HASHES its two slabs (S× total hashing) rather than
-    # bucketing once into a persisted id-only frame and filtering it per
-    # pass: both designs were measured at the deep-cap plan (k=13/L=64/
-    # T=6, S=3) and the bucket-once variant read 3.65× the same-run
-    # single-broadcast wall vs 2.45× for re-hashing — the S(S+1)/2
-    # scans of the ~90M-copy cached frame (plus its materialization)
-    # cost more than the redundant matmul+emit they avoid. Re-measure
-    # before "fixing" this again (the r11 cost-attribution lesson).
-    parts = []
-    tmpdir = tempfile.mkdtemp(prefix="srp_slabs_")
-    try:
-        sizes = []
-        for s in range(n_slabs):
-            ids, mat = _normalized_vector_data(
-                emb.filter(slab_of == s), id_col, vec_col, dim=dim
-            )
-            np.save(f"{tmpdir}/ids_{s}.npy", ids)
-            np.save(f"{tmpdir}/mat_{s}.npy", mat)
-            sizes.append(len(ids))
-
-        def _load(s: int):
-            return np.load(f"{tmpdir}/ids_{s}.npy"), np.load(f"{tmpdir}/mat_{s}.npy")
-
-        for si in range(n_slabs):
-            for sj in range(si, n_slabs):
-                if sizes[si] + sizes[sj] == 0:
-                    continue
-                ids_i, mat_i = _load(si)
-                if sj == si:
-                    data = (ids_i, mat_i)
-                    pass_emb = emb.filter(slab_of == si)
-                    flag = None
-                else:
-                    ids_j, mat_j = _load(sj)
-                    merged_ids = np.concatenate([ids_i, ids_j])
-                    order = np.argsort(merged_ids)
-                    data = (
-                        merged_ids[order],
-                        np.concatenate([mat_i, mat_j])[order],
-                    )
-                    pass_emb = emb.filter(slab_of.isin(si, sj))
-                    flag = _slab_expr("_id", n_slabs) == si
-                b = sc.broadcast(data)
-                sharded = _srp_sharded_groups(
-                    pass_emb, id_col, vec_col, num_planes, dim, num_tables,
-                    target_block_rows, size_sample_mod, probes=probes,
-                    n_rows_hint=sizes[si] + (sizes[sj] if sj != si else 0),
-                    carry_vectors=False, shards_df=shards, slab_expr=flag,
-                )
-                part = persist_tracked(
-                    sharded.groupBy("_pa", "_pb")
-                    .applyInPandas(
-                        _gemm_pairs_factory(
-                            threshold, b, cross_slab_only=flag is not None
-                        ),
-                        schema=_PAIR_SCHEMA,
-                    )
-                    .select("id_a", "id_b")
-                    .distinct()
-                )
-                part.count()  # run the pass NOW: one live pass broadcast at a time
-                # Executor/worker copies drop here; the driver keeps the
-                # value (the kernel closure pins the Broadcast object, so
-                # a persisted-part recompute can still refetch it).
-                b.unpersist(blocking=False)
-                parts.append(part)
-    finally:
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # Per-pass distinct is global: a pair lives in exactly one pass.
-    return out
-
-
-def _fetch_join_candidates(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    num_planes: int,
-    dim: int,
-    num_tables: int,
-    target_block_rows: int,
-    size_sample_mod: int,
-    probes: int,
-    n_rows_hint: int | None,
-) -> DataFrame:
-    """Candidate pairs via the CO-PARTITIONED id→vector FETCH JOIN — the
-    DEFAULT past the single-broadcast budget (VERDICT r12 #3; it
-    replaced both the slab loop and the old vector-carrying fallback as
-    the production path after the same-box A/B below).
-
-    Rows go through the SRP hashing/sharding pipeline id-only (~26 B per
-    copy through the Python emit and the id shuffle — the r11 volume
-    discipline), and vectors are re-attached JVM-side by ONE equi-join
-    of the exploded membership against the (id, vector) projection:
-    both sides hash-partition on ``_id`` (each id's ~L·(1+T)·S copies
-    co-locate with its single vector row), the join emits the same
-    (id, group, home, vector) rows the carry path builds in Python, and
-    the group shuffle + Arrow kernel feed are unchanged.
-
-    Cost model vs carry: the vector payload (~dim·4 B ≈ 300 B at 64-d)
-    crosses ONE extra JVM exchange (n·300 B join build + copies·300 B
-    group shuffle vs carry's copies·300 B emit+shuffle) but NEVER
-    crosses the Python→JVM Arrow emit, which the r11 decomposition
-    measured as the dominant term of the carried wall (emit+shuffle
-    1,538 s of a 1,533 s probed run). Unlike the slab loop there is no
-    S× pass multiplier, no large broadcast resident per Python worker,
-    and no driver-side corpus staging — cost is flat in corpus bytes,
-    so it holds at 10⁹-vector scale where S ≫ ``max_broadcast_slabs``.
-
-    Measured (r13 same-box A/B, deep-cap plan k=13/L=64/T=6 on the 200k
-    adversarial corpus, 8,040,589 pairs bit-identical in every run):
-    fetch 134.7-161.0 s ≈ 1.1-1.3× the 122.7 s single-broadcast wall —
-    vs the slab loop's 296.4 s at S=3 (2.42×, at its S× model, so worse
-    everywhere and unusable past S ≈ 12) and the r11 carry wall's
-    1,533 s. Pair-set invariance vs the broadcast/slab/carry paths is
-    pinned in tests."""
-    sharded = _srp_sharded_groups(
-        emb, id_col, vec_col, num_planes, dim, num_tables, target_block_rows,
-        size_sample_mod, probes=probes, n_rows_hint=n_rows_hint,
-        carry_vectors=False,
-    )
-    # Cast matches the pipeline's LongType _id (the kernel schema fixes
-    # it) so the join never falls back to a type-coerced comparison.
-    vecs = emb.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_v")
-    )
-    return (
-        sharded.join(vecs, "_id")
-        .groupBy("_pa", "_pb")
-        .applyInPandas(_gemm_pairs_factory(threshold), schema=_PAIR_SCHEMA)
-        .select("id_a", "id_b")
-        .distinct()  # a pair found in several tables/shard-pairs is one candidate
-    )
+        # An empty corpus still broadcasts a 2-D matrix.
+        data = ids, np.zeros((0, 1), dtype=np.float64)
+    else:
+        try:
+            mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64, copy=False)
+        except (ValueError, TypeError):
+            mat = np.array([list(v) for v in pdf["_v"]], dtype=np.float64)
+        order = np.argsort(ids)
+        ids, mat = ids[order], mat[order]
+        norms = np.linalg.norm(mat, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        data = ids, mat / norms
+    return emb.sparkSession.sparkContext.broadcast(data)
 
 
 def embedding_near_duplicates(
@@ -912,14 +649,12 @@ def _srp_sharded_groups(
     size_sample_mod: int = 20,
     probes: int = 0,
     n_rows_hint: int | None = None,
-    carry_vectors: bool = True,
-    shards_df: DataFrame | None = None,
-    slab_expr: Column | None = None,
 ) -> DataFrame:
-    """SRP bucket assignment + mega-bucket sharding: rows tagged with
-    the (``_pa``, ``_pb``, ``_is_a``, ``_home``) group layout the GEMM
-    kernel expects, with no group side larger than
-    ~``target_block_rows``.
+    """SRP bucket assignment + mega-bucket sharding: id-only rows tagged
+    with the (``_pa``, ``_pb``, ``_is_a``, ``_home``) group layout the
+    GEMM kernel expects, with no group side larger than
+    ~``target_block_rows``. Callers attach vectors (a kernel broadcast
+    or a join on ``_id``).
 
     With ``probes`` > 0 each row additionally lands in its multi-probe
     buckets marked ``_home = false``; the kernel only emits pairs with
@@ -970,15 +705,10 @@ def _srp_sharded_groups(
     The pair set is invariant — the cap only changes which Arrow group
     a whole bucket rides in.
 
-    ``shards_df`` lets a caller running SEVERAL passes over subsets of
-    ``emb`` (the slab-sharded broadcast loop) reuse ONE global sizing
-    pass: global estimates are conservative for any subset (a pass sees
-    ≤ the full bucket), so shard splits stay sound. Must be the
-    (_g, _n, _s) frame :func:`srp_shard_plan` computes.
-
-    ``slab_expr`` (a boolean Column over the post-bucketing ``_id``
-    column) is carried through to the kernel as ``_sx`` — the
-    slab-membership flag the cross-slab mask keys on.
+    The per-bucket shard plan is (_g, _n, _s): estimated bucket size
+    ``_n`` (scaled up from the 1/``size_sample_mod`` sample) and shard
+    count ``_s`` = ⌈_n/target⌉, broadcast-joined onto the bucketed
+    rows.
     """
     # Clamp ONCE at the entry so the emit pass (with_srp_buckets, which
     # clamps internally) and the sizing pass (_srp_bucket_sizes, which
@@ -986,45 +716,26 @@ def _srp_sharded_groups(
     # would make _srp_table_codes argsort-index past k in the sizing
     # pass and desynchronize shard sizing from emission (ADVICE r10 #2).
     probes = min(max(0, probes), num_planes)
-    vcols = ["_v"] if carry_vectors else []
     tagged = with_srp_buckets(
         emb, id_col, vec_col, num_planes, dim, num_tables=num_tables, probes=probes,
-        carry_vectors=carry_vectors,
     ).select(
         "_id",
-        *vcols,
         (F.col("_table").cast("long") * (1 << num_planes) + F.col("_bucket")).alias("_g"),
         "_home",
-        *([slab_expr.alias("_sx")] if slab_expr is not None else []),
     )
-    shards = shards_df if shards_df is not None else srp_shard_plan(
-        emb, id_col, vec_col, num_planes, dim, num_tables, target_block_rows,
-        size_sample_mod, probes,
+    sampled = emb if size_sample_mod <= 1 else emb.filter(
+        F.pmod(F.xxhash64(F.col(id_col), F.lit(104729)), F.lit(size_sample_mod)) == 0
     )
-    return _sharded_groups_from_tagged(
-        tagged, shards, target_block_rows, num_tables, probes, n_rows_hint,
-        extra_cols=vcols + (["_sx"] if slab_expr is not None else []),
+    est = _srp_bucket_sizes(
+        sampled, vec_col, num_planes, dim, num_tables, probes=probes
+    ).select("_g", (F.col("_n") * size_sample_mod).alias("_n"))
+    shards = est.select(
+        "_g",
+        "_n",
+        F.greatest(
+            F.lit(1), F.ceil(F.col("_n") / target_block_rows)
+        ).cast("int").alias("_s"),
     )
-
-
-def _sharded_groups_from_tagged(
-    tagged: DataFrame,
-    shards: DataFrame,
-    target_block_rows: int,
-    num_tables: int,
-    probes: int,
-    n_rows_hint: int | None,
-    extra_cols: list[str],
-) -> DataFrame:
-    """The shard/pack group layout over an ALREADY-BUCKETED frame
-    (``_id``, ``_g``, ``_home`` + ``extra_cols``): join the shard plan,
-    explode each row to its S block-pair copies, assign the composite
-    (or packed) group keys. Factored out as the shared tail of
-    :func:`_srp_sharded_groups` (every caller reaches it through there;
-    the slab loop deliberately re-hashes its two slabs per pass rather
-    than bucketing once and filtering — the bucket-once variant was
-    measured at 3.65× vs 2.45× the single-broadcast wall, see the cost
-    note in :func:`_slab_pass_candidates`)."""
     # Composite group key _g·2³¹ + shard stays unique across buckets and
     # inside int64 (_g ≤ L·2^k ≪ 2³²; shard count < 2³¹ by construction).
     # Packed S=1 buckets take the NEGATIVE id −1−pack instead.
@@ -1050,7 +761,6 @@ def _sharded_groups_from_tagged(
         )
         .select(
             "_id",
-            *extra_cols,
             "_g",
             "_s",
             "_n",
@@ -1060,44 +770,12 @@ def _sharded_groups_from_tagged(
         )
         .select(
             "_id",
-            *extra_cols,
             "_g",
             pa.alias("_pa"),
             pb.alias("_pb"),
             (F.col("_shard") == F.least("_shard", "_j")).alias("_is_a"),
             "_home",
         )
-    )
-
-
-def srp_shard_plan(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    num_planes: int,
-    dim: int,
-    num_tables: int,
-    target_block_rows: int,
-    size_sample_mod: int = 20,
-    probes: int = 0,
-) -> DataFrame:
-    """The (_g, _n, _s) per-bucket shard plan ``_srp_sharded_groups``
-    consumes: estimated bucket size ``_n`` (scaled up from the
-    1/``size_sample_mod`` sample) and shard count ``_s`` = ⌈_n/target⌉.
-    Factored out so the slab-sharded broadcast loop can compute it once
-    and feed every slab pass the same (conservative) plan."""
-    sampled = emb if size_sample_mod <= 1 else emb.filter(
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(104729)), F.lit(size_sample_mod)) == 0
-    )
-    est = _srp_bucket_sizes(
-        sampled, vec_col, num_planes, dim, num_tables, probes=probes
-    ).select("_g", (F.col("_n") * size_sample_mod).alias("_n"))
-    return est.select(
-        "_g",
-        "_n",
-        F.greatest(
-            F.lit(1), F.ceil(F.col("_n") / target_block_rows)
-        ).cast("int").alias("_s"),
     )
 
 
@@ -1244,8 +922,6 @@ def embedding_near_duplicates_srp(
     max_probes: int = 6,
     probes: int | None = None,
     broadcast_corpus_bytes: int = 256 << 20,
-    max_broadcast_slabs: int = 8,
-    past_budget: str = "fetch",
 ) -> DataFrame:
     """SRP-blocked embedding near-dup — the 100 TB path.
 
@@ -1325,6 +1001,30 @@ def embedding_near_duplicates_srp(
     how skewed the bucket distribution gets. The quadratic WORK inside
     a mega-bucket is inherent (those pairs must be verified); the shard
     turns it from one unbounded task into many bounded ones.
+
+    VECTORS INTO THE KERNEL: rows go through the bucket emit and its
+    shuffle id-only (``with_srp_buckets``; the r11 deep-cap
+    decomposition measured the per-copy vector payload as essentially
+    the whole probed wall). The kernel gets vectors one of two ways:
+
+    - BROADCAST, when the count is known and the normalized corpus
+      matrix fits ``broadcast_corpus_bytes`` (n·dim·8 B; 256 MB ≈ 500k
+      64-dim vectors — see ``_normalized_vectors_broadcast``'s
+      per-Python-worker memory model): the kernel looks vectors up by
+      binary search on the broadcast id index.
+    - the CO-PARTITIONED FETCH JOIN otherwise (past the budget, or with
+      ``target_bucket_rows=None``, where n is never counted): one JVM
+      equi-join of the sharded rows against the (id, vector)
+      projection, both sides hash-partitioned on ``_id``, before the
+      group shuffle. The vector payload never crosses the Python emit,
+      there is no large broadcast per Python worker and no driver-side
+      corpus pull, so cost is flat in corpus bytes. Measured (r13
+      same-box A/B, deep-cap plan k=13/L=64/T=6 on the 200k adversarial
+      corpus, 8,040,589 pairs bit-identical in every run): 134.7-161.0 s
+      ≈ 1.1-1.3× the 122.7 s single-broadcast wall.
+
+    Both routes build the same sharded frame and run the same kernel,
+    so the pair set does not depend on the route (pinned in tests).
     """
     sized_probes = 0
     n_rows = None
@@ -1334,84 +1034,32 @@ def embedding_near_duplicates_srp(
             n_rows, num_planes, num_tables, threshold, target_bucket_rows,
             max_tables, max_probes,
         )
-    # BROADCAST-VECTORS path (the r11 deep-cap volume fix): every row is
-    # emitted L·(1+T)× through the bucket shuffle, and the decomposition
-    # measured the per-copy ~300 B vector payload — not the kernel, not
-    # the group count — as essentially the whole probed wall (emit+
-    # shuffle-only 1,538 s of a 1,533 s run at k=12/L=64/T=6). When the
-    # normalized corpus matrix fits the broadcast budget (n·dim·8 B ≤
-    # ``broadcast_corpus_bytes`` — 256 MB ≈ 500k 64-dim vectors; note
-    # each PYTHON WORKER unpickles its own copy, so executor-side peak
-    # is ~workers-per-executor × budget — see _normalized_vector_data's
-    # memory model, ADVICE r11 #1), rows shuffle as (id, group, home)
-    # only and the kernel re-attaches vectors by binary search on the
-    # broadcast. PAST the budget (VERDICT r11 #3): the SLAB-SHARDED loop
-    # — S = ⌈bytes/budget⌉ id-hash slabs, one bucketed pass per slab
-    # pair with a 2-slab broadcast, pair set provably invariant (each
-    # pair lives in exactly its (slab_a, slab_b) pass; pinned in tests)
-    # — keeps id-only shuffles at (S+1)× the single-broadcast volume.
-    # Past the budget the DEFAULT is now the CO-PARTITIONED FETCH JOIN
-    # (``past_budget="fetch"``, VERDICT r12 #3): vectors re-attach by
-    # one JVM equi-join on _id — flat in corpus bytes, no S× pass
-    # multiplier, vector payload never crosses the Python emit. The r13
-    # same-box A/B at the deep-cap plan (k=13/L=64/T=6, 200k
-    # adversarial vectors, 8,040,589 pairs bit-identical in every run)
-    # read fetch 134.7-161.0 s ≈ 1.1-1.3× the 122.7 s single-broadcast
-    # wall vs the slab loop's 296.4 s at S=3 (2.42×, at its S× model) —
-    # fetch wins EVERY past-budget regime and holds at 10⁹ vectors
-    # where S ≫ max_broadcast_slabs, so ``past_budget="slab"`` (the S ≤
-    # max_broadcast_slabs loop) and ``"carry"`` (vector-carrying rows,
-    # the r11-measured 1,533 s wall at this plan) are retained for A/B
-    # and the invariance pins, not as production paths. Explicit-plan
-    # calls with no sizing count (target_bucket_rows=None) still carry:
-    # the regime can't be detected without n.
-    probes_eff = sized_probes if probes is None else probes
     vecs_b = None
-    carry = True
-    fetch = False
-    n_slabs = 1
-    if n_rows is not None:
-        need = n_rows * dim * 8
-        if need <= broadcast_corpus_bytes:
-            vecs_b = _normalized_vectors_broadcast(emb, id_col, vec_col)
-            carry = False
-        elif past_budget == "fetch":
-            fetch = True
-            carry = False
-        elif (
-            past_budget == "slab"
-            and broadcast_corpus_bytes > 0
-            and -(-need // broadcast_corpus_bytes) <= max_broadcast_slabs
-        ):
-            n_slabs = -(-need // broadcast_corpus_bytes)
-            carry = False
-    if n_slabs > 1:
-        cand = _slab_pass_candidates(
-            emb, threshold, id_col, vec_col, num_planes, dim, num_tables,
-            target_block_rows, size_sample_mod, probes_eff, n_slabs,
+    if n_rows is not None and n_rows * dim * 8 <= broadcast_corpus_bytes:
+        vecs_b = _normalized_vectors_broadcast(emb, id_col, vec_col)
+    sharded = _srp_sharded_groups(
+        emb, id_col, vec_col, num_planes, dim, num_tables, target_block_rows,
+        size_sample_mod,
+        probes=sized_probes if probes is None else probes,
+        # Pack small buckets into bounded kernel groups — the sizing
+        # count is already paid above; without it (explicit-plan calls)
+        # packing is skipped and the per-bucket group layout is kept.
+        n_rows_hint=n_rows,
+    )
+    if vecs_b is None:
+        # Fetch join. The cast matches the emit's LongType _id (the
+        # kernel schema fixes it), so the join never falls back to a
+        # type-coerced comparison.
+        sharded = sharded.join(
+            emb.select(F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_v")),
+            "_id",
         )
-    elif fetch:
-        cand = _fetch_join_candidates(
-            emb, threshold, id_col, vec_col, num_planes, dim, num_tables,
-            target_block_rows, size_sample_mod, probes_eff, n_rows,
-        )
-    else:
-        sharded = _srp_sharded_groups(
-            emb, id_col, vec_col, num_planes, dim, num_tables, target_block_rows,
-            size_sample_mod,
-            probes=probes_eff,
-            # Pack small buckets into bounded kernel groups — the sizing
-            # count is already paid above; without it (explicit-plan calls)
-            # packing is skipped and the per-bucket group layout is kept.
-            n_rows_hint=n_rows,
-            carry_vectors=carry,
-        )
-        cand = (
-            sharded.groupBy("_pa", "_pb")
-            .applyInPandas(_gemm_pairs_factory(threshold, vecs_b), schema=_PAIR_SCHEMA)
-            .select("id_a", "id_b")
-            .distinct()  # a pair found in several tables/shard-pairs is one candidate
-        )
+    cand = (
+        sharded.groupBy("_pa", "_pb")
+        .applyInPandas(_gemm_pairs_factory(threshold, vecs_b), schema=_PAIR_SCHEMA)
+        .select("id_a", "id_b")
+        .distinct()  # a pair found in several tables/shard-pairs is one candidate
+    )
     return _finalize_pairs(emb, cand, threshold, id_col, vec_col).orderBy("id_a", "id_b")
 
 

@@ -83,11 +83,12 @@ def with_batch_position(raw: DataFrame) -> DataFrame:
     ).select(*[f.name for f in BATCH_SCHEMA.fields])
 
 
-def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
+def flatten(nested: DataFrame) -> DataFrame:
     """Nested records → one row per (record, item, finding), with ``ord``.
 
     Output columns: RECORD_ID, LANG_NO, ORG_ID, ITEM_CODE, DIAG_CODE,
-    COMMENT, ord, request.
+    COMMENT, ord, request. Findings whose COMMENT is null or blank are
+    dropped, as in the reference.
     """
     # Request echo (F8): reconstruct the original record JSON once, here.
     with_req = nested.withColumn(
@@ -131,7 +132,5 @@ def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
         ).alias("ord"),
         "request",
     )
-    if drop_empty_comments:
-        # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
-        flat = flat.filter(F.trim(F.coalesce(F.col("COMMENT"), F.lit(""))) != "")
-    return flat
+    # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
+    return flat.filter(F.trim(F.coalesce(F.col("COMMENT"), F.lit(""))) != "")

@@ -52,22 +52,19 @@ _PROMPTS = {
 class SummaryRewriter:
     """Per-language text rewriter with mock fallback.
 
-    mode='azure' talks to an Azure OpenAI deployment when
-    AZURE_OPENAI_ENDPOINT / AZURE_OPENAI_API_KEY are set; otherwise it is
-    a deterministic mock (``"[LLM_OUTPUT]" + text``).
+    Talks to an Azure OpenAI deployment when AZURE_OPENAI_ENDPOINT /
+    AZURE_OPENAI_API_KEY are set; otherwise it is a deterministic mock
+    (``"[LLM_OUTPUT]" + text``).
     """
 
     def __init__(
         self,
         lang_no: str,
-        mode: str = "azure",
         model: str = "gpt-4o",
         max_workers: int = 3,
         max_retries: int = 3,
         base_delay: float = 1.0,
     ):
-        if mode.lower() != "azure":
-            raise ValueError(f"unsupported mode: {mode!r} (only 'azure')")
         self.lang_no = str(lang_no)
         self.model = model
         self.max_workers = max_workers
@@ -148,9 +145,7 @@ _REWRITE_SCHEMA = T.StructType(
 )
 
 
-def rewrite_distinct_summaries(
-    df: DataFrame, mode: str = "azure", model: str | None = None
-) -> DataFrame:
+def rewrite_distinct_summaries(df: DataFrame, model: str | None = None) -> DataFrame:
     """distinct (LANG_NO, SUMMARY) → (…, SUMMARY_REWRITTEN), persisted.
 
     ``df`` must carry LANG_NO and a generic SUMMARY column. Keys are
@@ -174,7 +169,7 @@ def rewrite_distinct_summaries(
                 continue
             parts = []
             for lang, sub in pdf.groupby("LANG_NO", sort=False):
-                rewriter = SummaryRewriter(lang_no=str(lang), mode=mode, model=model)
+                rewriter = SummaryRewriter(lang_no=str(lang), model=model)
                 mapping = rewriter.rewrite_batch(sub["SUMMARY"].tolist())
                 parts.append(
                     pd.DataFrame(

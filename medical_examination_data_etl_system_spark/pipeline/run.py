@@ -32,7 +32,6 @@ def process_records(
     records: list[dict[str, Any]] | dict[str, Any],
     dims: dict[str, DataFrame] | None = None,
     output_dir: str | None = None,
-    llm_mode: str = "azure",
 ) -> DataFrame:
     """records → (record_id, report, request), ordered by batch position.
 
@@ -54,14 +53,10 @@ def process_records(
             dims = resolve_dims(spark, flat)
     with timed_stage("enrich"):
         enriched = enrich(flat, dims)
-    return reports_from_fact(enriched, output_dir=output_dir, llm_mode=llm_mode)
+    return reports_from_fact(enriched, output_dir=output_dir)
 
 
-def reports_from_fact(
-    fact: DataFrame,
-    output_dir: str | None = None,
-    llm_mode: str = "azure",
-) -> DataFrame:
+def reports_from_fact(fact: DataFrame, output_dir: str | None = None) -> DataFrame:
     """E3 parity: any SUBSET ∪ {ord, request} fact frame → reports."""
     with timed_stage("clean"):
         # Persisted barrier (r13): `cleaned` has two consumers — the
@@ -79,7 +74,7 @@ def reports_from_fact(
 
     with timed_stage("llm_rewrite"):
         generic = with_generic_columns(cleaned)
-        rewrites = rewrite_distinct_summaries(generic, mode=llm_mode)
+        rewrites = rewrite_distinct_summaries(generic)
     with timed_stage("render"):
         reports = render_reports_sql(cleaned, rewrites).orderBy("rec_ord").drop("rec_ord")
 

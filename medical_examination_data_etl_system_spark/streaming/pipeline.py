@@ -38,7 +38,6 @@ def stream_reports(
     output_path: str,
     checkpoint: str,
     dims: dict[str, DataFrame] | None = None,
-    llm_mode: str = "azure",
 ):
     """records stream → rendered reports appended to parquet.
 
@@ -57,7 +56,7 @@ def stream_reports(
         with cache_scope():
             flat = flatten(with_batch_position(batch_df))
             enriched = enrich(flat, dims)
-            reports = reports_from_fact(enriched, llm_mode=llm_mode)
+            reports = reports_from_fact(enriched)
             reports.write.mode("append").parquet(output_path)
 
     return (

@@ -165,6 +165,28 @@ def test_embedding_near_dup_never_packs_blocks(spark):
         assert "FlatMapGroupsInPandas" in plan
 
 
+def test_srp_bucket_emit_is_id_only(spark):
+    """The SRP bucket emit (``with_srp_buckets``' ``_assign`` sweep)
+    outputs ids only on every route that gets vectors into the kernel:
+    the broadcast (budget fits), the fetch join (budget 0) and the
+    uncounted explicit plan (``target_bucket_rows=None``). Each row is
+    emitted L·(1+probes)×, so a vector column there is carried through
+    the Python emit and the bucket shuffle on every copy."""
+    import re
+
+    from medical_examination_data_etl_system_spark.operators import similarity
+
+    emb = load(spark, SF_DIR, "embeddings")
+    for kw in ({}, {"broadcast_corpus_bytes": 0}, {"target_bucket_rows": None}):
+        df = similarity.embedding_near_duplicates_srp(emb, threshold=0.4, **kw)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        outputs = re.findall(r"MapInPandas _assign\(.*?\)#\d+, \[([^\]]*)\]", plan)
+        assert outputs, f"no bucket emit in the plan for {kw}"
+        for out in outputs:
+            cols = [c.split("#")[0] for c in out.split(", ")]
+            assert cols == ["_id", "_table", "_bucket", "_home"], (kw, cols)
+
+
 def test_curation_operator_plan_shapes(spark):
     """Curation operators' shuffle budget (VERDICT r3 #6): sampling,
     redaction, and chunking are MAP-ONLY (zero Exchange — the membership

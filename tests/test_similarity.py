@@ -381,6 +381,8 @@ def test_srp_bucket_packing_invariant(spark):
         base = centers[i % 3] if i % 4 else rng.normal(size=64)
         rows.append((i, (base + rng.normal(scale=0.05, size=64)).astype("float32").tolist()))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    # The sharded rows are id-only: the kernel looks vectors up here.
+    vecs = similarity._normalized_vectors_broadcast(emb, "vec_id", "embedding")
 
     def run(hint):
         sharded = similarity._srp_sharded_groups(
@@ -391,7 +393,7 @@ def test_srp_bucket_packing_invariant(spark):
         pairs = sorted(
             (r["id_a"], r["id_b"])
             for r in sharded.groupBy("_pa", "_pb")
-            .applyInPandas(similarity._gemm_pairs_factory(0.8), schema=similarity._PAIR_SCHEMA)
+            .applyInPandas(similarity._gemm_pairs_factory(0.8, vecs), schema=similarity._PAIR_SCHEMA)
             .select("id_a", "id_b")
             .distinct()
             .collect()
@@ -406,10 +408,11 @@ def test_srp_bucket_packing_invariant(spark):
 
 
 def test_srp_broadcast_vectors_invariant(spark):
-    """The broadcast-vectors path (r11 deep-cap volume fix: rows shuffle
-    as (id, group, home) and the kernel re-attaches vectors from a
-    broadcast) must emit the IDENTICAL final pair set as the
-    vector-carrying rows path at the same plan."""
+    """The two ways vectors reach the GEMM kernel — the broadcast lookup
+    (r11 deep-cap volume fix) and the co-partitioned fetch join — must
+    emit the IDENTICAL final pair set at the same plan, including an
+    explicit plan with no sizing count (``target_bucket_rows=None``),
+    which takes the fetch join without bucket packing."""
     import numpy as np
 
     rng = np.random.default_rng(37)
@@ -420,29 +423,27 @@ def test_srp_broadcast_vectors_invariant(spark):
         rows.append((i, (base + rng.normal(scale=0.05, size=64)).astype("float32").tolist()))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
 
-    def pairs(budget, past_budget="fetch"):
+    def pairs(**kw):
         return sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
             for r in similarity.embedding_near_duplicates_srp(
-                emb, threshold=0.8, num_tables=2, size_sample_mod=1,
-                broadcast_corpus_bytes=budget, past_budget=past_budget,
+                emb, threshold=0.8, num_tables=2, size_sample_mod=1, **kw
             ).collect()
         )
 
-    rows_path = pairs(0, "carry")    # budget 0: vectors ride the rows
-    fetch_path = pairs(0)            # budget 0: co-partitioned fetch join
-    bcast_path = pairs(256 << 20)    # broadcast lookup
-    assert rows_path, "corpus should produce near-dup pairs"
-    assert bcast_path == rows_path, "broadcast path changed the pair set"
-    assert fetch_path == rows_path, "fetch-join path changed the pair set"
+    bcast_path = pairs(broadcast_corpus_bytes=256 << 20)  # broadcast lookup
+    fetch_path = pairs(broadcast_corpus_bytes=0)          # co-partitioned fetch join
+    uncounted = pairs(target_bucket_rows=None)            # n never counted: fetch join
+    assert bcast_path, "corpus should produce near-dup pairs"
+    assert fetch_path == bcast_path, "fetch-join path changed the pair set"
+    assert uncounted == bcast_path, "uncounted fetch-join path changed the pair set"
 
 
-def test_srp_slab_sharded_broadcast_invariant(spark):
-    """VERDICT r11 #3: past the broadcast budget the slab-sharded loop
-    (one bucketed pass per slab pair, 2-slab broadcast each) must emit
-    the IDENTICAL final pair set as the single-broadcast path and the
-    vector-carrying fallback — every pair lives in exactly its
-    (slab_a, slab_b) pass."""
+def test_srp_fetch_past_the_budget_matches_broadcast(spark):
+    """VERDICT r11 #3: past the broadcast budget the co-partitioned fetch
+    join must emit the IDENTICAL final pair set as the single broadcast
+    on the same corpus — for LongType and IntegerType ids alike (the
+    join casts the id to the emit's LongType ``_id``)."""
     import numpy as np
 
     rng = np.random.default_rng(41)
@@ -454,46 +455,31 @@ def test_srp_slab_sharded_broadcast_invariant(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     full = 300 * 32 * 8
 
-    def pairs(budget, slabs=8, past_budget="fetch"):
+    def pairs(frame, budget):
         return sorted(
             (r["id_a"], r["id_b"], r["cos_sim"])
             for r in similarity.embedding_near_duplicates_srp(
-                emb, threshold=0.8, dim=32, num_tables=4, size_sample_mod=1,
-                broadcast_corpus_bytes=budget, max_broadcast_slabs=slabs,
-                past_budget=past_budget,
+                frame, threshold=0.8, dim=32, num_tables=4, size_sample_mod=1,
+                broadcast_corpus_bytes=budget,
             ).collect()
         )
 
-    single = pairs(full + 1)
-    slab3 = pairs(full // 3 + 1, past_budget="slab")  # S = 3 → 6 passes
-    carry = pairs(full // 3 + 1, slabs=0, past_budget="carry")
-    fetch = pairs(full // 3 + 1)         # past-budget default: fetch join
+    single = pairs(emb, full + 1)
+    fetch = pairs(emb, full // 3 + 1)
     assert single, "corpus should produce near-dup pairs"
-    assert slab3 == single, "slab passes changed the pair set"
-    assert carry == single, "carry fallback changed the pair set"
     assert fetch == single, "fetch-join path changed the pair set"
 
-    # ADVICE r12 #1: an IntegerType id must produce the same pair set —
-    # xxhash64 is type-dependent, so without the canonical long cast in
-    # _slab_expr the pass-membership filter (raw id) and the kernel's
-    # _sx flag (LongType _id) disagree and cross-slab pairs are dropped.
     emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
-    slab3_int = sorted(
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in similarity.embedding_near_duplicates_srp(
-            emb_int, threshold=0.8, dim=32, num_tables=4, size_sample_mod=1,
-            broadcast_corpus_bytes=full // 3 + 1, max_broadcast_slabs=8,
-            past_budget="slab",
-        ).collect()
-    )
-    assert slab3_int == single, "IntegerType ids changed the slab-pass pair set"
+    assert pairs(emb_int, full // 3 + 1) == single, "IntegerType ids changed the fetch-join pair set"
 
 
-def test_gemm_zero_norm_carry_matches_broadcast(spark):
-    """ADVICE r11 #3: the carry path's kernel normalization shares the
-    broadcast path's zero-vector convention (zero norm → cos 0, never
-    NaN) — observable at a non-positive threshold, where NaN comparisons
-    would silently drop the zero vector's pairs on one path only."""
+def test_gemm_zero_norm_fetch_matches_broadcast(spark):
+    """ADVICE r11 #3: the kernel's normalization of joined-in vectors
+    (fetch join) shares the broadcast path's zero-vector convention
+    (zero norm → cos 0, never NaN) — observable at a non-positive
+    threshold, where NaN comparisons would silently drop the zero
+    vector's pairs on one path only. ``n`` is counted in both calls, so
+    the budget alone picks the route."""
     import numpy as np
 
     rng = np.random.default_rng(43)
@@ -502,20 +488,19 @@ def test_gemm_zero_norm_carry_matches_broadcast(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     full = 81 * 16 * 8
 
-    def pairs(budget, slabs):
+    def pairs(budget):
         return sorted(
             (r["id_a"], r["id_b"])
             for r in similarity.embedding_near_duplicates_srp(
                 emb, threshold=-0.5, dim=16, num_planes=2, num_tables=4,
-                target_bucket_rows=None, size_sample_mod=1,
-                broadcast_corpus_bytes=budget, max_broadcast_slabs=slabs,
+                size_sample_mod=1, broadcast_corpus_bytes=budget,
             ).collect()
         )
 
-    bcast = pairs(full + 1, 8)
-    carry = pairs(0, 0)
+    bcast = pairs(full + 1)
+    fetch = pairs(0)
     assert any(80 in (a, b) for a, b in bcast), "zero vector should pair at cos 0"
-    assert carry == bcast, "zero-norm semantics diverge between paths"
+    assert fetch == bcast, "zero-norm semantics diverge between paths"
 
 
 def test_srp_packing_cap_keeps_estimated_large_buckets_unpacked(spark):
