@@ -9,9 +9,10 @@ arbitrary blocks (a Spark ACTION is where work happens — decorating a
 function that only builds a lazy plan times plan construction, so put
 the action inside the timed scope).
 
-Driver-side wall clock is the honest metric here: per-stage executor
-metrics at cluster scale come from the Spark UI / SQLAppStatusStore,
-not from re-implementing a listener in Python.
+These are driver-side wall-clock timings only. The engine records no
+executor metrics: the session runs with ``spark.ui.enabled=false``, so
+there is no Spark UI to read them from; the status store behind
+``SparkContext.statusTracker`` (per job group) is where they can be read.
 """
 
 from __future__ import annotations

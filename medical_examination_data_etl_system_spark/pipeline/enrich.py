@@ -33,32 +33,34 @@ def _norm_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.withColumns({k: F.trim(F.col(k).cast("string")) for k in present})
 
 
-def _fallback_names(fact: DataFrame) -> DataFrame:
-    """The left joins against the reference's fallback dims, as one
-    projection over the normalized fact keys.
-
-    Join semantics carry over exactly: an equi-join on a null key never
-    matches, so the item names need ITEM_CODE and ORG_ID, the group
-    columns need ITEM_CODE, and the comment and summary names (all '')
-    need DIAG_CODE; otherwise the column is null, as an unmatched left
-    join leaves it, and clean's per-language defaults apply.
-    """
-    item = F.col("ITEM_CODE")
-    has_item, has_diag = item.isNotNull(), F.col("DIAG_CODE").isNotNull()
-    has_item_org = has_item & F.col("ORG_ID").isNotNull()
-    names = {
-        "GROUPNO": F.when(has_item, F.lit(1)),
-        "TCNAME_GROUP": F.when(has_item, F.lit("範例分類")),
-        "ENNAME_GROUP": F.when(has_item, F.lit("Sample Group")),
-        "JPNAME_GROUP": F.when(has_item, F.lit("サンプル分類")),
-        "SCNAME_GROUP": F.when(has_item, F.lit("示例分类")),
-        "TCNAME_ITEM": F.when(has_item_org, F.concat(F.lit("項目 "), item)),
-        "ENNAME_ITEM": F.when(has_item_org, F.concat(F.lit("Item "), item)),
-        "JPNAME_ITEM": F.when(has_item_org, F.concat(F.lit("項目 "), item)),
-        "SCNAME_ITEM": F.when(has_item_org, F.concat(F.lit("项目 "), item)),
-        **{c: F.when(has_diag, F.lit("")) for c in SUBSET if c.endswith(("_COMMENT", "_SUMMARY"))},
-    }
-    return fact.select(*[names.get(c, F.col(c)).alias(c) for c in SUBSET], "ord", "request")
+# The left joins against the reference's fallback dims, as SQL text
+# over the normalized fact keys. Join semantics carry over exactly: an
+# equi-join on a null key never matches, so the item names need ITEM_CODE
+# and ORG_ID, the group columns need ITEM_CODE, and the comment and
+# summary names (all '') need DIAG_CODE; otherwise the column is null, as
+# an unmatched left join leaves it, and clean's per-language defaults
+# apply.
+_HAS_ITEM = "ITEM_CODE IS NOT NULL"
+_HAS_ITEM_ORG = "ITEM_CODE IS NOT NULL AND ORG_ID IS NOT NULL"
+_FALLBACK_NAMES = {
+    "GROUPNO": f"CASE WHEN {_HAS_ITEM} THEN 1 END",
+    "TCNAME_GROUP": f"CASE WHEN {_HAS_ITEM} THEN '範例分類' END",
+    "ENNAME_GROUP": f"CASE WHEN {_HAS_ITEM} THEN 'Sample Group' END",
+    "JPNAME_GROUP": f"CASE WHEN {_HAS_ITEM} THEN 'サンプル分類' END",
+    "SCNAME_GROUP": f"CASE WHEN {_HAS_ITEM} THEN '示例分类' END",
+    "TCNAME_ITEM": f"CASE WHEN {_HAS_ITEM_ORG} THEN concat('項目 ', ITEM_CODE) END",
+    "ENNAME_ITEM": f"CASE WHEN {_HAS_ITEM_ORG} THEN concat('Item ', ITEM_CODE) END",
+    "JPNAME_ITEM": f"CASE WHEN {_HAS_ITEM_ORG} THEN concat('項目 ', ITEM_CODE) END",
+    "SCNAME_ITEM": f"CASE WHEN {_HAS_ITEM_ORG} THEN concat('项目 ', ITEM_CODE) END",
+    **{
+        c: "CASE WHEN DIAG_CODE IS NOT NULL THEN '' END"
+        for c in SUBSET
+        if c.endswith(("_COMMENT", "_SUMMARY"))
+    },
+}
+_FALLBACK_SELECT = [
+    f"{_FALLBACK_NAMES[c]} AS {c}" if c in _FALLBACK_NAMES else c for c in SUBSET
+] + ["ord", "request"]
 
 
 def enrich(flat: DataFrame, dims: dict[str, DataFrame] | None) -> DataFrame:
@@ -70,7 +72,7 @@ def enrich(flat: DataFrame, dims: dict[str, DataFrame] | None) -> DataFrame:
     """
     fact = _norm_keys(flat, ["ITEM_CODE", "ORG_ID", "DIAG_CODE"])
     if not dims:
-        return _fallback_names(fact)
+        return fact.selectExpr(*_FALLBACK_SELECT)
 
     item_meta = _norm_keys(dims["item_meta"], ["ITEM_CODE", "ORG_ID"])
     item_group_map = _norm_keys(dims["item_group_map"], ["ITEM_CODE"])

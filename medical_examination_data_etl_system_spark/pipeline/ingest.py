@@ -26,9 +26,38 @@ from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECO
 
 # ord = (_rec_idx << 40) | (item_pos << 20) | finding_pos.
 # Caps: 2^20 (~1M) items per record, 2^20 findings per item, 2^23 (~8M)
-# records per ingest batch. A batch is one API request — far below caps.
+# records per ingest batch. A batch is one API request, one file-ingest
+# call or one stream micro-batch (the last two get their positions from
+# ``with_batch_position``). Nothing checks the caps: past the item or
+# finding cap a position spills into the next bit field and report
+# order is silently wrong; past the record cap the bigint overflows.
 _ITEM_SHIFT = 1 << 40
 _FINDING_SHIFT = 1 << 20
+
+# flatten's three projections, as SQL text written once (a Column tree
+# rebuilt per call costs a py4j round trip per node).
+_ITEMS = [
+    "_rec_idx", "RECORD_ID", "LANG_NO", "ORG_ID",
+    # Request echo (F8): reconstruct the original record JSON once, here.
+    "to_json(struct(RECORD_ID, LANG_NO, ORG_ID, ITEMS)) AS request",
+    "posexplode(ITEMS) AS (_item_pos, _item)",
+]
+_FINDINGS = [
+    "_rec_idx", "RECORD_ID", "LANG_NO", "ORG_ID", "request", "_item_pos",
+    "_item.ITEM_CODE AS ITEM_CODE",
+    # posexplode_outer: an item with an empty FINDINGS list still yields
+    # a (null-finding) row — pandas ``explode`` does the same; the
+    # comment filter then drops it, as in the reference.
+    "posexplode_outer(_item.FINDINGS) AS (_finding_pos, _finding)",
+]
+_FLAT = [
+    "RECORD_ID", "LANG_NO", "ORG_ID", "ITEM_CODE",
+    "_finding.DIAG_CODE AS DIAG_CODE",
+    "_finding.COMMENT AS COMMENT",
+    # _finding.SUMMARY_CODE intentionally dropped (J3 decision).
+    f"_rec_idx * {_ITEM_SHIFT} + _item_pos * {_FINDING_SHIFT} + coalesce(_finding_pos, 0) AS ord",
+    "request",
+]
 
 
 def records_to_df(spark: SparkSession, records: list[dict[str, Any]] | dict[str, Any]) -> DataFrame:
@@ -90,47 +119,10 @@ def flatten(nested: DataFrame) -> DataFrame:
     COMMENT, ord, request. Findings whose COMMENT is null or blank are
     dropped, as in the reference.
     """
-    # Request echo (F8): reconstruct the original record JSON once, here.
-    with_req = nested.withColumn(
-        "request",
-        F.to_json(F.struct("RECORD_ID", "LANG_NO", "ORG_ID", "ITEMS")),
+    return (
+        nested.selectExpr(*_ITEMS)
+        .selectExpr(*_FINDINGS)
+        .selectExpr(*_FLAT)
+        # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
+        .filter("trim(coalesce(COMMENT, '')) != ''")
     )
-
-    items = with_req.select(
-        "_rec_idx",
-        "RECORD_ID",
-        "LANG_NO",
-        "ORG_ID",
-        "request",
-        F.posexplode("ITEMS").alias("_item_pos", "_item"),
-    )
-    findings = items.select(
-        "_rec_idx",
-        "RECORD_ID",
-        "LANG_NO",
-        "ORG_ID",
-        "request",
-        "_item_pos",
-        F.col("_item.ITEM_CODE").alias("ITEM_CODE"),
-        # posexplode_outer: an item with an empty FINDINGS list still
-        # yields a (null-finding) row — pandas ``explode`` does the same;
-        # the comment filter below then drops it, as in the reference.
-        F.posexplode_outer("_item.FINDINGS").alias("_finding_pos", "_finding"),
-    )
-    flat = findings.select(
-        "RECORD_ID",
-        "LANG_NO",
-        "ORG_ID",
-        "ITEM_CODE",
-        F.col("_finding.DIAG_CODE").alias("DIAG_CODE"),
-        F.col("_finding.COMMENT").alias("COMMENT"),
-        # _finding.SUMMARY_CODE intentionally dropped (J3 decision).
-        (
-            F.col("_rec_idx") * F.lit(_ITEM_SHIFT)
-            + F.col("_item_pos") * F.lit(_FINDING_SHIFT)
-            + F.coalesce(F.col("_finding_pos"), F.lit(0))
-        ).alias("ord"),
-        "request",
-    )
-    # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
-    return flat.filter(F.trim(F.coalesce(F.col("COMMENT"), F.lit(""))) != "")

@@ -29,7 +29,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
 
@@ -155,11 +154,8 @@ def rewrite_distinct_summaries(df: DataFrame, model: str | None = None) -> DataF
     """
     model = model or os.getenv("AZURE_OPENAI_DEPLOYMENT", "gpt-4o")
     distinct = (
-        df.select(
-            F.col("LANG_NO").cast("string").alias("LANG_NO"),
-            F.trim(F.col("SUMMARY")).alias("SUMMARY"),
-        )
-        .filter(F.col("SUMMARY") != "")
+        df.selectExpr("CAST(LANG_NO AS STRING) AS LANG_NO", "trim(SUMMARY) AS SUMMARY")
+        .filter("SUMMARY != ''")
         .distinct()
     )
 

@@ -22,7 +22,7 @@ from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
 from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
 from medical_examination_data_etl_system_spark.pipeline.llm import rewrite_distinct_summaries
 from medical_examination_data_etl_system_spark.pipeline.render import (
-    render_reports_sql,
+    render_generic_reports,
     with_generic_columns,
 )
 
@@ -53,11 +53,26 @@ def process_records(
             dims = resolve_dims(spark, flat)
     with timed_stage("enrich"):
         enriched = enrich(flat, dims)
-    return reports_from_fact(enriched, output_dir=output_dir)
+    return _in_batch_order(_reports(enriched, output_dir))
 
 
 def reports_from_fact(fact: DataFrame, output_dir: str | None = None) -> DataFrame:
-    """E3 parity: any SUBSET ∪ {ord, request} fact frame → reports."""
+    """E3 parity: any SUBSET ∪ {ord, request} fact frame → (record_id,
+    report, request), in no particular order: the stream sink and the
+    registry queries need none, and a global sort would cost a range
+    exchange and its sampling job."""
+    return _reports(fact, output_dir).drop("rec_ord")
+
+
+def _in_batch_order(reports: DataFrame) -> DataFrame:
+    """Reports in batch position (``rec_ord``) order, without a range
+    exchange: a served batch is a driver-side list, small enough for one
+    sorted partition."""
+    return reports.coalesce(1).sortWithinPartitions("rec_ord").drop("rec_ord")
+
+
+def _reports(fact: DataFrame, output_dir: str | None) -> DataFrame:
+    """fact → (record_id, report, request, rec_ord), unordered."""
     with timed_stage("clean"):
         # Persisted barrier (r13): `cleaned` has two consumers — the
         # distinct-summary rewrite branch and the renderer (three with
@@ -73,14 +88,17 @@ def reports_from_fact(fact: DataFrame, output_dir: str | None = None) -> DataFra
             write_csv_checkpoint(cleaned.drop("request"), os.path.join(output_dir, "output_01_preprocessed"))
 
     with timed_stage("llm_rewrite"):
+        # One generic frame feeds both the rewrite and the renderer.
         generic = with_generic_columns(cleaned)
         rewrites = rewrite_distinct_summaries(generic)
     with timed_stage("render"):
-        reports = render_reports_sql(cleaned, rewrites).orderBy("rec_ord").drop("rec_ord")
+        reports = render_generic_reports(generic, rewrites)
 
     if output_dir:
         with timed_stage("csv_checkpoint_text_processed"):
-            write_csv_checkpoint(reports, os.path.join(output_dir, "output_02_text_processed"))
+            write_csv_checkpoint(
+                _in_batch_order(reports), os.path.join(output_dir, "output_02_text_processed")
+            )
     return reports
 
 

@@ -168,6 +168,12 @@ SUMMARY_TBL_SCHEMA = T.StructType(
     ]
 )
 
+def sql_literal(text: str) -> str:
+    """``text`` as a Spark SQL string literal: backslashes and single
+    quotes escaped, so the parser's unescaping gives ``text`` back."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def ensure_columns(df: DataFrame, columns: list[str], fill: str = "") -> DataFrame:
     """Backfill any missing contract column with a literal.
 

@@ -3,8 +3,13 @@
 Record files arrive continuously; each micro-batch runs the SAME batch
 pipeline (flatten → enrich → clean → rewrite → render) via
 ``foreachBatch`` — the canonical Structured Streaming pattern for
-reusing battle-tested batch logic with streaming input, exactly-once
-via the checkpointed sink.
+reusing battle-tested batch logic with streaming input.
+
+Delivery is at-least-once, not exactly-once: ``foreachBatch`` replays a
+batch whose sink write landed before its commit-log entry, and
+``_process`` ignores ``batch_id`` and appends, so a replayed batch
+writes its reports a second time (a known defect: the sink is not yet
+idempotent per batch id).
 
 With no dims, each micro-batch gets the deterministic fallback names
 (``enrich``'s projection, the batch pipeline's behavior with no dims);

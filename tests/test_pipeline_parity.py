@@ -70,7 +70,10 @@ def test_custom_fact_parity(spark):
         "request",
         F.udf(lambda rid: req_json.get(rid, ""))(F.col("RECORD_ID")),
     ).select(*SUBSET, "ord", "request")
-    engine = reports_from_fact(sdf).collect()
+    # reports_from_fact is unordered; put the reports in batch position
+    # (each record's first ord), the order process_records returns.
+    first_ord = fact.groupby("RECORD_ID")["ord"].min()
+    engine = sorted(reports_from_fact(sdf).collect(), key=lambda r: first_ord[r["record_id"]])
 
     ref = run_reference_from_fact(fact.drop(columns=["ord"]), records)
     assert len(engine) == len(ref)
