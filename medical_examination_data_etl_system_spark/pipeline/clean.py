@@ -82,10 +82,11 @@ _DEDUP_RANK = f"row_number() OVER (PARTITION BY {', '.join(SUBSET_2_KEEP)} ORDER
 # O1 (reference :75): stable sort by (RECORD_ID, GROUPNO, TCNAME_ITEM) —
 # stability == ord tiebreak. Rather than a global sort (single
 # range-partitioned stage whose only consumer is per-record grouping),
-# ord is re-derived within each record; renderers and sinks order by it.
-# rec_ord preserves each record's batch position (its first row's
-# pre-sort ord) so the final output can be returned in request order.
-# Both read the incoming ord.
+# ord is re-derived within each record as an int; renderers and sinks
+# order by it. rec_ord keeps the record's lowest incoming ord (flatten's
+# struct, whose first field is the batch position, or a caller's int)
+# so the final output can be returned in request order. Both read the
+# incoming ord; min and ORDER BY serve either type.
 _RECORD_ORDER = {
     "rec_ord": "min(ord) OVER (PARTITION BY RECORD_ID)",
     "ord": "row_number() OVER (PARTITION BY RECORD_ID ORDER BY GROUPNO, TCNAME_ITEM, ord)",

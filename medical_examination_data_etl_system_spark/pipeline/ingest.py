@@ -4,9 +4,9 @@ Reference behavior re-expressed (SURVEY.md §2a S2-S4, P1, J5, F8):
 
 - ``pd.json_normalize(record_path='ITEMS', meta=[...])`` + ``explode('FINDINGS')``
   + struct flatten (reference db_to_dataframe.py:33-38) becomes two
-  ``posexplode`` passes; the positions feed a single bigint ``ord``
-  column — Spark rows carry no physical order, so encounter order is
-  materialized as data (SURVEY.md §1.3).
+  ``posexplode`` passes; the batch position and the two positions form
+  the struct ``ord`` (rec, item, finding) — Spark rows carry no physical
+  order, so encounter order is materialized as data (SURVEY.md §1.3).
 - The non-empty-comment filter (reference db_to_dataframe.py:41-44) runs
   immediately after flattening so every downstream join sees less data.
 - The per-record request-echo (reference text_processing.py:51-52, an
@@ -19,20 +19,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECORD_SCHEMA
-
-# ord = (_rec_idx << 40) | (item_pos << 20) | finding_pos.
-# Caps: 2^20 (~1M) items per record, 2^20 findings per item, 2^23 (~8M)
-# records per ingest batch. A batch is one API request, one file-ingest
-# call or one stream micro-batch (the last two get their positions from
-# ``with_batch_position``). Nothing checks the caps: past the item or
-# finding cap a position spills into the next bit field and report
-# order is silently wrong; past the record cap the bigint overflows.
-_ITEM_SHIFT = 1 << 40
-_FINDING_SHIFT = 1 << 20
 
 # flatten's three projections, as SQL text written once (a Column tree
 # rebuilt per call costs a py4j round trip per node).
@@ -55,7 +44,8 @@ _FLAT = [
     "_finding.DIAG_CODE AS DIAG_CODE",
     "_finding.COMMENT AS COMMENT",
     # _finding.SUMMARY_CODE intentionally dropped (J3 decision).
-    f"_rec_idx * {_ITEM_SHIFT} + _item_pos * {_FINDING_SHIFT} + coalesce(_finding_pos, 0) AS ord",
+    # Structs compare field by field: no field caps another.
+    "named_struct('rec', _rec_idx, 'item', _item_pos, 'finding', coalesce(_finding_pos, 0)) AS ord",
     "request",
 ]
 
@@ -96,20 +86,13 @@ def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
 
 
 def with_batch_position(raw: DataFrame) -> DataFrame:
-    """RECORD_SCHEMA rows → BATCH_SCHEMA rows. The batch position
-    ``_rec_idx`` — which the API path pins by driver-side enumerate — is
-    re-derived deterministically as a dense rank over RECORD_ID, since
-    files and stream micro-batches carry no meaningful row order.
+    """RECORD_SCHEMA rows → BATCH_SCHEMA rows with batch position 0.
+
+    Files and stream micro-batches carry no row order, and every later
+    window and group is keyed by RECORD_ID, so no cross-record position
+    is needed (the API path keeps its driver-side enumerate).
     """
-    # The unpartitioned window funnels every WHOLE nested record (its
-    # ITEMS and FINDINGS arrays ride along) through one task. The ord
-    # bit layout caps a batch at 2^23 records, but not the bytes per
-    # record, so this single-task stage grows with the batch; only the
-    # data exploded after it is distributed.
-    return raw.withColumn(
-        "_rec_idx",
-        F.dense_rank().over(Window.orderBy("RECORD_ID")).cast("long") - 1,
-    ).select(*[f.name for f in BATCH_SCHEMA.fields])
+    return raw.selectExpr("CAST(0 AS BIGINT) AS _rec_idx", *RECORD_SCHEMA.fieldNames())
 
 
 def flatten(nested: DataFrame) -> DataFrame:

@@ -116,7 +116,7 @@ _REPORT = (
     r" b -> b._text), '\n') AS report"
 )
 _REPORT_OUTPUT = [
-    "CAST(RECORD_ID AS STRING) AS record_id", "report", "request", "CAST(rec_ord AS BIGINT) AS rec_ord",
+    "CAST(RECORD_ID AS STRING) AS record_id", "report", "request", "rec_ord",
 ]
 
 

@@ -85,7 +85,10 @@ def _reports(fact: DataFrame, output_dir: str | None) -> DataFrame:
 
     if output_dir:
         with timed_stage("csv_checkpoint_preprocessed"):
-            write_csv_checkpoint(cleaned.drop("request"), os.path.join(output_dir, "output_01_preprocessed"))
+            # rec_ord is a struct (flatten's ord), which CSV cannot hold.
+            write_csv_checkpoint(
+                cleaned.drop("request", "rec_ord"), os.path.join(output_dir, "output_01_preprocessed")
+            )
 
     with timed_stage("llm_rewrite"):
         # One generic frame feeds both the rewrite and the renderer.

@@ -641,16 +641,18 @@ def _synth_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries S5/S6 miss summary_tbl → F6 per-language defaults) and
     GROUPNO pathologies (I2→0, I4→null, both → A3 max+1 sentinel).
 
-    ``_rec_idx`` is 0 for every record — unlike the API path (driver
-    enumerate) and the JSON-file path (dense_rank), this caller needs no
-    cross-record component in ``ord``: record identity rides RECORD_ID
-    through every downstream partition (dedup key, re-rank window,
-    renderer grouping), so a per-record-constant index is valid and
-    avoids both the single-task header window and any bit-layout cap.
-    Scale shape: two key-local aggregations build the nested records,
-    flatten is map-side, all four dim joins broadcast."""
+    The records get batch position 0 from ``with_batch_position``, as
+    file and stream ingest do (the API path alone enumerates on the
+    driver): record identity rides RECORD_ID through every downstream
+    partition (dedup key, re-rank window, renderer grouping), so no
+    cross-record position is needed. Scale shape: two key-local
+    aggregations build the nested records, flatten is map-side, all four
+    dim joins broadcast."""
     from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
-    from medical_examination_data_etl_system_spark.pipeline.ingest import flatten
+    from medical_examination_data_etl_system_spark.pipeline.ingest import (
+        flatten,
+        with_batch_position,
+    )
 
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
     fkey = (
@@ -685,7 +687,7 @@ def _synth_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array algebra: array_distinct preserves the sorted first-seen
     # item order, filter preserves each item's within-code (fkey…)
     # order. Per-record cost O(items × findings); items ≤ 5 here.
-    nested = (
+    nested = with_batch_position(
         findings.groupBy("okey")
         .agg(
             F.array_sort(
@@ -709,7 +711,6 @@ def _synth_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ITEMS"),
         )
         .select(
-            F.lit(0).cast("long").alias("_rec_idx"),
             F.col("okey").cast("string").alias("RECORD_ID"),
             (F.expr("okey div 4 % 4") + 1).cast("string").alias("LANG_NO"),
             F.lit("ORG_SYN").alias("ORG_ID"),
@@ -836,8 +837,9 @@ WITH f0 AS (
          END AS comment
   FROM lineitem WHERE l_orderkey % 4 = 0
 ), pos AS (
-  -- flatten's ord with _rec_idx = 0: item_pos * 2^20 + finding_pos,
-  -- positions computed BEFORE the P1 filter (explode sees full arrays)
+  -- flatten's ord (0, item_pos, finding_pos) as one integer key that
+  -- orders the same way; positions computed BEFORE the P1 filter
+  -- (explode sees full arrays)
   SELECT *,
     (dense_rank() OVER (PARTITION BY okey ORDER BY item_code) - 1) * 1048576
       + row_number() OVER (PARTITION BY okey, item_code

@@ -45,8 +45,9 @@ RECORD_SCHEMA = T.StructType(
     ]
 )
 
-# Ingest wraps RECORD_SCHEMA with a driver-assigned batch position so
-# "encounter order" is data, not physical row order (SURVEY.md §1.3).
+# Ingest wraps RECORD_SCHEMA with a batch position so "encounter order"
+# is data, not physical row order (SURVEY.md §1.3): the API enumerates
+# its request on the driver; file and stream ingest set 0.
 BATCH_SCHEMA = T.StructType(
     [T.StructField("_rec_idx", T.LongType(), False), *RECORD_SCHEMA.fields]
 )

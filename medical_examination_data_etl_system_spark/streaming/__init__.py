@@ -21,7 +21,6 @@ from medical_examination_data_etl_system_spark.streaming.events import (
     stream_session_counts,
     stream_sliding_counts,
     stream_tumbling_counts,
-    write_parquet_stream,
 )
 from medical_examination_data_etl_system_spark.streaming.upsert import (
     UpsertParquetView,
@@ -54,5 +53,4 @@ __all__ = [
     "stream_tumbling_counts",
     "UpsertParquetView",
     "run_upsert_stream",
-    "write_parquet_stream",
 ]

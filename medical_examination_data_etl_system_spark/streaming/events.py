@@ -464,17 +464,3 @@ def run_available_now(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
-
-
-def write_parquet_stream(
-    stream_df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"
-):
-    """Production sink: parquet files + checkpointed offsets/state, so a
-    restarted query resumes exactly-once from the checkpoint."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .start()
-    )

@@ -1,6 +1,11 @@
 """Battery-wide physical-plan audit: builds the executed plan of every
-registry query and of the API entry point (``process_records`` on the
-committed sample request, named ``api:process_records``) and flags the anti-patterns the 100 TB posture forbids —
+registry query and of two served entry points, both on the committed
+sample request: the API (``process_records``, named
+``api:process_records``) and file ingest (JSON lines through
+``records_from_json_files`` → ``flatten`` → ``enrich`` →
+``reports_from_fact``, named ``file:records_from_json_files``; the
+stream's micro-batch body runs the same chain). It flags the
+anti-patterns the 100 TB posture forbids — unpartitioned windows,
 row-at-a-time Python UDFs (BatchEvalPython) and unbounded cartesian
 products — plus Exchange counts as a shuffle budget overview.
 
@@ -20,11 +25,13 @@ import json
 import os
 import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 API_ENTRY = "api:process_records"
+FILE_ENTRY = "file:records_from_json_files"
 SAMPLE_REQUEST = os.path.join(ROOT, "tests", "sample_request.json")
 
 FATAL = ("BatchEvalPython", "CartesianProduct")
@@ -84,8 +91,9 @@ UNPARTITIONED_WINDOW_ALLOWED = {
 
 
 def _count_unpartitioned_windows(jplan) -> int:
-    """Walk the physical plan (incl. the AQE input plan) counting
-    Window/WindowGroupLimit nodes with an empty partitionSpec."""
+    """Walk the physical plan (incl. the AQE input plan and the plans
+    behind persisted frames) counting Window/WindowGroupLimit nodes with
+    an empty partitionSpec."""
     n = 0
     stack = [jplan]
     while stack:
@@ -97,6 +105,8 @@ def _count_unpartitioned_windows(jplan) -> int:
         if name == "AdaptiveSparkPlan":
             stack.append(node.inputPlan())
             continue
+        if name == "InMemoryTableScan":
+            stack.append(node.relation().cachedPlan())
         if name in ("Window", "WindowGroupLimit"):
             try:
                 if node.partitionSpec().isEmpty():
@@ -114,6 +124,12 @@ def main() -> int:
     from medical_examination_data_etl_system_spark import get_spark
     from medical_examination_data_etl_system_spark.operators.cache import cache_scope
     from medical_examination_data_etl_system_spark.pipeline import process_records
+    from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
+    from medical_examination_data_etl_system_spark.pipeline.ingest import (
+        flatten,
+        records_from_json_files,
+    )
+    from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
     from medical_examination_data_etl_system_spark.queries import all_queries
 
     spark = get_spark(app_name="plan-audit")
@@ -121,6 +137,13 @@ def main() -> int:
     with open(SAMPLE_REQUEST, encoding="utf-8") as f:
         sample = json.load(f)
     builders[API_ENTRY] = lambda: process_records(spark, sample)
+    tmp = tempfile.TemporaryDirectory(prefix="plan-audit-")  # removed at exit
+    jsonl = os.path.join(tmp.name, "records.jsonl")
+    with open(jsonl, "w", encoding="utf-8") as f:
+        f.writelines(json.dumps(r, ensure_ascii=False) + "\n" for r in sample)
+    builders[FILE_ENTRY] = lambda: reports_from_fact(
+        enrich(flatten(records_from_json_files(spark, jsonl)), None)
+    )
     names = sys.argv[2:] or list(builders)
     rc = 0
     for name in names:

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+
 from medical_examination_data_etl_system_spark.api import handle_process_request
+from medical_examination_data_etl_system_spark.schemas import SUBSET
 
 from .fixtures import sample_request
 
@@ -31,3 +34,16 @@ def test_handle_process_request_releases_caches(spark):
     before = len(tracked_frames())
     handle_process_request(spark, sample_request())
     assert len(tracked_frames()) == before
+
+
+def test_handle_process_request_writes_csv_checkpoints(spark, tmp_path):
+    """With an output_dir, the request also writes the reference's two
+    timestamped CSV artifacts (text_processing.py:157-166)."""
+    out = handle_process_request(spark, sample_request(), output_dir=str(tmp_path))
+    assert len(out["rows"]) == 1
+    (pre,) = glob.glob(str(tmp_path / "output_01_preprocessed" / "csv_*"))
+    (post,) = glob.glob(str(tmp_path / "output_02_text_processed" / "csv_*"))
+    assert spark.read.option("header", True).csv(pre).columns == [*SUBSET, "ord"]
+    reports = spark.read.option("header", True).option("multiLine", True).csv(post)
+    assert reports.columns == ["record_id", "report", "request"]
+    assert reports.count() == 1

@@ -7,12 +7,27 @@ regressions that correctness tests can't see.
 
 from __future__ import annotations
 
+import json
+import os
+import runpy
+
 import pytest
 from pyspark.sql import functions as F
 
+from medical_examination_data_etl_system_spark.operators.cache import cache_scope
+from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
+from medical_examination_data_etl_system_spark.pipeline.ingest import (
+    flatten,
+    records_from_json_files,
+    records_to_df,
+)
+from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
 from medical_examination_data_etl_system_spark.queries import all_queries, load
 
+from .fixtures import multilang_edge_batch, sample_request
+
 SF_DIR = "/root/testdata/sf0.01"
+_PLAN_AUDIT = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "plan_audit.py")
 
 
 def _formatted_plan(df) -> str:
@@ -393,3 +408,24 @@ def test_runtime_bloom_filter_engages_at_scan_scale(spark):
         .collect()
     }
     assert rows == want
+
+
+def test_file_ingest_plan_has_no_unpartitioned_window(spark, tmp_path):
+    """File and stream ingest need no cross-record order: the file
+    chain's plan, cached plans included, holds no single-task Window."""
+    count_unpartitioned_windows = runpy.run_path(_PLAN_AUDIT)["_count_unpartitioned_windows"]
+    src = tmp_path / "records.jsonl"
+    src.write_text(
+        "".join(json.dumps(r, ensure_ascii=False) + "\n" for r in multilang_edge_batch()),
+        encoding="utf-8",
+    )
+    with cache_scope():
+        fact = enrich(flatten(records_from_json_files(spark, str(src))), None)
+        plan = reports_from_fact(fact)._jdf.queryExecution().executedPlan()
+        assert count_unpartitioned_windows(plan) == 0
+
+
+def test_flatten_ord_is_a_struct(spark):
+    """ord compares field by field, so no position field caps another."""
+    ord_type = flatten(records_to_df(spark, sample_request())).schema["ord"].dataType
+    assert ord_type.simpleString() == "struct<rec:bigint,item:int,finding:int>"

@@ -13,6 +13,9 @@ from medical_examination_data_etl_system_spark.streaming.pipeline import (
 
 from .fixtures import multilang_edge_batch, sample_request
 
+# Jobs one stream_reports micro-batch of multilang_edge_batch() fires.
+_MAX_BATCH_JOBS = 12
+
 
 def test_stream_reports_matches_batch(spark, tmp_path):
     batch1 = sample_request()
@@ -68,3 +71,20 @@ def test_stream_reports_releases_caches_per_batch(spark, tmp_path):
     )
     q.awaitTermination()
     assert len(tracked_frames()) == before
+
+
+def test_stream_batch_job_count(spark, tmp_path):
+    """The stream runs its jobs under its runId job group; one
+    micro-batch stays within the pinned job count."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "batch.jsonl").write_text(
+        "".join(json.dumps(r, ensure_ascii=False) + "\n" for r in multilang_edge_batch()),
+        encoding="utf-8",
+    )
+    q = stream_reports(
+        read_records_stream(spark, str(src)), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(300)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= _MAX_BATCH_JOBS
