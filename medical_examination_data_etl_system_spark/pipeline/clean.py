@@ -85,10 +85,15 @@ _DEDUP_RANK = f"row_number() OVER (PARTITION BY {', '.join(SUBSET_2_KEEP)} ORDER
 # ord is re-derived within each record as an int; renderers and sinks
 # order by it. rec_ord keeps the record's lowest incoming ord (flatten's
 # struct, whose first field is the batch position, or a caller's int)
-# so the final output can be returned in request order. Both read the
-# incoming ord; min and ORDER BY serve either type.
+# so the final output can be returned in request order. request is the
+# echo of the copy at that lowest ord, so records that share a
+# RECORD_ID render as one report (reference A4 groupby('RECORD_ID'), J5
+# first-match echo); the request text breaks ord ties, which file and
+# stream copies (batch position 0) can have. All three read the
+# incoming ord; min, min_by and ORDER BY serve either type.
 _RECORD_ORDER = {
     "rec_ord": "min(ord) OVER (PARTITION BY RECORD_ID)",
+    "request": "min_by(request, struct(ord, request)) OVER (PARTITION BY RECORD_ID)",
     "ord": "row_number() OVER (PARTITION BY RECORD_ID ORDER BY GROUPNO, TCNAME_ITEM, ord)",
 }
 

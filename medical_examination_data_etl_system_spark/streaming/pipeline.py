@@ -1,9 +1,10 @@
 """Streaming variant of the medical-report pipeline.
 
 Record files arrive continuously; each micro-batch runs the SAME batch
-pipeline (flatten → enrich → clean → rewrite → render) via
-``foreachBatch`` — the canonical Structured Streaming pattern for
-reusing battle-tested batch logic with streaming input.
+body as the API and file ingest (``pipeline.run.reports_for_batch``:
+flatten → enrich → clean → rewrite → render) via ``foreachBatch`` — the
+canonical Structured Streaming pattern for reusing battle-tested batch
+logic with streaming input.
 
 Delivery is at-least-once, not exactly-once: ``foreachBatch`` replays a
 batch whose sink write landed before its commit-log entry, and
@@ -11,10 +12,12 @@ batch whose sink write landed before its commit-log entry, and
 writes its reports a second time (a known defect: the sink is not yet
 idempotent per batch id).
 
-With no dims, each micro-batch gets the deterministic fallback names
-(``enrich``'s projection, the batch pipeline's behavior with no dims);
-production passes static dim frames once and they broadcast into every
-micro-batch.
+``dims=None`` resolves per micro-batch as on the API path
+(``resolve_dims``: MongoDB when MONGO_URI is set, else ``enrich``'s
+fallback-name projection); production passes static dim frames once and
+they broadcast into every micro-batch. An empty micro-batch runs the
+same body and appends no rows, so no separate emptiness probe (one more
+job per batch) runs first.
 """
 
 from __future__ import annotations
@@ -22,9 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from medical_examination_data_etl_system_spark.operators.cache import cache_scope
-from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
-from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, with_batch_position
-from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
+from medical_examination_data_etl_system_spark.pipeline.ingest import with_batch_position
+from medical_examination_data_etl_system_spark.pipeline.run import reports_for_batch
 from medical_examination_data_etl_system_spark.schemas import RECORD_SCHEMA
 
 
@@ -51,17 +53,13 @@ def stream_reports(
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # cache_scope per micro-batch (ADVICE r13): reports_from_fact
+        # cache_scope per micro-batch (ADVICE r13): reports_for_batch
         # persists its cleaned fact; without a scope every batch would
         # park that frame on the process-global tracked list for the
         # stream's lifetime. The write action runs inside the scope, so
         # the barrier is consumed before release.
         with cache_scope():
-            flat = flatten(with_batch_position(batch_df))
-            enriched = enrich(flat, dims)
-            reports = reports_from_fact(enriched)
+            reports = reports_for_batch(with_batch_position(batch_df), dims).drop("rec_ord")
             reports.write.mode("append").parquet(output_path)
 
     return (

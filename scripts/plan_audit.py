@@ -2,9 +2,9 @@
 registry query and of two served entry points, both on the committed
 sample request: the API (``process_records``, named
 ``api:process_records``) and file ingest (JSON lines through
-``records_from_json_files`` → ``flatten`` → ``enrich`` →
-``reports_from_fact``, named ``file:records_from_json_files``; the
-stream's micro-batch body runs the same chain). It flags the
+``records_from_json_files`` → ``reports_for_batch``, named
+``file:records_from_json_files``; the stream's micro-batch body is the
+same call, so this covers all three entry points). It flags the
 anti-patterns the 100 TB posture forbids — unpartitioned windows,
 row-at-a-time Python UDFs (BatchEvalPython) and unbounded cartesian
 products — plus Exchange counts as a shuffle budget overview.
@@ -124,12 +124,8 @@ def main() -> int:
     from medical_examination_data_etl_system_spark import get_spark
     from medical_examination_data_etl_system_spark.operators.cache import cache_scope
     from medical_examination_data_etl_system_spark.pipeline import process_records
-    from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
-    from medical_examination_data_etl_system_spark.pipeline.ingest import (
-        flatten,
-        records_from_json_files,
-    )
-    from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
+    from medical_examination_data_etl_system_spark.pipeline.ingest import records_from_json_files
+    from medical_examination_data_etl_system_spark.pipeline.run import reports_for_batch
     from medical_examination_data_etl_system_spark.queries import all_queries
 
     spark = get_spark(app_name="plan-audit")
@@ -141,9 +137,7 @@ def main() -> int:
     jsonl = os.path.join(tmp.name, "records.jsonl")
     with open(jsonl, "w", encoding="utf-8") as f:
         f.writelines(json.dumps(r, ensure_ascii=False) + "\n" for r in sample)
-    builders[FILE_ENTRY] = lambda: reports_from_fact(
-        enrich(flatten(records_from_json_files(spark, jsonl)), None)
-    )
+    builders[FILE_ENTRY] = lambda: reports_for_batch(records_from_json_files(spark, jsonl))
     names = sys.argv[2:] or list(builders)
     rc = 0
     for name in names:

@@ -160,3 +160,33 @@ def custom_fact_frame() -> tuple[pd.DataFrame, list[dict]]:
     fact = pd.DataFrame(rows)
     fact["GROUPNO"] = fact["GROUPNO"].astype("float")  # merge-typical dtype
     return fact, records
+
+
+def custom_fact_dims(spark, fact: pd.DataFrame) -> dict:
+    """The four dim tables whose enrichment of ``custom_fact_frame``'s
+    records yields ``fact``: each dim is the fact projected onto its
+    join key, with one SUMMARY_CODE per distinct summary-name tuple."""
+    from medical_examination_data_etl_system_spark.schemas import (
+        DIAG_TBL_SCHEMA,
+        ITEM_GROUP_MAP_SCHEMA,
+        ITEM_META_SCHEMA,
+        SUMMARY_TBL_SCHEMA,
+    )
+
+    summary_cols = ["TCNAME_SUMMARY", "SCNAME_SUMMARY", "ENNAME_SUMMARY", "JPNAME_SUMMARY"]
+    codes = {t: f"S{i}" for i, t in enumerate(dict.fromkeys(fact[summary_cols].itertuples(index=False)))}
+    fact = fact.astype(object).assign(
+        SUMMARY_CODE=[codes[t] for t in fact[summary_cols].itertuples(index=False)],
+        GROUPNO=pd.Series([None if pd.isna(g) else int(g) for g in fact["GROUPNO"]], dtype=object),
+    )
+
+    def dim(schema):
+        rows = fact[schema.fieldNames()].drop_duplicates()
+        return spark.createDataFrame(list(rows.itertuples(index=False, name=None)), schema)
+
+    return {
+        "item_meta": dim(ITEM_META_SCHEMA),
+        "item_group_map": dim(ITEM_GROUP_MAP_SCHEMA),
+        "diag_tbl": dim(DIAG_TBL_SCHEMA),
+        "summary_tbl": dim(SUMMARY_TBL_SCHEMA),
+    }

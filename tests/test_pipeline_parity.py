@@ -9,13 +9,10 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
-from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
-from medical_examination_data_etl_system_spark.schemas import SUBSET
 
-from .fixtures import custom_fact_frame, multilang_edge_batch, sample_request
+from .fixtures import custom_fact_dims, custom_fact_frame, multilang_edge_batch, sample_request
 from .reference_harness import run_reference, run_reference_from_fact
 
 
@@ -60,20 +57,11 @@ def test_multilang_edge_parity(spark):
 
 
 def test_custom_fact_parity(spark):
-    """Non-fallback dim content: real summaries (non-default renderer
-    branch, A8 block merge), GROUPNO 0/null sentinel, A2 dedup."""
+    """Non-fallback dim content, enriched from dims projected off the
+    hand-built fact: real summaries (non-default renderer branch, A8
+    block merge), GROUPNO 0/null sentinel, A2 dedup."""
     fact, records = custom_fact_frame()
-    req_json = {r["RECORD_ID"]: json.dumps(r, ensure_ascii=False) for r in records}
-
-    sdf = spark.createDataFrame(fact)
-    sdf = sdf.withColumn(
-        "request",
-        F.udf(lambda rid: req_json.get(rid, ""))(F.col("RECORD_ID")),
-    ).select(*SUBSET, "ord", "request")
-    # reports_from_fact is unordered; put the reports in batch position
-    # (each record's first ord), the order process_records returns.
-    first_ord = fact.groupby("RECORD_ID")["ord"].min()
-    engine = sorted(reports_from_fact(sdf).collect(), key=lambda r: first_ord[r["record_id"]])
+    engine = process_records(spark, records, dims=custom_fact_dims(spark, fact)).collect()
 
     ref = run_reference_from_fact(fact.drop(columns=["ord"]), records)
     assert len(engine) == len(ref)
@@ -101,10 +89,7 @@ def test_record_without_renderable_rows_is_skipped(spark):
 def test_mock_llm_rewrite_in_report(spark):
     """Non-default summaries must be rewritten with the mock marker."""
     fact, records = custom_fact_frame()
-    sdf = spark.createDataFrame(fact).withColumn("request", F.lit("")).select(
-        *SUBSET, "ord", "request"
-    )
-    rows = reports_from_fact(sdf).collect()
+    rows = process_records(spark, records, dims=custom_fact_dims(spark, fact)).collect()
     all_reports = "\n".join(r["report"] for r in rows)
     assert "[LLM_OUTPUT]共同摘要文字" in all_reports
     assert "[LLM_OUTPUT]Own summary" in all_reports

@@ -21,7 +21,7 @@ from medical_examination_data_etl_system_spark.pipeline.ingest import (
     records_from_json_files,
     records_to_df,
 )
-from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
+from medical_examination_data_etl_system_spark.pipeline.run import reports_for_batch
 from medical_examination_data_etl_system_spark.queries import all_queries, load
 
 from .fixtures import multilang_edge_batch, sample_request
@@ -411,8 +411,9 @@ def test_runtime_bloom_filter_engages_at_scan_scale(spark):
 
 
 def test_file_ingest_plan_has_no_unpartitioned_window(spark, tmp_path):
-    """File and stream ingest need no cross-record order: the file
-    chain's plan, cached plans included, holds no single-task Window."""
+    """File and stream ingest need no cross-record order: the batch
+    body over file ingest (the stream's body too), cached plans
+    included, plans no single-task Window."""
     count_unpartitioned_windows = runpy.run_path(_PLAN_AUDIT)["_count_unpartitioned_windows"]
     src = tmp_path / "records.jsonl"
     src.write_text(
@@ -420,8 +421,8 @@ def test_file_ingest_plan_has_no_unpartitioned_window(spark, tmp_path):
         encoding="utf-8",
     )
     with cache_scope():
-        fact = enrich(flatten(records_from_json_files(spark, str(src))), None)
-        plan = reports_from_fact(fact)._jdf.queryExecution().executedPlan()
+        reports = reports_for_batch(records_from_json_files(spark, str(src)))
+        plan = reports._jdf.queryExecution().executedPlan()
         assert count_unpartitioned_windows(plan) == 0
 
 

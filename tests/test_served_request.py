@@ -6,9 +6,8 @@ from __future__ import annotations
 from medical_examination_data_etl_system_spark.api import handle_process_request
 from medical_examination_data_etl_system_spark.operators.cache import cache_scope
 from medical_examination_data_etl_system_spark.pipeline import process_records
-from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
-from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
-from medical_examination_data_etl_system_spark.pipeline.run import reports_from_fact
+from medical_examination_data_etl_system_spark.pipeline.ingest import records_to_df
+from medical_examination_data_etl_system_spark.pipeline.run import reports_for_batch
 from medical_examination_data_etl_system_spark.schemas import (
     FULLWIDTH_SRC,
     HALFWIDTH_DST,
@@ -53,10 +52,9 @@ def test_served_plan_has_no_range_exchange(spark):
         assert "rangepartitioning" not in plan.toString().lower()
 
 
-def test_reports_from_fact_has_no_global_sort(spark):
+def test_reports_for_batch_has_no_global_sort(spark):
     with cache_scope():
-        fact = enrich(flatten(records_to_df(spark, sample_request())), {})
-        qe = reports_from_fact(fact)._jdf.queryExecution()
+        qe = reports_for_batch(records_to_df(spark, sample_request()), {})._jdf.queryExecution()
         sorts = [n for n in _plan_nodes(qe.optimizedPlan()) if n.nodeName() == "Sort"]
         assert not [n for n in sorts if getattr(n, "global")()]
         assert "rangepartitioning" not in qe.executedPlan().toString().lower()
