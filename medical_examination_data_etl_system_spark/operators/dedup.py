@@ -4,9 +4,15 @@ n-gram Jaccard.
 100 TB posture:
 - exact dedup: one hash-shuffle on the fingerprint; map-side the
   fingerprint is computed inside the scan stage (codegen).
-- exact-content PRE-COLLAPSE before every near-dup operator
-  (collapse_exact, default on): quadratic candidate stages scale with
-  unique texts; member pairs are expanded back afterward, byte-identical.
+- one exact-content collapse for the near-dup family: exact copies
+  reduce to their min-id representative (``_collapse_docs``), a private
+  ``_…_pairs`` kernel scores the representatives, and
+  ``_expand_rep_pairs`` expands back to member pairs, byte-identical to
+  the kernel run on every member. Quadratic candidate stages then scale
+  with unique texts. MinHash and the md5 twins always collapse; SimHash,
+  n-gram Jaccard/containment and Hamming collapse when the one
+  ``_should_collapse`` probe finds enough duplicates; fuzzy Levenshtein's
+  own (block, prefix) grouping already merges exact copies.
 - MinHash LSH: shingle hashing and all signature mins run as exploded
   rows through codegen aggregations (no HOF lambdas, no collect_set —
   one TypedImperativeAggregate de-codegens the whole aggregation);
@@ -22,6 +28,8 @@ n-gram Jaccard.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -48,6 +56,151 @@ def dedup_documents_exact(docs: DataFrame, text_col: str = "text", id_col: str =
     """Content-exact dedup: fingerprint normalized text, keep lowest id."""
     with_fp = docs.withColumn("fingerprint", content_fingerprint(F.col(text_col)))
     return dedup_exact_keep_first(with_fp, ["fingerprint"], id_col)
+
+
+# ---------------------------------------------------------------------------
+# Exact-content collapse shared by the near-dup family
+# ---------------------------------------------------------------------------
+
+# Collapse iff the probe's distinct keys fall below this share of rows,
+# i.e. ≳20 % duplicates: far above HLL's ~5 % error, and comfortably
+# below the 10×-replication regime where collapse is worth 20× (measured).
+_COLLAPSE_RATIO = 0.8
+
+
+def _should_collapse(df: DataFrame, *key_cols: Column) -> bool:
+    """Decide whether exact-content collapse pays (VERDICT r3: "skip the
+    collapse when distinct fingerprints ≈ rows — one cheap agg decides").
+
+    Collapse is OUTPUT-INVARIANT (pinned in tests), so this is purely a
+    cost decision: the quadratic candidate stages scale with unique²,
+    which only beats the collapse's own window shuffle + expansion
+    joins when duplication is substantial. One approx_count_distinct
+    over xxhash64 of ``key_cols`` (HLL partials — no exact-distinct
+    shuffle; xxhash64, not md5, since it is never compared across
+    engines): collapse iff distinct < ``_COLLAPSE_RATIO`` × rows."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"), F.approx_count_distinct(F.xxhash64(*key_cols)).alias("d")
+    ).collect()[0]
+    return row["d"] < _COLLAPSE_RATIO * max(row["n"], 1)
+
+
+def _collapse_docs(df: DataFrame, id_col: str, *key_cols: Column) -> tuple[DataFrame, DataFrame]:
+    """(members, reps) for exact-content collapse in ONE window pass.
+
+    members: (_id, _rep) — every row mapped to the min-id representative
+    of its ``key_cols`` group. reps: the representative rows with ALL of
+    ``df``'s columns, filtered from the SAME windowed frame (persisted)
+    — no join back onto df, which cost a second full-docs shuffle. The
+    window's exchange on the key is the one unavoidable shuffle of any
+    exact-dedup pass.
+    """
+    windowed = persist_tracked(
+        df.withColumn("_rep", F.min(id_col).over(W.partitionBy(*key_cols)))
+    )
+    members = windowed.select(F.col(id_col).alias("_id"), "_rep")
+    reps = windowed.filter(F.col(id_col) == F.col("_rep")).drop("_rep")
+    return members, reps
+
+
+def _expand_rep_pairs(
+    members: DataFrame,
+    rep_pairs: DataFrame,
+    metric: str,
+    intra_value: float,
+    intra_reps: DataFrame | None = None,
+) -> DataFrame:
+    """Member pairs ``(id_a, id_b, metric)`` from representative pairs.
+
+    Copies share everything a kernel reads (shingle, token and gram
+    sets, set sizes, prefixes, hash values), so every cross-group
+    member pair inherits its representatives' ``metric`` and copies
+    within a group pair at ``intra_value`` (1.0 for similarities, 0 for
+    distances). ``intra_reps`` (a ``_rep`` frame), when given, limits
+    the intra pairs to those groups. Output-bound: array-free joins on
+    the (_id, _rep) members frame."""
+    ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
+    mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
+    cross = (
+        rep_pairs.join(ma, "id_a")
+        .join(mb, "id_b")
+        .select(
+            F.least("_ma", "_mb").alias("id_a"),
+            F.greatest("_ma", "_mb").alias("id_b"),
+            metric,
+        )
+    )
+    x, y = members.alias("x"), members.alias("y")
+    intra = x.join(
+        y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id"))
+    )
+    if intra_reps is not None:
+        intra = intra.join(intra_reps, F.col("x._rep") == intra_reps._rep)
+    intra = intra.select(
+        F.col("x._id").alias("id_a"),
+        F.col("y._id").alias("id_b"),
+        F.lit(intra_value).alias(metric),
+    )
+    return cross.unionByName(intra)
+
+
+def _collapsed_text_pairs(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    kernel,
+    metric: str,
+    intra_value: float,
+    block_col: str | None = None,
+    min_tokens: int | None = None,
+) -> DataFrame:
+    """Exact-content collapse around a pair ``kernel``: exact copies
+    (same normalized text, and same block when ``block_col`` is given —
+    only same-block pairs are ever compared, so cross-block copies must
+    NOT collapse) reduce to one representative, ``kernel`` scores the
+    representatives, and the pairs expand back to member pairs.
+
+    ``min_tokens`` gates the intra pairs for the n-gram metrics:
+    zero-gram docs (< n tokens) never pair in the direct form — their
+    gram sets are empty, and 0/0 yields no row — so exact copies of
+    such docs must not pair here either: only groups whose
+    representative has ≥ ``min_tokens`` tokens expand."""
+    blocks = [F.col(block_col)] if block_col else []
+    members, reps = _collapse_docs(docs, id_col, content_fingerprint(F.col(text_col)), *blocks)
+    intra_reps = None
+    if min_tokens is not None:
+        intra_reps = (
+            reps.select(
+                F.col(id_col).alias("_rep"),
+                F.split(normalized_text(F.col(text_col)), " ").alias("_t"),
+            )
+            .filter(F.size("_t") >= min_tokens)
+            .select("_rep")
+        )
+    return _expand_rep_pairs(members, kernel(reps), metric, intra_value, intra_reps).orderBy(
+        "id_a", "id_b"
+    )
+
+
+def _probe_gated_text_pairs(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    kernel,
+    metric: str,
+    intra_value: float,
+    block_col: str | None = None,
+    min_tokens: int | None = None,
+) -> DataFrame:
+    """:func:`_collapsed_text_pairs` when ``_should_collapse`` finds
+    enough exact copies (same key as the collapse), else ``kernel`` on
+    every doc."""
+    blocks = [F.col(block_col)] if block_col else []
+    if _should_collapse(docs, *blocks, normalized_text(F.col(text_col))):
+        return _collapsed_text_pairs(
+            docs, text_col, id_col, kernel, metric, intra_value, block_col, min_tokens
+        )
+    return kernel(docs).orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------
@@ -83,55 +236,6 @@ def shingle_hash_rows(
     ).select("_id", F.xxhash64(F.col("_norm").substr(F.col("_pos"), F.lit(k))).alias("_h"))
 
 
-def _should_collapse(
-    docs: DataFrame,
-    text_col: str,
-    extra_group_cols: list[str] | None = None,
-    unique_skip_ratio: float = 0.8,
-) -> bool:
-    """Decide whether exact-content pre-collapse pays (VERDICT r3:
-    "skip the collapse when distinct fingerprints ≈ rows — one cheap
-    agg decides").
-
-    Collapse is OUTPUT-INVARIANT (pinned in tests), so this is purely a
-    cost decision: the quadratic candidate stages scale with unique²,
-    which only beats the collapse's own window shuffle + expansion
-    joins when duplication is substantial. One approx_count_distinct
-    over the content hash (HLL partials — no exact-distinct shuffle,
-    xxhash64 not md5 since it is never compared across engines):
-    collapse iff distinct < ``unique_skip_ratio`` × rows, i.e. ≳20%
-    duplicates — far above HLL's ~5% error, and comfortably below the
-    10×-replication regime where collapse is worth 20× (measured)."""
-    fp = F.xxhash64(*[F.col(c) for c in (extra_group_cols or [])], normalized_text(F.col(text_col)))
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n"), F.approx_count_distinct(fp).alias("d")
-    ).collect()[0]
-    return row["d"] < unique_skip_ratio * max(row["n"], 1)
-
-
-def _collapse_docs(
-    docs: DataFrame, text_col: str, id_col: str, extra_group_cols: list[str] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(members, reps) for exact-content collapse in ONE window pass.
-
-    members: (_id, _rep) — every doc mapped to the min-id representative
-    of its (fingerprint[, extra_group_cols]) group. reps: the
-    representative docs with ALL original columns, filtered from the
-    SAME windowed frame (persisted) — no join back onto docs, which
-    cost a second full-docs shuffle. The window's exchange on the
-    fingerprint is the one unavoidable shuffle of any exact-dedup pass.
-    """
-    windowed = persist_tracked(
-        docs.withColumn("_fp_", content_fingerprint(F.col(text_col))).withColumn(
-            "_rep",
-            F.min(id_col).over(W.partitionBy("_fp_", *(extra_group_cols or []))),
-        )
-    )
-    members = windowed.select(F.col(id_col).alias("_id"), "_rep")
-    reps = windowed.filter(F.col(id_col) == F.col("_rep")).drop("_fp_", "_rep")
-    return members, reps
-
-
 def minhash_md5_exact(
     docs: DataFrame,
     text_col: str = "text",
@@ -156,38 +260,22 @@ def minhash_md5_exact(
     value-exactly, so banding, candidate generation, AND the verified
     Jaccard all sit under the driver hash gate.
 
-    The exact-content pre-collapse is MANDATORY here, and — unlike the
-    production path's cost-only probe — it is part of the certified
-    semantics: the md5 content fingerprint is engine-deterministic, so
-    the oracle replays collapse, representative pipeline, and member
-    expansion literally. Without it the band-bucket self-join is
+    The exact-content collapse is part of the certified semantics here,
+    not only a cost choice: the md5 content fingerprint is
+    engine-deterministic, so the oracle replays collapse,
+    representative pipeline, and member expansion literally. Without it the band-bucket self-join is
     member² on duplicate-heavy corpora (the 100× replica corpus made
     the uncollapsed form fail outright on candidate volume)."""
-    members, reps = _collapse_docs(docs, text_col, id_col)
-    rep_pairs = _minhash_md5_rep_pairs(
-        reps, text_col, id_col, shingle_k, num_hashes, bands, threshold
+    kernel = partial(
+        _minhash_md5_rep_pairs,
+        text_col=text_col,
+        id_col=id_col,
+        shingle_k=shingle_k,
+        num_hashes=num_hashes,
+        bands=bands,
+        threshold=threshold,
     )
-    ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-    mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    x, y = members.alias("x"), members.alias("y")
-    intra = (
-        x.join(y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id")))
-        .select(
-            F.col("x._id").alias("id_a"),
-            F.col("y._id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra).orderBy("id_a", "id_b")
+    return _collapsed_text_pairs(docs, text_col, id_col, kernel, "jaccard", 1.0)
 
 
 def minhash_estimate_calibration(
@@ -209,7 +297,7 @@ def minhash_estimate_calibration(
     the whole surface (candidates, estimate, exact value, error) is
     exact-hash-checkable against a SQL oracle; no threshold filter —
     calibration wants the full candidate set, errors included."""
-    _, reps = _collapse_docs(docs, text_col, id_col)
+    _, reps = _collapse_docs(docs, id_col, content_fingerprint(F.col(text_col)))
     return _minhash_md5_rep_pairs(
         reps, text_col, id_col, shingle_k, num_hashes, bands, 0.0, with_estimate=True
     )
@@ -247,7 +335,7 @@ def minhash_incremental_dedup(
     job (docs_semantic_dedup); dedup-on-ingest wants the direct match.
     Same md5 determinism as the exact twin → full DuckDB oracle.
     """
-    members, reps = _collapse_docs(docs, text_col, id_col)
+    members, reps = _collapse_docs(docs, id_col, content_fingerprint(F.col(text_col)))
     pairs = _minhash_md5_rep_pairs(
         reps,
         text_col,
@@ -455,22 +543,18 @@ def minhash_near_duplicates(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
-    collapse_exact: bool | str = True,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup pairs, exact-Jaccard verified.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
 
-    ``collapse_exact``: True (default), False, or "auto" (probe via
-    ``_should_collapse``). Output is identical in all three modes.
-    Unlike SimHash/n-gram (whose default IS "auto"), MinHash keeps the
-    collapse unconditionally: measured ~1 s FASTER even on a
-    99.8%-unique sf0.1 corpus (the cached representative frame feeds
+    Exact-content duplicates always reduce to one representative BEFORE
+    shingling (no probe), and representative pairs expand back to member
+    pairs afterward. Unlike SimHash/n-gram, whose collapse is
+    probe-gated, MinHash measured faster collapsed even on the
+    mostly-unique sf0.1 corpus (the cached representative frame feeds
     the 33-column signature aggregate and the verification joins), and
-    it is the safe scale default for duplicate-heavy crawls. When
-    collapsing: exact-content duplicates reduce to one representative
-    BEFORE shingling, and representative pairs expand back to member
-    pairs afterward.
+    the collapse is the safe scale default for duplicate-heavy crawls.
     Identical output — copies of a text have identical shingle sets, so
     intra-group pairs are jaccard 1.0 and every cross-group member pair
     inherits its representatives' jaccard — but the quadratic stages
@@ -481,36 +565,29 @@ def minhash_near_duplicates(
     otherwise pays member² where it owes unique². The expansion is
     output-bound (three array-free joins).
     """
-    if collapse_exact == "auto":
-        collapse_exact = _should_collapse(docs, text_col)
-    if collapse_exact:
-        members, reps = _collapse_docs(docs, text_col, id_col)
-        rep_pairs = minhash_near_duplicates(
-            reps, text_col, id_col, shingle_k, num_hashes, bands, threshold,
-            collapse_exact=False,
-        )
-        ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-        mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-        cross = (
-            rep_pairs.join(ma, "id_a")
-            .join(mb, "id_b")
-            .select(
-                F.least("_ma", "_mb").alias("id_a"),
-                F.greatest("_ma", "_mb").alias("id_b"),
-                "jaccard",
-            )
-        )
-        x, y = members.alias("x"), members.alias("y")
-        intra = (
-            x.join(y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id")))
-            .select(
-                F.col("x._id").alias("id_a"),
-                F.col("y._id").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        return cross.unionByName(intra).orderBy("id_a", "id_b")
+    kernel = partial(
+        _minhash_pairs,
+        text_col=text_col,
+        id_col=id_col,
+        shingle_k=shingle_k,
+        num_hashes=num_hashes,
+        bands=bands,
+        threshold=threshold,
+    )
+    return _collapsed_text_pairs(docs, text_col, id_col, kernel, "jaccard", 1.0)
 
+
+def _minhash_pairs(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """The MinHash kernel of :func:`minhash_near_duplicates` over every
+    doc of ``docs``, unordered."""
     rows = num_hashes // bands
     # Shingle set AND all num_hashes signature mins come out of ONE
     # aggregation over the exploded shingle rows — min(xxhash64(i, h))
@@ -605,7 +682,6 @@ def minhash_near_duplicates(
         verified.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -659,31 +735,12 @@ def simhash_md5_exact(
     chunk), ``bit_count(xor)`` verification. 60 bits instead of 64:
     the hash is the 15-hex-char md5 prefix (16 chars would set the
     sign bit of a BIGINT cast — engine-dependent overflow), so chunks
-    are 4×15 bits. Mandatory exact-content pre-collapse, certified
-    like the MinHash twin's (md5 fingerprint replays in the oracle)."""
-    members, reps = _collapse_docs(docs, text_col, id_col)
-    rep_pairs = _simhash_md5_rep_pairs(reps, text_col, id_col, max_hamming)
-    ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-    mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "hamming",
-        )
+    are 4×15 bits. The exact-content collapse is certified like the
+    MinHash twin's (md5 fingerprint replays in the oracle)."""
+    kernel = partial(
+        _simhash_md5_rep_pairs, text_col=text_col, id_col=id_col, max_hamming=max_hamming
     )
-    x, y = members.alias("x"), members.alias("y")
-    intra = (
-        x.join(y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id")))
-        .select(
-            F.col("x._id").alias("id_a"),
-            F.col("y._id").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra).orderBy("id_a", "id_b")
+    return _collapsed_text_pairs(docs, text_col, id_col, kernel, "hamming", 0)
 
 
 def _simhash_md5_rep_pairs(
@@ -691,8 +748,6 @@ def _simhash_md5_rep_pairs(
 ) -> DataFrame:
     """Core md5-SimHash pipeline over exact-distinct representatives —
     see :func:`simhash_md5_exact`."""
-    from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
-
     toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("_tok"),
@@ -744,7 +799,6 @@ def simhash_near_duplicates(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
 
@@ -752,40 +806,19 @@ def simhash_near_duplicates(
     one chunk (pigeonhole), so candidate generation is 4 equi-joins, not
     an O(n²) scan.
 
-    ``collapse_exact``: same duplicate pre-collapse as MinHash ("auto"
-    probes first — VERDICT r3's simhash bench anomaly was exactly this
-    collapse buying nothing on a mostly-unique corpus) — exact copies
-    share the token multiset, hence the fingerprint, hence hamming 0
-    intra-group and the representatives' hamming cross-group; the chunk
-    join's bucket² then scales with unique texts."""
-    if collapse_exact == "auto":
-        collapse_exact = _should_collapse(docs, text_col)
-    if collapse_exact:
-        members, reps = _collapse_docs(docs, text_col, id_col)
-        rep_pairs = simhash_near_duplicates(
-            reps, text_col, id_col, max_hamming, collapse_exact=False
-        )
-        ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-        mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-        cross = (
-            rep_pairs.join(ma, "id_a")
-            .join(mb, "id_b")
-            .select(
-                F.least("_ma", "_mb").alias("id_a"),
-                F.greatest("_ma", "_mb").alias("id_b"),
-                "hamming",
-            )
-        )
-        x, y = members.alias("x"), members.alias("y")
-        intra = (
-            x.join(y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id")))
-            .select(
-                F.col("x._id").alias("id_a"),
-                F.col("y._id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        return cross.unionByName(intra).orderBy("id_a", "id_b")
+    Same exact-content collapse as MinHash, but probe-gated
+    (``_should_collapse`` — VERDICT r3's simhash bench anomaly was
+    exactly this collapse buying nothing on a mostly-unique corpus):
+    exact copies share the token multiset, hence the fingerprint, hence
+    hamming 0 intra-group and the representatives' hamming cross-group;
+    the chunk join's bucket² then scales with unique texts."""
+    kernel = partial(_simhash_pairs, text_col=text_col, id_col=id_col, max_hamming=max_hamming)
+    return _probe_gated_text_pairs(docs, text_col, id_col, kernel, "hamming", 0)
+
+
+def _simhash_pairs(docs: DataFrame, text_col: str, id_col: str, max_hamming: int) -> DataFrame:
+    """The SimHash kernel of :func:`simhash_near_duplicates` over every
+    doc of ``docs``, unordered."""
     fps = simhash_fingerprints(docs, text_col, id_col)
     chunks = fps.select(
         F.col(id_col).alias("_id"),
@@ -809,7 +842,6 @@ def simhash_near_duplicates(
         .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -826,110 +858,48 @@ def ngram_jaccard_pairs(
     n: int = 2,
     threshold: float = 0.2,
     max_df: int = 10_000,
-    collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs within the same block
     (blocking keeps the pair space linear-ish; at 100 TB the block
     column would be a coarse cluster key such as an LSH band).
 
-    ``collapse_exact``: same pre-collapse as ``minhash_near_duplicates``
-    — exact-content duplicates WITHIN A BLOCK (the group key includes
-    the block, since only same-block pairs are ever compared) reduce to
-    one representative before gram building; identical token sets make
-    the expansion exact (intra-group jaccard 1.0, cross pairs inherit
-    the representatives' value). The inverted index's Σdf² then scales
-    with unique texts per block, not raw members. "auto" probes
-    uniqueness first (``_should_collapse``, block-aware: only same-block
-    duplicates are collapsible)."""
-    if collapse_exact == "auto":
-        collapse_exact = _should_collapse(
-            docs, text_col, extra_group_cols=[block_col] if block_col else None
-        )
-    if collapse_exact:
-        return _collapse_expand_pairs(
-            docs,
-            text_col,
-            id_col,
-            block_col,
-            n,
-            metric_col="jaccard",
-            direct_fn=lambda reps: ngram_jaccard_pairs(
-                reps, text_col, id_col, block_col, n, threshold, max_df,
-                collapse_exact=False,
-            ),
-        )
-    pairs = _gram_pair_counts(docs, text_col, id_col, block_col, n, max_df)
-    jaccard = F.round(F.col("_inter") / (F.col("n_a") + F.col("n_b") - F.col("_inter")), 4)
-    return (
-        pairs.select("id_a", "id_b", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
+    Probe-gated exact-content collapse (``_should_collapse``,
+    block-aware: only same-block duplicates are collapsible) — exact
+    duplicates WITHIN A BLOCK reduce to one representative before gram
+    building; identical token sets make the expansion exact (intra-group
+    jaccard 1.0, cross pairs inherit the representatives' value). The
+    inverted index's Σdf² then scales with unique texts per block, not
+    raw members."""
+    kernel = partial(
+        _ngram_jaccard_pairs,
+        text_col=text_col,
+        id_col=id_col,
+        block_col=block_col,
+        n=n,
+        threshold=threshold,
+        max_df=max_df,
+    )
+    return _probe_gated_text_pairs(
+        docs, text_col, id_col, kernel, "jaccard", 1.0, block_col, min_tokens=n
     )
 
 
-def _collapse_expand_pairs(
+def _ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str,
     id_col: str,
     block_col: str | None,
-    n: int | None,
-    metric_col: str,
-    direct_fn,
-    intra_value: float = 1.0,
+    n: int,
+    threshold: float,
+    max_df: int,
 ) -> DataFrame:
-    """Exact-content pre-collapse shared by the pairwise text metrics:
-    same-block exact duplicates reduce to one representative,
-    ``direct_fn`` scores representative pairs, and the result expands
-    back — cross-group pairs inherit the representatives' metric
-    (identical texts ⇒ identical gram sets, sizes, and prefixes, so
-    Jaccard, containment, and edit distance are all preserved
-    exactly), intra-group pairs score ``intra_value`` (1.0 for
-    similarity metrics, 0 for distances). ``n`` gates the intra
-    expansion to groups whose representative has ≥ 1 n-gram (pass
-    ``None`` for metrics defined on every text, e.g. edit distance).
-    Group key includes the block: only same-block pairs are ever
-    compared, so cross-block exact dups must NOT collapse."""
-    members, reps = _collapse_docs(
-        docs, text_col, id_col, extra_group_cols=[block_col] if block_col else None
+    """The n-gram Jaccard kernel of :func:`ngram_jaccard_pairs` over
+    every doc of ``docs``, unordered."""
+    pairs = _gram_pair_counts(docs, text_col, id_col, block_col, n, max_df)
+    jaccard = F.round(F.col("_inter") / (F.col("n_a") + F.col("n_b") - F.col("_inter")), 4)
+    return pairs.select("id_a", "id_b", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
-    rep_pairs = direct_fn(reps)
-    ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-    mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            metric_col,
-        )
-    )
-    x, y = members.alias("x"), members.alias("y")
-    intra = x.join(
-        y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id"))
-    )
-    if n is not None:
-        # Zero-gram docs (< n tokens) never pair in the direct form —
-        # their gram sets are empty, and 0/0 yields no row — so exact
-        # copies of such docs must not pair here either: the direct
-        # form's metric is undefined (null), not 1.0. Only groups whose
-        # representative HAS grams expand; short-doc groups are
-        # excluded by requiring the rep to carry >= 1 gram.
-        has_grams = (
-            reps.select(
-                F.col(id_col).alias("_rep"),
-                F.split(normalized_text(F.col(text_col)), " ").alias("_t"),
-            )
-            .filter(F.size("_t") >= n)
-            .select("_rep")
-        )
-        intra = intra.join(has_grams, F.col("x._rep") == has_grams._rep)
-    intra = intra.select(
-        F.col("x._id").alias("id_a"),
-        F.col("y._id").alias("id_b"),
-        F.lit(intra_value).alias(metric_col),
-    )
-    return cross.unionByName(intra).orderBy("id_a", "id_b")
 
 
 def fuzzy_levenshtein_pairs(
@@ -939,7 +909,6 @@ def fuzzy_levenshtein_pairs(
     block_col: str | None = "source",
     prefix_len: int = 24,
     threshold: int = 6,
-    collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Edit-distance fuzzy matching on normalized ``prefix_len``-char
     prefixes within the same block — the record-linkage primitive for
@@ -948,31 +917,12 @@ def fuzzy_levenshtein_pairs(
     shift-bounded probes — see the inline plan below), verified with
     the 3-arg BANDED Levenshtein (O(len·k), early exit past the
     threshold), so pair volume tracks segment-hash collisions, never
-    Σ|block|². The adaptive exact-content pre-collapse (same
-    ``_should_collapse`` / ``_collapse_expand_pairs`` machinery as the
-    n-gram metrics, intra distance 0) additionally short-circuits
-    duplicate-heavy corpora before any per-prefix work."""
-    if collapse_exact == "auto":
-        collapse_exact = _should_collapse(
-            docs, text_col, extra_group_cols=[block_col] if block_col else None
-        )
-    if collapse_exact:
-        return _collapse_expand_pairs(
-            docs,
-            text_col,
-            id_col,
-            block_col,
-            None,
-            metric_col="distance",
-            direct_fn=lambda reps: fuzzy_levenshtein_pairs(
-                reps, text_col, id_col, block_col, prefix_len, threshold,
-                collapse_exact=False,
-            ),
-            intra_value=0,
-        )
-    # Direct form: PassJoin-style partition filter (Li/Deng/Feng, PVLDB
-    # 2011) instead of the within-block all-pairs join the first cut
-    # used. The adversarial (mostly-unique) 100× corpus killed the
+    Σ|block|². Exact copies need no collapse of their own: the
+    (block, prefix) grouping below already merges every set of them
+    (equal normalized texts have equal prefixes)."""
+    # PassJoin-style partition filter (Li/Deng/Feng, PVLDB 2011) instead
+    # of the within-block all-pairs join the first cut used. The
+    # adversarial (mostly-unique) 100× corpus killed the
     # all-pairs form: 20 blocks × ~25k unique prefixes each is ~10^10
     # candidate pairs squeezed through ~20-way join parallelism
     # (>22 min, 2 cores busy), while the TRUE answer is ~4×10^5 pairs —
@@ -989,7 +939,7 @@ def fuzzy_levenshtein_pairs(
     #      candidates (hash or pigeonhole slack) die in-stage, nothing
     #      quadratic is ever shuffled or distinct'd;
     #   4. expand group pairs back to member pairs (cross: the groups'
-    #      distance; intra: 0).
+    #      distance; intra: 0) with the family's ``_expand_rep_pairs``.
     # Strings shorter than k+1 chars cannot host k+1 non-empty segments
     # and take a tiny all-pairs branch against partners within the
     # length filter (both sides < 2k+1 chars — a bounded sliver).
@@ -1000,15 +950,8 @@ def fuzzy_levenshtein_pairs(
         (F.col(block_col) if block_col else F.lit("all")).alias("_blk"),
         F.substring(normalized_text(F.col(text_col)), 1, prefix_len).alias("_pfx"),
     ).withColumn("_len", F.length("_pfx"))
-    grouped = persist_tracked(
-        t.withColumn("_gid", F.min("_id").over(W.partitionBy("_blk", "_pfx")))
-    )
-    members = grouped.select("_id", "_gid")
-    groups = persist_tracked(
-        grouped.filter(F.col("_id") == F.col("_gid")).select(
-            F.col("_gid").alias("_id"), "_blk", "_pfx", "_len"
-        )
-    )
+    members, groups = _collapse_docs(t, "_id", F.col("_blk"), F.col("_pfx"))
+    groups = persist_tracked(groups)
 
     # even segmentation of an _la-char string: segment i spans
     # [floor(i·L/nseg)+1, floor((i+1)·L/nseg)] — disjoint, complete.
@@ -1077,8 +1020,8 @@ def fuzzy_levenshtein_pairs(
             & (F.col("i._id") < F.col("p._idb")),
         )
         .select(
-            F.col("i._id").alias("gid_a"),
-            F.col("p._idb").alias("gid_b"),
+            F.col("i._id").alias("id_a"),
+            F.col("p._idb").alias("id_b"),
             dist.alias("distance"),
         )
         .filter(F.col("distance").between(0, threshold))
@@ -1095,8 +1038,8 @@ def fuzzy_levenshtein_pairs(
             (F.col("x._blk") == F.col("y._blk")) & (F.col("x._id") != F.col("y._id")),
         )
         .select(
-            F.least("x._id", "y._id").alias("gid_a"),
-            F.greatest("x._id", "y._id").alias("gid_b"),
+            F.least("x._id", "y._id").alias("id_a"),
+            F.greatest("x._id", "y._id").alias("id_b"),
             tdist.alias("distance"),
         )
         .filter(F.col("distance").between(0, threshold))
@@ -1104,26 +1047,7 @@ def fuzzy_levenshtein_pairs(
     )
     group_pairs = cand.unionByName(tiny_pairs)
 
-    ma = members.select(F.col("_gid").alias("gid_a"), F.col("_id").alias("_ma"))
-    mb = members.select(F.col("_gid").alias("gid_b"), F.col("_id").alias("_mb"))
-    cross = (
-        group_pairs.join(ma, "gid_a")
-        .join(mb, "gid_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-            "distance",
-        )
-    )
-    mx, my = members.alias("mx"), members.alias("my")
-    intra = mx.join(
-        my, (F.col("mx._gid") == F.col("my._gid")) & (F.col("mx._id") < F.col("my._id"))
-    ).select(
-        F.col("mx._id").alias("id_a"),
-        F.col("my._id").alias("id_b"),
-        F.lit(0).alias("distance"),
-    )
-    return cross.unionByName(intra).orderBy("id_a", "id_b")
+    return _expand_rep_pairs(members, group_pairs, "distance", 0).orderBy("id_a", "id_b")
 
 
 def _gram_pair_counts(
@@ -1215,7 +1139,6 @@ def ngram_containment_pairs(
     n: int = 2,
     threshold: float = 0.6,
     max_df: int = 10_000,
-    collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs: |A∩B| / min(|A|, |B|) ≥
     ``threshold`` within the same block.
@@ -1228,33 +1151,39 @@ def ngram_containment_pairs(
     distinction). Same single-shuffle inverted-index plan as
     ``ngram_jaccard_pairs`` (shared ``_gram_pair_counts`` core), so the
     100 TB cost model — Σ_g df(g)² pair volume under a structural
-    df-cap — is identical, including the adaptive exact-content
-    pre-collapse (containment survives the expansion exactly: equal
-    token sets have equal gram sets AND sizes).
+    df-cap — is identical, including the probe-gated exact-content
+    collapse (containment survives the expansion exactly: equal token
+    sets have equal gram sets AND sizes).
     """
-    if collapse_exact == "auto":
-        collapse_exact = _should_collapse(
-            docs, text_col, extra_group_cols=[block_col] if block_col else None
-        )
-    if collapse_exact:
-        return _collapse_expand_pairs(
-            docs,
-            text_col,
-            id_col,
-            block_col,
-            n,
-            metric_col="containment",
-            direct_fn=lambda reps: ngram_containment_pairs(
-                reps, text_col, id_col, block_col, n, threshold, max_df,
-                collapse_exact=False,
-            ),
-        )
+    kernel = partial(
+        _ngram_containment_pairs,
+        text_col=text_col,
+        id_col=id_col,
+        block_col=block_col,
+        n=n,
+        threshold=threshold,
+        max_df=max_df,
+    )
+    return _probe_gated_text_pairs(
+        docs, text_col, id_col, kernel, "containment", 1.0, block_col, min_tokens=n
+    )
+
+
+def _ngram_containment_pairs(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_col: str | None,
+    n: int,
+    threshold: float,
+    max_df: int,
+) -> DataFrame:
+    """The n-gram containment kernel of :func:`ngram_containment_pairs`
+    over every doc of ``docs``, unordered."""
     pairs = _gram_pair_counts(docs, text_col, id_col, block_col, n, max_df)
     containment = F.round(F.col("_inter") / F.least("n_a", "n_b"), 4)
-    return (
-        pairs.select("id_a", "id_b", containment.alias("containment"))
-        .filter(F.col("containment") >= threshold)
-        .orderBy("id_a", "id_b")
+    return pairs.select("id_a", "id_b", containment.alias("containment")).filter(
+        F.col("containment") >= threshold
     )
 
 
@@ -1265,7 +1194,6 @@ def hamming_near_duplicates(
     max_hamming: int = 5,
     bits: int = 60,
     chunk_bits: int = 10,
-    collapse_exact: bool | str = "auto",
 ) -> DataFrame:
     """Near-dup pairs among integer perceptual hashes by Hamming
     distance ≤ ``max_hamming`` — the generic form of the SimHash
@@ -1276,62 +1204,33 @@ def hamming_near_duplicates(
     (id, chunk_idx, chunk_val) longs, verification is bit_count(xor) —
     pure JVM, no hash recomputation, no arrays.
 
-    ``collapse_exact`` ("auto" default): on a duplicate-heavy media
-    corpus (re-uploads, mirror crawls) identical hashes first collapse
-    to a min-id representative, banding runs on DISTINCT hash values
-    only, and pairs expand back afterward — identical output (equal
-    hashes ⇒ Hamming 0 intra-pairs; cross-pairs inherit their
-    representatives' distance, xor being value- not id-dependent), but
-    every candidate/banding stage scales with unique hashes instead of
-    members². Same discipline as the text near-dups' exact-content
-    pre-collapse; the probe is one approx_count_distinct (HLL partials)
-    so the unique-heavy path pays a single cheap agg. The member-pair
-    expansion joins are output-bound — on a 100-copy-clique corpus the
-    OUTPUT is inherently quadratic in copies, but no banding/shuffle
-    stage is."""
-    if collapse_exact == "auto":
-        probe = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(F.col(hash_col)).alias("d"),
-        ).collect()[0]
-        collapse_exact = probe["d"] < 0.8 * max(probe["n"], 1)
-    if collapse_exact:
-        windowed = persist_tracked(
-            # null hashes can never pair (join keys / bit_count(xor) drop
-            # them in the direct path) — exclude them so the Hamming-0
-            # intra expansion stays byte-identical to the direct twin.
-            df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-            .filter(F.col("_h").isNotNull())
-            .withColumn("_rep", F.min("_id").over(W.partitionBy("_h")))
-        )
-        members = windowed.select("_id", "_rep")
-        reps = windowed.filter(F.col("_id") == F.col("_rep")).select(
-            F.col("_id").alias(id_col), F.col("_h").alias(hash_col)
-        )
-        rep_pairs = hamming_near_duplicates(
-            reps, id_col, hash_col, max_hamming, bits, chunk_bits, collapse_exact=False
-        )
-        ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ma"))
-        mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_mb"))
-        cross = (
-            rep_pairs.join(ma, "id_a")
-            .join(mb, "id_b")
-            .select(
-                F.least("_ma", "_mb").alias("id_a"),
-                F.greatest("_ma", "_mb").alias("id_b"),
-                "hamming",
-            )
-        )
-        x, y = members.alias("x"), members.alias("y")
-        intra = (
-            x.join(y, (F.col("x._rep") == F.col("y._rep")) & (F.col("x._id") < F.col("y._id")))
-            .select(
-                F.col("x._id").alias("id_a"),
-                F.col("y._id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        return cross.unionByName(intra)
+    Probe-gated exact collapse (``_should_collapse`` on the hash): on a
+    duplicate-heavy media corpus (re-uploads, mirror crawls) identical
+    hashes first collapse to a min-id representative, banding runs on
+    DISTINCT hash values only, and pairs expand back afterward —
+    identical output (equal hashes ⇒ Hamming 0 intra-pairs; cross-pairs
+    inherit their representatives' distance, xor being value- not
+    id-dependent), but every candidate/banding stage scales with unique
+    hashes instead of members². The member-pair expansion joins are
+    output-bound — on a 100-copy-clique corpus the OUTPUT is inherently
+    quadratic in copies, but no banding/shuffle stage is. Unordered."""
+    if not _should_collapse(df, F.col(hash_col)):
+        return _hamming_pairs(df, id_col, hash_col, max_hamming, bits, chunk_bits)
+    # null hashes can never pair (join keys / bit_count(xor) drop them in
+    # the kernel) — exclude them so the Hamming-0 intra expansion stays
+    # byte-identical to the kernel run on every row.
+    members, reps = _collapse_docs(
+        df.select(id_col, hash_col).filter(F.col(hash_col).isNotNull()), id_col, F.col(hash_col)
+    )
+    rep_pairs = _hamming_pairs(reps, id_col, hash_col, max_hamming, bits, chunk_bits)
+    return _expand_rep_pairs(members, rep_pairs, "hamming", 0)
+
+
+def _hamming_pairs(
+    df: DataFrame, id_col: str, hash_col: str, max_hamming: int, bits: int, chunk_bits: int
+) -> DataFrame:
+    """The chunk-banding kernel of :func:`hamming_near_duplicates` over
+    every row of ``df``, unordered."""
     n_chunks = bits // chunk_bits
     if max_hamming > n_chunks - 1:
         raise ValueError(f"banding finds ≤ {n_chunks - 1}, asked {max_hamming}")

@@ -120,81 +120,52 @@ def with_rolling_fingerprint(
     text_col: str = "text",
     window: int = 8,
     out_col: str = "roll_fp",
-    hash_fn: str = "xxhash64",
-    id_col: str | None = "doc_id",
-    collapse_exact: bool | str = "auto",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Winnowing-style document fingerprint: min hash over character
-    ``window``-grams of the normalized text.
+    """Winnowing-style document fingerprint: min md5 over character
+    ``window``-grams of the normalized text (md5 so DuckDB computes the
+    identical digest). ``id_col`` names a unique key column of ``df``.
 
-    ``hash_fn``: "xxhash64" (default — ~2.5× faster, engine-side) or
-    "md5" (cross-engine: DuckDB computes the identical digest, used by
-    the oracle-checked query).
+    Execution: gram positions are EXPLODED and min-aggregated — hashing
+    runs inside whole-stage codegen with map-side partial min, then an
+    equi join re-attaches the fingerprint (per-key frame: NOT
+    broadcast-hinted — it is corpus-sized; AQE picks broadcast at small
+    SF and a co-partitioned shuffle join at scale). A ``transform``
+    lambda is CodegenFallback: ~1M interpreted md5 calls cost ~4 s at
+    sf0.1 where the exploded form is sub-second.
 
-    Execution: when ``id_col`` names a unique key column, gram
-    positions are EXPLODED and min-aggregated — hashing runs inside
-    whole-stage codegen with map-side partial min, then an id-equi join
-    re-attaches the fingerprint (per-doc frame: NOT broadcast-hinted —
-    it is corpus-sized; AQE picks broadcast at small SF and a
-    co-partitioned shuffle join at scale). A ``transform`` lambda is
-    CodegenFallback: ~1M interpreted md5 calls cost ~4 s at sf0.1 where
-    the exploded form is sub-second. With ``id_col=None`` (no usable
-    key) the per-row higher-order form is used instead.
-
-    ``collapse_exact`` ("auto" default): on a duplicate-heavy corpus
-    the fingerprint is computed once per DISTINCT normalized text and
-    joined back on the content fingerprint — the gram-hashing volume
-    (the dominant cost: |norm| hash calls per text) scales with unique
-    texts, not members. Output-invariant: the fingerprint is a pure
-    function of the normalized text, and the md5 join key equates
-    exactly the texts whose fingerprints are equal. Probe is one
-    approx_count_distinct (HLL partials), same discipline as the
-    near-dup operators' pre-collapse; mostly-unique corpora skip
+    Probe-gated exact collapse (the near-dup family's
+    ``_should_collapse``): on a duplicate-heavy corpus the fingerprint
+    is computed once per DISTINCT normalized text and joined back on
+    the content fingerprint — the gram-hashing volume (the dominant
+    cost: |norm| hash calls per text) scales with unique texts, not
+    members. Output-invariant: the fingerprint is a pure function of
+    the normalized text, and the md5 join key equates exactly the
+    texts whose fingerprints are equal. Mostly-unique corpora go
     straight to the per-id path."""
-    hasher = {"md5": F.md5, "xxhash64": F.xxhash64}[hash_fn]
-    if id_col is not None and id_col in df.columns:
-        if collapse_exact == "auto":
-            probe = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct(F.xxhash64(normalized_text(F.col(text_col)))).alias("d"),
-            ).collect()[0]
-            collapse_exact = probe["d"] < 0.8 * max(probe["n"], 1)
-        if collapse_exact:
-            staged = df.withColumn("_rfp_key", content_fingerprint(F.col(text_col)))
-            uniq = staged.select(
-                "_rfp_key", normalized_text(F.col(text_col)).alias("_rfp_norm")
-            ).dropDuplicates(["_rfp_key"])
-            n = F.greatest(F.length("_rfp_norm") - (window - 1), F.lit(1))
-            fps = (
-                uniq.select("_rfp_key", "_rfp_norm", F.explode(F.sequence(F.lit(1), n)).alias("_pos"))
-                .select(
-                    "_rfp_key",
-                    hasher(F.col("_rfp_norm").substr(F.col("_pos"), F.lit(window))).alias("_g"),
-                )
-                .groupBy("_rfp_key")
-                .agg(F.min("_g").alias(out_col))
-            )
-            return staged.join(fps, "_rfp_key", "left").drop("_rfp_key")
-        n = F.greatest(F.length("_rfp_norm") - (window - 1), F.lit(1))
-        fps = (
-            df.select(F.col(id_col), normalized_text(F.col(text_col)).alias("_rfp_norm"))
-            .select(id_col, "_rfp_norm", F.explode(F.sequence(F.lit(1), n)).alias("_pos"))
-            .select(
-                id_col,
-                hasher(F.col("_rfp_norm").substr(F.col("_pos"), F.lit(window))).alias("_g"),
-            )
-            .groupBy(id_col)
-            .agg(F.min("_g").alias(out_col))
-        )
-        return df.join(fps, id_col, "left")
-    staged = df.withColumn("_rfp_norm", normalized_text(F.col(text_col)))
-    grams = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.length(F.col("_rfp_norm")) - (window - 1), F.lit(1))
-        ),
-        lambda i: hasher(F.col("_rfp_norm").substr(i, F.lit(window))),
+    from medical_examination_data_etl_system_spark.operators.dedup import _should_collapse
+
+    if not _should_collapse(df, normalized_text(F.col(text_col))):
+        return df.join(_rolling_fingerprints(df, id_col, text_col, window, out_col), id_col, "left")
+    staged = df.withColumn("_rfp_key", content_fingerprint(F.col(text_col)))
+    uniq = staged.select("_rfp_key", text_col).dropDuplicates(["_rfp_key"])
+    fps = _rolling_fingerprints(uniq, "_rfp_key", text_col, window, out_col)
+    return staged.join(fps, "_rfp_key", "left").drop("_rfp_key")
+
+
+def _rolling_fingerprints(
+    df: DataFrame, key_col: str, text_col: str, window: int, out_col: str
+) -> DataFrame:
+    """(key_col, out_col): the min-md5 ``window``-gram fingerprint per
+    ``key_col`` — the kernel of :func:`with_rolling_fingerprint`."""
+    n = F.greatest(F.length("_rfp_norm") - (window - 1), F.lit(1))
+    return (
+        df.select(key_col, normalized_text(F.col(text_col)).alias("_rfp_norm"))
+        .select(key_col, "_rfp_norm", F.explode(F.sequence(F.lit(1), n)).alias("_pos"))
+        .select(key_col, F.md5(F.col("_rfp_norm").substr(F.col("_pos"), F.lit(window))).alias("_g"))
+        .groupBy(key_col)
+        .agg(F.min("_g").alias(out_col))
     )
-    return staged.withColumn(out_col, F.array_min(grams)).drop("_rfp_norm")
 
 
 def tfidf_top_terms(

@@ -77,8 +77,13 @@ _AFTER_MAX = {
     **{c: _with_default(c, str(i + 1)) for i, c in enumerate(_GROUP_COLS)},
 }
 # get_unique_rows (reference :23-30): keep-first dedup on the 8-col key,
-# "first" = lowest ord.
-_DEDUP_RANK = f"row_number() OVER (PARTITION BY {', '.join(SUBSET_2_KEEP)} ORDER BY ord)"
+# "first" = lowest ord. File and stream copies of one RECORD_ID all sit
+# at batch position 0 and can tie on ord; the request text breaks the
+# tie, so the kept copy does not depend on arrival order. On the API
+# path ord is unique and the tiebreak never decides.
+_DEDUP_RANK = (
+    f"row_number() OVER (PARTITION BY {', '.join(SUBSET_2_KEEP)} ORDER BY ord, request)"
+)
 # O1 (reference :75): stable sort by (RECORD_ID, GROUPNO, TCNAME_ITEM) —
 # stability == ord tiebreak. Rather than a global sort (single
 # range-partitioned stage whose only consumer is per-record grouping),
@@ -89,12 +94,13 @@ _DEDUP_RANK = f"row_number() OVER (PARTITION BY {', '.join(SUBSET_2_KEEP)} ORDER
 # echo of the copy at that lowest ord, so records that share a
 # RECORD_ID render as one report (reference A4 groupby('RECORD_ID'), J5
 # first-match echo); the request text breaks ord ties, which file and
-# stream copies (batch position 0) can have. All three read the
-# incoming ord; min, min_by and ORDER BY serve either type.
+# stream copies (batch position 0) can have, here and in the ord
+# row_number. All three read the incoming ord; min, min_by and ORDER BY
+# serve either type.
 _RECORD_ORDER = {
     "rec_ord": "min(ord) OVER (PARTITION BY RECORD_ID)",
     "request": "min_by(request, struct(ord, request)) OVER (PARTITION BY RECORD_ID)",
-    "ord": "row_number() OVER (PARTITION BY RECORD_ID ORDER BY GROUPNO, TCNAME_ITEM, ord)",
+    "ord": "row_number() OVER (PARTITION BY RECORD_ID ORDER BY GROUPNO, TCNAME_ITEM, ord, request)",
 }
 
 

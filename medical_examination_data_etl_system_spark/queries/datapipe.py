@@ -516,7 +516,7 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-grams of normalized text; md5 here so DuckDB reproduces it)."""
     docs = load(spark, sf_dir, "documents")
     return (
-        with_rolling_fingerprint(docs, hash_fn="md5")
+        with_rolling_fingerprint(docs)
         .select("doc_id", "roll_fp")
         .orderBy("doc_id")
     )

@@ -126,7 +126,8 @@ ORDER BY o_channel
 def docs_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance fuzzy matching on normalized 24-char prefixes
     within the same source block (operators/dedup.py::
-    fuzzy_levenshtein_pairs — banded DP + adaptive exact-collapse)."""
+    fuzzy_levenshtein_pairs — PassJoin filter, banded DP, one
+    (block, prefix) grouping that merges exact copies)."""
     from medical_examination_data_etl_system_spark.operators.dedup import fuzzy_levenshtein_pairs
 
     docs = load(spark, sf_dir, "documents")

@@ -2,13 +2,16 @@
 """Adversarial NON-REPLICATED scale corpus (VERDICT r8 #4).
 
 The standard 100× protocol (scripts/scale_check.py) replicates every
-text verbatim, so the near-dup family's exact-content pre-collapse
-always fires and its >80%-unique probe branch
+text verbatim, so the probe-gated near-dup operators (SimHash, n-gram
+Jaccard/containment, Hamming, the rolling fingerprint) always collapse
+exact copies and the probe's >80%-unique skip branch
 (operators/dedup._should_collapse) never runs at scale. This script
 synthesizes the OPPOSITE regime from the same driver parquet: a 100×
 documents corpus that is ~90% unique with a Zipf-ish length spread, so
-the collapse probe SKIPS and every candidate/verification stage runs
-over the full uncollapsed id space.
+the collapse probe SKIPS and their candidate/verification stages run
+over the full uncollapsed id space. (MinHash and its md5 twins collapse
+without a probe; fuzzy Levenshtein's (block, prefix) grouping merges
+exact copies itself.)
 
 Construction (fully deterministic, all derived from /root/testdata):
 - ids shift by replica × stride exactly like scale_check (other tables

@@ -128,3 +128,48 @@ def test_unconverged_loop_raises_naming_max_iter(spark, algorithm):
     path = _pairs(spark, [(i, i + 1) for i in range(1, 10)])
     with pytest.raises(RuntimeError, match="max_iter=3"):
         cc(path, max_iter=3)
+
+
+def _union_find_labels(edges):
+    """node → min node id of its component, by a plain union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_both_algorithms_match_union_find_on_random_graphs(spark):
+    """Seeded random graphs: a 12-node chain whose ids are shuffled (the
+    min label starts mid-chain), a sparse random part with repeated and
+    reversed edges, and isolated pairs. Both algorithms must label every
+    node with its union-find component's min id."""
+    import random
+
+    from medical_examination_data_etl_system_spark.operators.clustering import (
+        connected_components_alternating,
+    )
+
+    for seed in (11, 29):
+        rng = random.Random(seed)
+        chain = rng.sample(range(1000, 1100), 12)
+        edges = list(zip(chain, chain[1:]))
+        nodes = rng.sample(range(100), 40)
+        edges += [tuple(rng.sample(nodes, 2)) for _ in range(35)]
+        edges += [(b, a) for a, b in edges[-5:]]
+        edges += [(2000 + 2 * i, 2001 + 2 * i) for i in range(5)]
+        rng.shuffle(edges)
+        want = _union_find_labels(edges)
+        pairs = _pairs(spark, edges)
+        for cc in (connected_components, connected_components_alternating):
+            got = {r["node"]: r["comp"] for r in cc(pairs).collect()}
+            assert got == want, (seed, cc.__name__)

@@ -8,13 +8,23 @@ containing a 0/1-token document.
 
 from __future__ import annotations
 
+import uuid
+
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from medical_examination_data_etl_system_spark.operators import cache
 from medical_examination_data_etl_system_spark.operators.dedup import (
+    _minhash_pairs,
+    _ngram_containment_pairs,
+    _ngram_jaccard_pairs,
+    _should_collapse,
+    _simhash_pairs,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
+    simhash_near_duplicates,
 )
+from medical_examination_data_etl_system_spark.operators.text_analysis import normalized_text
 
 
 def _docs(spark, rows):
@@ -47,10 +57,7 @@ def test_ngram_df_cap_drops_stopword_grams(spark):
 def test_cache_scope_releases_operator_persists(spark):
     docs = _docs(spark, [(i, f"the quick brown fox {i} jumps over", "s") for i in range(20)])
     with cache.cache_scope() as frames:
-        # collapse_exact forced on: "auto" would skip it (unique corpus)
-        # and persist one frame fewer — this test pins RELEASE, not the
-        # probe decision.
-        minhash_near_duplicates(docs, threshold=0.9, collapse_exact=True).collect()
+        minhash_near_duplicates(docs, threshold=0.9).collect()
         assert len(frames) == 4  # collapse window + shingle rows + distinct index + bands
         assert all(f.storageLevel != StorageLevel.NONE for f in frames)
     assert all(f.storageLevel == StorageLevel.NONE for f in frames)
@@ -59,36 +66,48 @@ def test_cache_scope_releases_operator_persists(spark):
 def test_unscoped_persists_are_tracked_and_releasable(spark):
     docs = _docs(spark, [(i, f"a b c d e f {i}", "s") for i in range(5)])
     before = len(cache.tracked_frames())
-    minhash_near_duplicates(docs, threshold=0.9, collapse_exact=True).collect()
+    minhash_near_duplicates(docs, threshold=0.9).collect()
     assert len(cache.tracked_frames()) == before + 4
     cache.release_all()
     assert cache.tracked_frames() == []
 
 
+def _key(rows, metric):
+    return sorted((r["id_a"], r["id_b"], r[metric]) for r in rows)
+
+
+def _text_collapses(docs, block_col=None):
+    blocks = [F.col(block_col)] if block_col else []
+    return _should_collapse(docs, *blocks, normalized_text(F.col("text")))
+
+
 def test_minhash_collapse_exact_equivalence(spark):
-    """collapse_exact=True must return byte-identical pairs to the
-    direct form on a corpus with exact-dup clusters AND near-dup
-    (non-identical) pairs."""
+    """The always-collapsed public operator must return byte-identical
+    pairs to its direct kernel on a corpus with exact-dup clusters AND
+    near-dup (non-identical) pairs, and on a mostly-unique corpus."""
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = []
     for i in range(4):  # cluster of 4 exact copies
         rows.append((100 + i, base, "s"))
     rows.append((200, base + " slightly changed tail", "s"))  # near-dup of cluster
     rows.append((300, "completely different content entirely unrelated text", "s"))
-    docs = _docs(spark, rows)
-    fast = minhash_near_duplicates(docs, threshold=0.5).collect()
-    direct = minhash_near_duplicates(docs, threshold=0.5, collapse_exact=False).collect()
-    key = lambda rs: sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in rs)  # noqa: E731
-    assert key(fast) == key(direct)
+    padded = [(i, f"some base document text number {i} padded with shared words", "s") for i in range(40)]
+    dup_heavy = padded + [(1000 + i, padded[i % 10][1], "s") for i in range(60)]
+    out = {}
+    for name, corpus, threshold in (("rows", rows, 0.5), ("padded", padded, 0.6), ("dup", dup_heavy, 0.6)):
+        docs = _docs(spark, corpus)
+        out[name] = _key(minhash_near_duplicates(docs, threshold=threshold).collect(), "jaccard")
+        direct = _minhash_pairs(docs, "text", "doc_id", 9, 32, 8, threshold).collect()
+        assert out[name] == _key(direct, "jaccard")
     # sanity: the exact cluster contributes C(4,2)=6 jaccard-1.0 pairs
-    ones = [r for r in fast if r["jaccard"] == 1.0]
-    assert len(ones) >= 6
+    assert sum(1 for _, _, j in out["rows"] if j == 1.0) >= 6
 
 
 def test_ngram_collapse_exact_equivalence(spark):
     """Block-aware exact-collapse must match the direct inverted-index
-    form, including the no-pair behavior of <n-token docs and exact
-    dups split across different blocks."""
+    kernel, including the no-pair behavior of <n-token docs and exact
+    dups split across different blocks; on a unique corpus the probe
+    skips the collapse and the public operator is the kernel."""
     base = "alpha beta gamma delta epsilon zeta"
     rows = [
         (1, base, "s1"), (2, base, "s1"), (3, base, "s1"),       # dup cluster in s1
@@ -97,11 +116,13 @@ def test_ngram_collapse_exact_equivalence(spark):
         (6, "tok", "s1"), (7, "tok", "s1"),                       # 1-token dups: NO pair
         (8, "unrelated words entirely different here now", "s1"),
     ]
-    docs = _docs(spark, rows)
-    fast = ngram_jaccard_pairs(docs, threshold=0.2).collect()
-    direct = ngram_jaccard_pairs(docs, threshold=0.2, collapse_exact=False).collect()
-    key = lambda rs: sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in rs)  # noqa: E731
-    assert key(fast) == key(direct)
+    unique = [(i, f"alpha beta gamma {i} delta {i % 3}", f"s{i % 2}") for i in range(12)]
+    for corpus, collapses in ((unique, False), (rows, True)):
+        docs = _docs(spark, corpus)
+        assert _text_collapses(docs, "source") is collapses
+        fast = ngram_jaccard_pairs(docs, threshold=0.2).collect()
+        direct = _ngram_jaccard_pairs(docs, "text", "doc_id", "source", 2, 0.2, 10_000).collect()
+        assert _key(fast, "jaccard") == _key(direct, "jaccard")
     pairs = {(r["id_a"], r["id_b"]) for r in fast}
     assert (1, 2) in pairs and (2, 3) in pairs      # intra-cluster
     assert (1, 4) not in pairs                       # cross-block never pairs
@@ -109,17 +130,17 @@ def test_ngram_collapse_exact_equivalence(spark):
 
 
 def test_simhash_collapse_exact_equivalence(spark):
-    from medical_examination_data_etl_system_spark.operators.dedup import simhash_near_duplicates
-
     base = "many common words shared across documents with small edits"
     rows = [(i, base, "s") for i in range(1, 4)]            # exact cluster
     rows += [(10, base.replace("small", "tiny"), "s")]       # near-dup
     rows += [(20, "entirely different text goes here now", "s"), (21, "", "s"), (22, "", "s")]
-    docs = _docs(spark, rows)
-    fast = simhash_near_duplicates(docs).collect()
-    direct = simhash_near_duplicates(docs, collapse_exact=False).collect()
-    key = lambda rs: sorted((r["id_a"], r["id_b"], r["hamming"]) for r in rs)  # noqa: E731
-    assert key(fast) == key(direct)
+    unique = [(i, f"{base} variant {i} with its own words {i * 7}", "s") for i in range(12)]
+    for corpus, collapses in ((unique, False), (rows, True)):
+        docs = _docs(spark, corpus)
+        assert _text_collapses(docs) is collapses
+        fast = simhash_near_duplicates(docs).collect()
+        direct = _simhash_pairs(docs, "text", "doc_id", 3).collect()
+        assert _key(fast, "hamming") == _key(direct, "hamming")
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in fast}
     assert pairs[(1, 2)] == 0 and pairs[(21, 22)] == 0
 
@@ -127,38 +148,67 @@ def test_simhash_collapse_exact_equivalence(spark):
 def test_collapse_probe_decides_by_duplication(spark):
     """_should_collapse: mostly-unique corpus → skip; duplicate-heavy
     (10x replication) → collapse."""
-    from medical_examination_data_etl_system_spark.operators.dedup import _should_collapse
-
     unique = spark.createDataFrame(
         [(i, f"totally unique document number {i} with words {i*7}") for i in range(300)],
         ["doc_id", "text"],
     )
-    assert not _should_collapse(unique, "text")
+    assert not _text_collapses(unique)
     replicated = spark.createDataFrame(
         [(i * 100 + r, f"shared text {i}") for i in range(30) for r in range(10)],
         ["doc_id", "text"],
     )
-    assert _should_collapse(replicated, "text")
+    assert _text_collapses(replicated)
 
 
-def test_minhash_auto_equals_forced_modes(spark):
-    """collapse_exact 'auto'/True/False must emit identical pairs on
-    both a unique-heavy and a duplicate-heavy corpus (the probe is a
-    cost decision, never a semantic one)."""
-    from medical_examination_data_etl_system_spark.operators.dedup import minhash_near_duplicates
+def _build_jobs(spark, build) -> int:
+    """Jobs fired while ``build()`` constructs a frame (no action)."""
+    sc, group = spark.sparkContext, f"build_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        with cache.cache_scope():
+            build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    base = [(i, f"some base document text number {i} padded with shared words") for i in range(40)]
-    dup_heavy = base + [(1000 + i, base[i % 10][1]) for i in range(60)]
-    for rows in (base, dup_heavy):
-        docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        out = {
-            mode: sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in minhash_near_duplicates(docs, collapse_exact=mode).collect()
-            )
-            for mode in ("auto", True, False)
-        }
-        assert out["auto"] == out[True] == out[False]
+
+def test_eager_jobs_while_building_near_dup_frames(spark):
+    """Building a near-dup frame fires no job except the collapse probe:
+    none for MinHash, its md5 twins and fuzzy Levenshtein, exactly the
+    probe's for each probe-gated operator, on both sides of the probe."""
+    from medical_examination_data_etl_system_spark.operators.dedup import (
+        fuzzy_levenshtein_pairs,
+        hamming_near_duplicates,
+        minhash_md5_exact,
+        ngram_containment_pairs,
+        simhash_md5_exact,
+    )
+    from medical_examination_data_etl_system_spark.operators.text_analysis import (
+        with_rolling_fingerprint,
+    )
+
+    unique = _docs(spark, [(i, f"document {i} with some shared words {i * 7}", "s") for i in range(20)])
+    copies = _docs(spark, [(i, f"document {i % 4} with some shared words", "s") for i in range(20)])
+    for docs in (unique, copies):
+        for build in (
+            lambda: minhash_near_duplicates(docs),
+            lambda: minhash_md5_exact(docs),
+            lambda: simhash_md5_exact(docs),
+            lambda: fuzzy_levenshtein_pairs(docs),
+        ):
+            assert _build_jobs(spark, build) == 0
+        text = normalized_text(F.col("text"))
+        probe = _build_jobs(spark, lambda: _should_collapse(docs, text))
+        block_probe = _build_jobs(spark, lambda: _should_collapse(docs, F.col("source"), text))
+        assert probe >= 1 and block_probe >= 1
+        assert _build_jobs(spark, lambda: simhash_near_duplicates(docs)) == probe
+        assert _build_jobs(spark, lambda: with_rolling_fingerprint(docs)) == probe
+        assert _build_jobs(spark, lambda: ngram_jaccard_pairs(docs)) == block_probe
+        assert _build_jobs(spark, lambda: ngram_containment_pairs(docs)) == block_probe
+        hashes = docs.select(F.col("doc_id").alias("i"), F.xxhash64("text").alias("h"))
+        hash_probe = _build_jobs(spark, lambda: _should_collapse(hashes, F.col("h")))
+        assert hash_probe >= 1
+        assert _build_jobs(spark, lambda: hamming_near_duplicates(hashes, "i", "h")) == hash_probe
 
 
 def test_ngram_pairs_match_bruteforce(spark):
@@ -173,11 +223,6 @@ def test_ngram_pairs_match_bruteforce(spark):
     index's map-side-combined count aggregation), so the aggregation
     plan stayed and this pin remains as its equivalence gate."""
     import random
-
-    from medical_examination_data_etl_system_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
 
     rng = random.Random(20260816)
     vocab = [f"w{i}" for i in range(30)] + ["of", "the", "and"] * 4  # heavy stop-words
@@ -217,13 +262,13 @@ def test_ngram_pairs_match_bruteforce(spark):
                     expect_j.append((a, b, j))
                 if c >= thr:
                     expect_c.append((a, b, c))
-        got_j = sorted(
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in ngram_jaccard_pairs(docs, threshold=thr, collapse_exact=False).collect()
+        got_j = _key(
+            _ngram_jaccard_pairs(docs, "text", "doc_id", "source", 2, thr, 10_000).collect(),
+            "jaccard",
         )
-        got_c = sorted(
-            (r["id_a"], r["id_b"], r["containment"])
-            for r in ngram_containment_pairs(docs, threshold=thr, collapse_exact=False).collect()
+        got_c = _key(
+            _ngram_containment_pairs(docs, "text", "doc_id", "source", 2, thr, 10_000).collect(),
+            "containment",
         )
         assert got_j == sorted(expect_j), f"jaccard mismatch at t={thr}"
         assert got_c == sorted(expect_c), f"containment mismatch at t={thr}"

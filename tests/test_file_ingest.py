@@ -75,3 +75,27 @@ def test_shared_record_id_in_one_request(spark, tmp_path):
     )
     assert json.loads(rows[0]["request"])["ITEMS"] == first["ITEMS"]
     assert sorted(r["record_id"] for r in _file_reports(spark, tmp_path, records)) == ["R1", "R2"]
+
+
+def test_same_record_id_copies_render_independent_of_line_order(spark, tmp_path):
+    """Two differing copies of one RECORD_ID in one file tie on ord (both
+    at batch position 0): which finding the keep-first dedup keeps, the
+    finding order and the request echo must not depend on which line
+    comes first."""
+    a = record("R1", "1", "ORG_A", [item("I001", [finding("D001", "copy a")])])
+    b = record(
+        "R1",
+        "1",
+        "ORG_A",
+        [
+            item("I001", [finding("D002", "copy b")]),
+            item("I002", [finding("D003", "extra item")]),
+        ],
+    )
+    got = []
+    for order, sub in (([a, b], "ab"), ([b, a], "ba")):
+        (tmp_path / sub).mkdir()
+        rows = _file_reports(spark, tmp_path / sub, order)
+        got.append([(r["record_id"], r["report"], r["request"]) for r in rows])
+    assert len(got[0]) == 1
+    assert got[0] == got[1]

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.operators.curation import weighted_sample_per_key
 from medical_examination_data_etl_system_spark.operators.dedup import (
+    _ngram_containment_pairs,
+    _ngram_jaccard_pairs,
     ngram_containment_pairs,
     ngram_jaccard_pairs,
 )
@@ -130,29 +132,44 @@ def test_gap_fill_conserves_event_mass(spark, seed):
 @given(seed=st.integers(min_value=0, max_value=10_000))
 @settings(**_SPARK_SETTINGS)
 def test_containment_dominates_jaccard(spark, seed):
+    """Containment ≥ Jaccard on every pair of the direct kernels. With
+    every doc copied twice (the probe collapses) the public operators
+    return each copy pair at 1.0 and every other pair at its originals'
+    kernel value."""
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(12)]
-    docs = spark.createDataFrame(
-        [
-            Row(
-                doc_id=i,
-                text=" ".join(rng.choices(vocab, k=rng.randrange(3, 15))),
-                source="s",
-            )
-            for i in range(8)
-        ]
-    )
+    rows = [
+        Row(doc_id=i, text=" ".join(rng.choices(vocab, k=rng.randrange(3, 15))), source="s")
+        for i in range(8)
+    ]
+    docs = spark.createDataFrame(rows)
     jac = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.0, collapse_exact=False).collect()
+        for r in _ngram_jaccard_pairs(docs, "text", "doc_id", "source", 2, 0.0, 10_000).collect()
     }
     cont = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in ngram_containment_pairs(docs, threshold=0.0, collapse_exact=False).collect()
+        for r in _ngram_containment_pairs(docs, "text", "doc_id", "source", 2, 0.0, 10_000).collect()
     }
     assert set(jac) == set(cont)
     for pair, j in jac.items():
         assert cont[pair] >= j - 1e-9, (pair, cont[pair], j)
+
+    copies = [Row(doc_id=r.doc_id + 100 * c, text=r.text, source="s") for r in rows for c in (1, 2)]
+    ids = sorted(r.doc_id for r in rows + copies)
+    replicated = spark.createDataFrame(rows + copies)
+    for public, direct, metric in (
+        (ngram_jaccard_pairs, jac, "jaccard"),
+        (ngram_containment_pairs, cont, "containment"),
+    ):
+        want = {}
+        for a in ids:
+            for b in ids:
+                oa, ob = sorted((a % 100, b % 100))
+                if a < b and (oa == ob or (oa, ob) in direct):
+                    want[(a, b)] = 1.0 if oa == ob else direct[(oa, ob)]
+        got = public(replicated, threshold=0.0).collect()
+        assert {(r["id_a"], r["id_b"]): r[metric] for r in got} == want
 
 
 @given(seed=st.integers(min_value=0, max_value=10_000))

@@ -213,11 +213,14 @@ class TestIncrementalDedup:
             _collapse_docs,
             _minhash_md5_rep_pairs,
         )
+        from medical_examination_data_etl_system_spark.operators.text_analysis import (
+            content_fingerprint,
+        )
         from medical_examination_data_etl_system_spark.queries import load
 
         docs = load(spark, sf_smoke, "documents")
         split = int(0.8 * (docs.agg(F.max("doc_id")).collect()[0][0] + 1))
-        _, reps = _collapse_docs(docs, "text", "doc_id")
+        _, reps = _collapse_docs(docs, "doc_id", content_fingerprint(F.col("text")))
         full = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in _minhash_md5_rep_pairs(reps, "text", "doc_id", 9, 16, 4, 0.5).collect()

@@ -23,12 +23,26 @@ def _hamming_pairs_set(df_out):
     return {(r.id_a, r.id_b, r.hamming) for r in df_out.collect()}
 
 
+def _hamming_parity(df, max_hamming, collapses):
+    """The public operator equals its direct kernel on ``df``, and the
+    probe takes the expected side."""
+    from medical_examination_data_etl_system_spark.operators.dedup import (
+        _hamming_pairs,
+        _should_collapse,
+        hamming_near_duplicates,
+    )
+
+    assert _should_collapse(df, F.col("h")) is collapses
+    public = _hamming_pairs_set(hamming_near_duplicates(df, "i", "h", max_hamming=max_hamming))
+    assert public == _hamming_pairs_set(_hamming_pairs(df, "i", "h", max_hamming, 60, 10))
+    return public
+
+
 def test_hamming_collapse_parity_duplicate_heavy(spark):
     """On a duplicate-heavy corpus (every hash replicated 5x) the
-    collapsed path must emit EXACTLY the pairs the direct path does —
-    including the Hamming-0 cliques and cross-group near-pairs."""
-    from medical_examination_data_etl_system_spark.operators.dedup import hamming_near_duplicates
-
+    collapsed path must emit EXACTLY the pairs the direct kernel does —
+    including the Hamming-0 cliques and cross-group near-pairs; on the
+    unique hashes the probe skips the collapse."""
     rng = np.random.default_rng(23)
     base = [int(v) for v in rng.integers(0, 1 << 60, size=8, dtype=np.int64)]
     # one planted near-pair: flip 2 bits of base[0]
@@ -40,49 +54,29 @@ def test_hamming_collapse_parity_duplicate_heavy(spark):
         for _ in range(5):  # 5 copies each → heavily duplicated
             rows.append(Row(i=nid, h=h))
             nid += 1
-    df = spark.createDataFrame(rows)
-    direct = _hamming_pairs_set(
-        hamming_near_duplicates(df, "i", "h", max_hamming=5, collapse_exact=False)
-    )
-    collapsed = _hamming_pairs_set(
-        hamming_near_duplicates(df, "i", "h", max_hamming=5, collapse_exact=True)
-    )
-    auto = _hamming_pairs_set(
-        hamming_near_duplicates(df, "i", "h", max_hamming=5, collapse_exact="auto")
-    )
-    assert collapsed == direct
-    assert auto == direct
+    direct = _hamming_parity(spark.createDataFrame(rows), 5, collapses=True)
     # sanity: the Hamming-0 cliques are present (C(5,2)=10 per group, 9 groups)
     assert sum(1 for (_, _, d) in direct if d == 0) == 10 * len(uniq)
     # and the planted cross-group near-pair expanded to 5x5 member pairs
     assert sum(1 for (_, _, d) in direct if d == 2) == 25
+    unique = spark.createDataFrame([Row(i=k, h=h) for k, h in enumerate(uniq)])
+    assert _hamming_parity(unique, 5, collapses=False) == {(0, 8, 2)}
 
 
 def test_hamming_collapse_null_hash_parity(spark):
-    """Null hashes never pair in the direct path; the collapsed path
+    """Null hashes never pair in the direct kernel; the collapsed path
     must not invent Hamming-0 pairs for them."""
-    from medical_examination_data_etl_system_spark.operators.dedup import hamming_near_duplicates
-
     rows = [Row(i=0, h=7), Row(i=1, h=7), Row(i=2, h=None), Row(i=3, h=None)]
     df = spark.createDataFrame(rows, "i int, h long")
-    direct = _hamming_pairs_set(
-        hamming_near_duplicates(df, "i", "h", max_hamming=3, collapse_exact=False)
-    )
-    collapsed = _hamming_pairs_set(
-        hamming_near_duplicates(df, "i", "h", max_hamming=3, collapse_exact=True)
-    )
-    assert collapsed == direct == {(0, 1, 0)}
+    assert _hamming_parity(df, 3, collapses=True) == {(0, 1, 0)}
 
 
 def test_hamming_auto_skips_collapse_on_unique(spark):
-    """All-unique hashes: auto probe must take the direct path and
+    """All-unique hashes: the probe must take the direct path and
     still match brute force."""
-    from medical_examination_data_etl_system_spark.operators.dedup import hamming_near_duplicates
-
     rng = np.random.default_rng(5)
     rows = [Row(i=int(k), h=int(v)) for k, v in enumerate(rng.integers(0, 1 << 60, 30, dtype=np.int64))]
-    df = spark.createDataFrame(rows)
-    got = _hamming_pairs_set(hamming_near_duplicates(df, "i", "h", max_hamming=5))
+    got = _hamming_parity(spark.createDataFrame(rows), 5, collapses=False)
     hs = {r.i: r.h for r in rows}
     brute = {
         (a, b, bin(hs[a] ^ hs[b]).count("1"))
@@ -98,7 +92,12 @@ def test_hamming_auto_skips_collapse_on_unique(spark):
 
 
 def test_rolling_fp_collapse_parity(spark):
-    from medical_examination_data_etl_system_spark.operators.text_analysis import with_rolling_fingerprint
+    from medical_examination_data_etl_system_spark.operators.dedup import _should_collapse
+    from medical_examination_data_etl_system_spark.operators.text_analysis import (
+        _rolling_fingerprints,
+        normalized_text,
+        with_rolling_fingerprint,
+    )
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
     # replicate 4x with distinct ids -> duplicate-heavy
@@ -107,31 +106,21 @@ def test_rolling_fp_collapse_parity(spark):
         rep = rep.unionByName(
             docs.select((F.col("doc_id") + 1_000_000 * k).alias("doc_id"), "text")
         )
-    for hash_fn in ("xxhash64", "md5"):
+    for corpus, collapses in ((rep, True), (docs, False)):
+        assert _should_collapse(corpus, normalized_text(F.col("text"))) is collapses
+        public = {
+            (r.doc_id, r.roll_fp)
+            for r in with_rolling_fingerprint(corpus).select("doc_id", "roll_fp").collect()
+        }
         direct = {
             (r.doc_id, r.roll_fp)
-            for r in with_rolling_fingerprint(rep, hash_fn=hash_fn, collapse_exact=False)
-            .select("doc_id", "roll_fp")
-            .collect()
+            for r in _rolling_fingerprints(corpus, "doc_id", "text", 8, "roll_fp").collect()
         }
-        collapsed = {
-            (r.doc_id, r.roll_fp)
-            for r in with_rolling_fingerprint(rep, hash_fn=hash_fn, collapse_exact=True)
-            .select("doc_id", "roll_fp")
-            .collect()
-        }
-        auto = {
-            (r.doc_id, r.roll_fp)
-            for r in with_rolling_fingerprint(rep, hash_fn=hash_fn, collapse_exact="auto")
-            .select("doc_id", "roll_fp")
-            .collect()
-        }
-        assert collapsed == direct
-        assert auto == direct
-        # every replica carries its original's fingerprint
-        base = {d: fp for d, fp in direct if d < 1_000_000}
-        for d, fp in direct:
-            assert fp == base[d % 1_000_000]
+        assert public == direct
+    # every replica carries its original's fingerprint
+    base = {d: fp for d, fp in direct if d < 1_000_000}
+    for d, fp in public:
+        assert fp == base[d % 1_000_000]
 
 # ---------------------------------------------------------------------------
 # PageRank top-k plan: TakeOrderedAndProject, no unpartitioned window
@@ -400,9 +389,13 @@ from hypothesis import strategies as st  # noqa: E402
 @given(seed=st.integers(min_value=0, max_value=10_000))
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_hamming_collapse_equivalence_property(spark, seed):
-    """Random hash multisets (mixed duplication, random bit flips):
-    collapsed output == direct output == brute force, always."""
-    from medical_examination_data_etl_system_spark.operators.dedup import hamming_near_duplicates
+    """Random hash multisets (mixed duplication, random bit flips): the
+    public operator (whichever side its probe takes) and the direct
+    kernel both equal brute force, always."""
+    from medical_examination_data_etl_system_spark.operators.dedup import (
+        _hamming_pairs,
+        hamming_near_duplicates,
+    )
 
     rng = np.random.default_rng(seed)
     uniq = [int(v) for v in rng.integers(0, 1 << 60, size=6, dtype=np.int64)]
@@ -427,12 +420,8 @@ def test_hamming_collapse_equivalence_property(spark, seed):
         for b in hs
         if a < b and bin(hs[a] ^ hs[b]).count("1") <= 5
     }
-    for mode in (False, True):
-        got = {
-            (r.id_a, r.id_b, r.hamming)
-            for r in hamming_near_duplicates(df, "i", "h", max_hamming=5, collapse_exact=mode).collect()
-        }
-        assert got == brute, (mode, seed)
+    assert _hamming_pairs_set(hamming_near_duplicates(df, "i", "h", max_hamming=5)) == brute, seed
+    assert _hamming_pairs_set(_hamming_pairs(df, "i", "h", 5, 60, 10)) == brute, seed
 
 # ---------------------------------------------------------------------------
 # Semantic dedup: SRP variant refines the exact variant (subset property)

@@ -119,7 +119,7 @@ class TestTextRound5:
         ])
         cont = ngram_containment_pairs(docs, threshold=0.9).collect()
         assert len(cont) == 1 and cont[0]["containment"] == 1.0
-        jac = ngram_jaccard_pairs(docs, threshold=0.9, collapse_exact=False).collect()
+        jac = ngram_jaccard_pairs(docs, threshold=0.9).collect()
         assert jac == []  # same pair is invisible to Jaccard at 0.9
 
     def test_entropy_values(self, spark):
@@ -135,55 +135,83 @@ class TestTextRound5:
         assert rows[3]["n_tokens"] == 0 and rows[3]["entropy"] is None
 
     def test_containment_collapse_invariant(self, spark):
-        # duplicate-heavy block: output must be identical with the
-        # pre-collapse on, off, and auto (auto probes and collapses)
+        # duplicate-heavy block: the public operator (the probe collapses)
+        # must equal its direct kernel; on the unique corpus the probe
+        # skips the collapse and the two are again equal
+        from medical_examination_data_etl_system_spark.operators.dedup import (
+            _ngram_containment_pairs,
+            _should_collapse,
+        )
+        from medical_examination_data_etl_system_spark.operators.text_analysis import (
+            normalized_text,
+        )
+
         base = [
             ("alpha beta gamma delta", "s"),
             ("alpha beta gamma delta", "s"),      # exact dup
             ("alpha beta gamma delta epsilon zeta", "s"),
             ("unrelated words entirely here", "s"),
             ("alpha beta gamma delta", "t"),      # same text, other block
+            ("alpha beta gamma delta", "s"),      # a third copy
         ]
-        docs = spark.createDataFrame(
-            [Row(doc_id=i, text=t, source=src) for i, (t, src) in enumerate(base)]
-        )
+        unique = [(f"alpha beta gamma {i} delta", "s") for i in range(6)]
 
-        def run(mode):
-            return sorted(
-                (r["id_a"], r["id_b"], r["containment"])
-                for r in ngram_containment_pairs(docs, threshold=0.5, collapse_exact=mode).collect()
+        def frame(texts):
+            return spark.createDataFrame(
+                [Row(doc_id=i, text=t, source=src) for i, (t, src) in enumerate(texts)]
             )
 
-        on, off, auto = run(True), run(False), run("auto")
-        assert on == off == auto
+        def rows(df):
+            return sorted((r["id_a"], r["id_b"], r["containment"]) for r in df.collect())
+
+        for texts, collapses in ((unique, False), (base, True)):
+            docs = frame(texts)
+            probe = _should_collapse(docs, F.col("source"), normalized_text(F.col("text")))
+            assert probe is collapses
+            public = rows(ngram_containment_pairs(docs, threshold=0.5))
+            direct = rows(
+                _ngram_containment_pairs(docs, "text", "doc_id", "source", 2, 0.5, 10_000)
+            )
+            assert public == direct
         # the exact dup pair is containment 1.0; cross-block dup never pairs
-        assert (0, 1, 1.0) in on
-        assert all(not (a == 1 and b == 4) and not (a == 0 and b == 4) for a, b, _ in on)
+        assert (0, 1, 1.0) in public
+        assert all(not (a == 1 and b == 4) and not (a == 0 and b == 4) for a, b, _ in public)
 
     def test_fuzzy_collapse_invariant(self, spark):
+        """Exact copies need no outer collapse: the (block, prefix)
+        grouping merges them, so every replica pairs at distance 0 and
+        inherits its original's distances, on a unique corpus and on
+        the same corpus replicated 3x."""
         from medical_examination_data_etl_system_spark.operators.dedup import fuzzy_levenshtein_pairs
 
         base = [
             ("alpha beta gamma", "s"),
-            ("alpha beta gamma", "s"),       # exact dup → intra distance 0
             ("alpha beta gamna", "s"),       # 1 edit away
             ("completely different text", "s"),
         ]
-        docs = spark.createDataFrame(
-            [Row(doc_id=i, text=t, source=src) for i, (t, src) in enumerate(base)]
-        )
 
-        def run(mode):
+        def run(copies):
+            docs = spark.createDataFrame(
+                [
+                    Row(doc_id=10 * c + i, text=t, source=src)
+                    for c in range(copies)
+                    for i, (t, src) in enumerate(base)
+                ]
+            )
             return sorted(
                 (r["id_a"], r["id_b"], r["distance"])
-                for r in fuzzy_levenshtein_pairs(
-                    docs, prefix_len=24, threshold=3, collapse_exact=mode
-                ).collect()
+                for r in fuzzy_levenshtein_pairs(docs, prefix_len=24, threshold=3).collect()
             )
 
-        on, off, auto = run(True), run(False), run("auto")
-        assert on == off == auto
-        assert (0, 1, 0) in on and (0, 2, 1) in on and (1, 2, 1) in on
+        assert run(1) == [(0, 1, 1)]
+        dist = {(0, 1): 1, (0, 0): 0, (1, 1): 0, (2, 2): 0}
+        want = sorted(
+            (a, b, dist[tuple(sorted((a % 10, b % 10)))])
+            for a in (0, 1, 2, 10, 11, 12, 20, 21, 22)
+            for b in (0, 1, 2, 10, 11, 12, 20, 21, 22)
+            if a < b and tuple(sorted((a % 10, b % 10))) in dist
+        )
+        assert run(3) == want
 
     def test_fuzzy_passjoin_matches_bruteforce(self, spark):
         """PassJoin candidate filter is EXACT (no false negatives): the
@@ -243,7 +271,7 @@ class TestTextRound5:
             got = sorted(
                 (r["id_a"], r["id_b"], r["distance"])
                 for r in fuzzy_levenshtein_pairs(
-                    docs, prefix_len=prefix_len, threshold=threshold, collapse_exact=False
+                    docs, prefix_len=prefix_len, threshold=threshold
                 ).collect()
             )
             assert got == expected, f"mismatch at prefix_len={prefix_len} k={threshold}"
