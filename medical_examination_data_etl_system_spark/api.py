@@ -6,9 +6,13 @@ engine keeps that surface as a thin shell over the Spark pipeline:
 
 - ``handle_process_request`` is the framework-free request handler
   (dict/list payload → JSON-able response dict) — fully testable without
-  any HTTP dependency;
+  any HTTP dependency. A request runs in the caller's served session
+  (``pipeline.run.served_session``: its SQL conf with AQE off); the
+  caller's session, which batch and stream work use, keeps AQE on;
 - ``create_app`` wraps it in FastAPI when that package is installed
-  (it is not in this container — import-gated, not stubbed).
+  (an optional dependency: import-gated, not stubbed). A payload
+  of the wrong shape is a 422 naming the record and the field; any
+  other failure is a 500.
 """
 
 from __future__ import annotations
@@ -55,6 +59,8 @@ def create_app(spark: SparkSession, output_dir: str | None = None):
         try:
             payload = await request.json()
             return handle_process_request(spark, payload, output_dir=output_dir)
+        except ValueError as exc:
+            raise HTTPException(status_code=422, detail=str(exc))
         except Exception as exc:
             raise HTTPException(status_code=500, detail=str(exc))
 

@@ -17,11 +17,20 @@ Reference behavior re-expressed (SURVEY.md §2a S2-S4, P1, J5, F8):
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType
 
-from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECORD_SCHEMA
+from medical_examination_data_etl_system_spark.schemas import RECORD_SCHEMA
+
+# The request list → BATCH_SCHEMA rows, parsed in the JVM. FAILFAST: a
+# value the schema cannot hold is an error, never a silent null.
+_BATCH_SQL = (
+    "SELECT CAST(pos AS BIGINT) AS _rec_idx, r.* FROM (SELECT posexplode(from_json("
+    f":batch, '{ArrayType(RECORD_SCHEMA).simpleString()}', map('mode', 'FAILFAST'))) AS (pos, r))"
+)
 
 # flatten's three projections, as SQL text written once (a Column tree
 # rebuilt per call costs a py4j round trip per node).
@@ -51,26 +60,44 @@ _FLAT = [
 
 
 def records_to_df(spark: SparkSession, records: list[dict[str, Any]] | dict[str, Any]) -> DataFrame:
-    """Create the nested-record DataFrame from parsed JSON.
+    """Create the nested-record DataFrame (BATCH_SCHEMA) from parsed JSON.
 
     Accepts a single record dict (promoted to a 1-element batch, parity
-    with reference text_processing.py:152). The driver-side enumerate
-    pins each record's batch position — the only place order can be
-    captured before the data becomes distributed.
+    with reference text_processing.py:152). The request is checked on
+    the driver (:func:`_check_batch`), then sent as one JSON literal that
+    the JVM parses; ``posexplode`` gives each record its batch position,
+    as it gives the item and finding positions in :func:`flatten`. No
+    Python worker runs: the frame is a folded constant, not a pickled
+    RDD. ``json.dumps`` keeps ``ensure_ascii``, so the literal is ASCII
+    whatever the request's text.
     """
     if isinstance(records, dict):
         records = [records]
-    rows = [
-        {
-            "_rec_idx": i,
-            "RECORD_ID": r.get("RECORD_ID"),
-            "LANG_NO": r.get("LANG_NO"),
-            "ORG_ID": r.get("ORG_ID"),
-            "ITEMS": r.get("ITEMS"),
-        }
-        for i, r in enumerate(records)
-    ]
-    return spark.createDataFrame(rows, schema=BATCH_SCHEMA)
+    _check_batch(records)
+    return spark.sql(_BATCH_SQL, args={"batch": json.dumps(records)})
+
+
+def _check_batch(records: list[dict[str, Any]]) -> None:
+    """Raise ``ValueError`` naming the record index and the field unless
+    ``records`` is a list of objects whose ``ITEMS`` and their
+    ``FINDINGS`` are lists of objects or null — the shapes the JVM
+    parser would otherwise reject only when the request is collected."""
+    if not isinstance(records, list):
+        raise ValueError(f"records: expected a list or an object, got {type(records).__name__}")
+    for i, rec in enumerate(_objects(records, "records")):
+        for j, it in enumerate(_objects(rec.get("ITEMS"), f"records[{i}].ITEMS")):
+            _objects(it.get("FINDINGS"), f"records[{i}].ITEMS[{j}].FINDINGS")
+
+
+def _objects(value: Any, where: str) -> list[dict[str, Any]]:
+    if value is None:
+        return []
+    if not isinstance(value, list):
+        raise ValueError(f"{where}: expected a list or null, got {type(value).__name__}")
+    for k, v in enumerate(value):
+        if not isinstance(v, dict):
+            raise ValueError(f"{where}[{k}]: expected an object, got {type(v).__name__}")
+    return value
 
 
 def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
@@ -90,7 +117,8 @@ def with_batch_position(raw: DataFrame) -> DataFrame:
 
     Files and stream micro-batches carry no row order, and every later
     window and group is keyed by RECORD_ID, so no cross-record position
-    is needed (the API path keeps its driver-side enumerate).
+    is needed (the API's request list takes its position from
+    ``posexplode`` in :func:`records_to_df`).
     """
     return raw.selectExpr("CAST(0 AS BIGINT) AS _rec_idx", *RECORD_SCHEMA.fieldNames())
 

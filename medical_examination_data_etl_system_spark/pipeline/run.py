@@ -5,14 +5,19 @@ text_processing.py:144-177 (``POST /process``): flatten → enrich →
 clean → rewrite → render, all lazy until the caller acts (collect /
 write). Every served input calls it: the API (``process_records``, over
 the driver's request list), file ingest (``records_from_json_files``)
-and each stream micro-batch; only the nested frame differs. CSV
-checkpoints are optional sinks, matching the reference's two
+and each stream micro-batch; only the nested frame differs. A request
+list is a small batch, so ``process_records`` plans it in the caller's
+:func:`served_session`, whose one difference is AQE off: runtime
+re-optimization gains such a plan nothing and costs a job and a re-plan
+at every shuffle. Files and streams keep the caller's session, AQE on.
+CSV checkpoints are optional sinks, matching the reference's two
 timestamped CSV artifacts.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from datetime import datetime
 from typing import Any
 
@@ -37,8 +42,27 @@ def process_records(
     output_dir: str | None = None,
 ) -> DataFrame:
     """records → (record_id, report, request), ordered by batch position:
-    :func:`reports_for_batch` over the driver's request list."""
-    return _in_batch_order(reports_for_batch(records_to_df(spark, records), dims, output_dir))
+    :func:`reports_for_batch` over the driver's request list, in the
+    caller's :func:`served_session`. A payload of the wrong shape
+    raises ``ValueError`` before any Spark work (``records_to_df``)."""
+    nested = records_to_df(served_session(spark), records)
+    return _in_batch_order(reports_for_batch(nested, dims, output_dir))
+
+
+_SERVED: weakref.WeakKeyDictionary[SparkSession, SparkSession] = weakref.WeakKeyDictionary()
+
+
+def served_session(spark: SparkSession) -> SparkSession:
+    """The session a driver-side request list is planned in: a clone of
+    ``spark`` (its SQL conf, temp views and functions as of the first
+    request; the same context and cache) with AQE off, made once per
+    caller session. ``spark`` itself is left as it is."""
+    served = _SERVED.get(spark)
+    if served is None:
+        served = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        served.conf.set("spark.sql.adaptive.enabled", "false")
+        _SERVED[spark] = served
+    return served
 
 
 def reports_for_batch(

@@ -46,8 +46,8 @@ RECORD_SCHEMA = T.StructType(
 )
 
 # Ingest wraps RECORD_SCHEMA with a batch position so "encounter order"
-# is data, not physical row order (SURVEY.md §1.3): the API enumerates
-# its request on the driver; file and stream ingest set 0.
+# is data, not physical row order (SURVEY.md §1.3): the API takes its
+# request list's position from posexplode; file and stream ingest set 0.
 BATCH_SCHEMA = T.StructType(
     [T.StructField("_rec_idx", T.LongType(), False), *RECORD_SCHEMA.fields]
 )

@@ -2,7 +2,11 @@
 
 One place to encode the engine's execution posture:
 - AQE on (runtime shuffle coalescing, skew-join splitting) — the 100 TB
-  answer to skewed RECORD_ID / join keys.
+  answer to skewed RECORD_ID / join keys — for batch, file and stream
+  work. A served request list is a small batch: ``process_records``
+  plans it in a clone of this session with AQE off
+  (``pipeline.run.served_session``), which saves a job and a re-plan
+  at every shuffle.
 - Arrow on — every pandas-interop boundary (LLM mapInPandas stage,
   the Arrow-batched vector kernels) crosses via Arrow batches, not
   pickled rows.

@@ -6,7 +6,9 @@ and prints per timed request:
 
 - build ms: the ``process_records`` call, i.e. the Python plan build;
 - collect ms: ``reports_to_json``, i.e. planning plus execution;
-- jobs: Spark jobs in the request's job group;
+- jobs, stages, tasks: the request's job group as the status store
+  holds it (perfbench's ``Tracer.read_group``: skipped stages are not
+  counted, tasks are completed tasks);
 - compiles: Janino compiles (``CodegenMetrics`` compilation count);
 - py4j: commands the driver sent to the JVM during the request.
 
@@ -32,6 +34,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 import checks  # noqa: E402  (perfbench/)
 import run as perfbench  # noqa: E402
 import workloads  # noqa: E402
+from tracing import Tracer  # noqa: E402
 
 
 def main() -> int:
@@ -48,7 +51,7 @@ def main() -> int:
     from medical_examination_data_etl_system_spark.pipeline import process_records
     from medical_examination_data_etl_system_spark.pipeline.run import reports_to_json
 
-    sc = spark.sparkContext
+    sc, tracer = spark.sparkContext, Tracer(spark)
     compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     client = sc._gateway._gateway_client
     send, sent = client.send_command, [0]
@@ -60,7 +63,7 @@ def main() -> int:
     pool = workloads.record_pool(spark, work, workloads.SCALE)
     expected = checks.committed_digests(workloads.SCALE)
     rng = random.Random(args.seed)
-    cols = ("build_ms", "collect_ms", "jobs", "compiles", "py4j")
+    cols = ("build_ms", "collect_ms", "jobs", "stages", "tasks", "compiles", "py4j")
     timed: list[tuple] = []
     workers: list[int] = []
     try:
@@ -78,10 +81,13 @@ def main() -> int:
                 resp = reports_to_json(reports)
                 t2 = time.perf_counter()
             client.send_command = send
+            c = tracer.read_group(group)
             row = (
                 (t1 - t0) * 1e3,
                 (t2 - t1) * 1e3,
-                len(sc.statusTracker().getJobIdsForGroup(group)),
+                c.jobs,
+                c.stages,
+                c.tasks,
                 compiles.getCount() - c0,
                 sent[0],
             )
