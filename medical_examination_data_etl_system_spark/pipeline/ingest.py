@@ -81,10 +81,15 @@ def _check_batch(records: list[dict[str, Any]]) -> None:
     """Raise ``ValueError`` naming the record index and the field unless
     ``records`` is a list of objects whose ``ITEMS`` and their
     ``FINDINGS`` are lists of objects or null — the shapes the JVM
-    parser would otherwise reject only when the request is collected."""
+    parser would otherwise reject only when the request is collected —
+    and whose ``RECORD_ID`` is not missing, null or blank (clean would
+    render it under ``''``; an int ingests as its text)."""
     if not isinstance(records, list):
         raise ValueError(f"records: expected a list or an object, got {type(records).__name__}")
     for i, rec in enumerate(_objects(records, "records")):
+        rid = rec.get("RECORD_ID")
+        if rid is None or (isinstance(rid, str) and not rid.strip()):
+            raise ValueError(f"records[{i}].RECORD_ID: expected a non-blank id, got {rid!r}")
         for j, it in enumerate(_objects(rec.get("ITEMS"), f"records[{i}].ITEMS")):
             _objects(it.get("FINDINGS"), f"records[{i}].ITEMS[{j}].FINDINGS")
 

@@ -9,11 +9,12 @@ Parity with reference llm_processing.py:18-216 (``SuggestionTranslator``
   for the per-language default texts, and a deterministic MOCK mode
   (``"[LLM_OUTPUT]" + text``) when no credentials are configured.
 - the engine computes ``distinct (LANG_NO, SUMMARY)`` ONCE across the
-  whole dataset (the reference re-calls per record), runs the rewriter
-  inside ``mapInPandas`` (Arrow batches; thread pool per batch — bounded
-  concurrency per executor), and ``persist()``s the result: the stage is
-  non-deterministic against a real endpoint, and a persisted barrier
-  stops Spark from re-invoking it on plan re-execution.
+  whole batch (the reference re-calls per record), collects it and
+  rewrites it on the driver, one rewriter per language, mock and live
+  alike: no Python worker, no persist, no per-executor pool. The result
+  is a constant relation, so a plan that runs twice (CSV checkpoint,
+  then collect) never calls the LLM twice. The driver holds the set,
+  which is bounded by content cardinality, not by corpus size.
 
 The mock path needs no network and is the determinism hook for tests —
 preserved verbatim in behavior.
@@ -25,18 +26,20 @@ import os
 import re
 import time
 from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
 
-from medical_examination_data_etl_system_spark.schemas import LANGU_MAP
+from medical_examination_data_etl_system_spark.schemas import LANGU_MAP, sql_literal
 
 # Texts never sent to the LLM (identity rewrite) — reference
 # llm_processing.py:10,135-137.
 LANGU_DEFAULT_TEXT = list(LANGU_MAP.values())
+
+# The reference's pool size, retry count and backoff base
+# (llm_processing.py:80-116,195-205).
+_MAX_WORKERS = 3
+_MAX_RETRIES = 3
+_BASE_DELAY = 1.0
 
 _PROMPTS = {
     # Condensed per-language system prompts (reference llm_processing.py:20-78
@@ -56,19 +59,9 @@ class SummaryRewriter:
     (``"[LLM_OUTPUT]" + text``).
     """
 
-    def __init__(
-        self,
-        lang_no: str,
-        model: str = "gpt-4o",
-        max_workers: int = 3,
-        max_retries: int = 3,
-        base_delay: float = 1.0,
-    ):
+    def __init__(self, lang_no: str, model: str = "gpt-4o"):
         self.lang_no = str(lang_no)
         self.model = model
-        self.max_workers = max_workers
-        self.max_retries = max_retries
-        self.base_delay = base_delay
         self.client = None
         endpoint = os.getenv("AZURE_OPENAI_ENDPOINT")
         api_key = os.getenv("AZURE_OPENAI_API_KEY")
@@ -91,7 +84,7 @@ class SummaryRewriter:
     def rewrite_one(self, text: str) -> str:
         if self.client is None:
             return f"[LLM_OUTPUT]{text}"
-        for attempt in range(self.max_retries):
+        for attempt in range(_MAX_RETRIES):
             try:
                 resp = self.client.chat.completions.create(
                     model=self.model,
@@ -116,7 +109,7 @@ class SummaryRewriter:
         m = re.search(r"try again in ([\d.]+)s", error_msg)
         if m:
             return float(m.group(1)) + 0.1
-        return self.base_delay * (2**attempt)
+        return _BASE_DELAY * (2**attempt)
 
     # -- batch ------------------------------------------------------------
     def rewrite_batch(self, texts: list[str]) -> dict[str, str]:
@@ -129,56 +122,43 @@ class SummaryRewriter:
             elif t not in results:
                 to_send.append(t)
         if to_send:
-            with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
+            with ThreadPoolExecutor(max_workers=_MAX_WORKERS) as pool:
                 for t, out in zip(to_send, pool.map(self.rewrite_one, to_send)):
                     results[t] = out
         return results
 
 
-_REWRITE_SCHEMA = T.StructType(
-    [
-        T.StructField("LANG_NO", T.StringType(), True),
-        T.StructField("SUMMARY", T.StringType(), True),
-        T.StructField("SUMMARY_REWRITTEN", T.StringType(), True),
-    ]
+# The rewrite table as a constant (it collects with no job): a VALUES
+# literal whose typed null row, filtered out, keeps it non-empty.
+_REWRITES_SQL = (
+    "SELECT * FROM VALUES {}(CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS STRING))"
+    " AS t(LANG_NO, SUMMARY, SUMMARY_REWRITTEN) WHERE LANG_NO IS NOT NULL"
 )
 
 
-def rewrite_distinct_summaries(df: DataFrame, model: str | None = None) -> DataFrame:
-    """distinct (LANG_NO, SUMMARY) → (…, SUMMARY_REWRITTEN), persisted.
+def rewrite_distinct_summaries(df: DataFrame) -> DataFrame:
+    """distinct (LANG_NO, SUMMARY) → (…, SUMMARY_REWRITTEN), a constant.
 
     ``df`` must carry LANG_NO and a generic SUMMARY column. Keys are
     stripped before rewriting (reference text_processing.py:75). The
-    result is persisted MEMORY_AND_DISK: the rewrite is non-deterministic
-    against a live endpoint and must not be recomputed per consumer.
+    distinct set is collected (one job) and rewritten here, on the
+    driver, once per language; the result is a constant relation, so
+    however often the caller's plan runs, the LLM is not called again.
+    Rows with a null LANG_NO are not rewritten.
     """
-    model = model or os.getenv("AZURE_OPENAI_DEPLOYMENT", "gpt-4o")
+    model = os.getenv("AZURE_OPENAI_DEPLOYMENT", "gpt-4o")
     distinct = (
         df.selectExpr("CAST(LANG_NO AS STRING) AS LANG_NO", "trim(SUMMARY) AS SUMMARY")
-        .filter("SUMMARY != ''")
+        .filter("LANG_NO IS NOT NULL AND SUMMARY != ''")
         .distinct()
+        .collect()
     )
-
-    def _rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = []
-            for lang, sub in pdf.groupby("LANG_NO", sort=False):
-                rewriter = SummaryRewriter(lang_no=str(lang), model=model)
-                mapping = rewriter.rewrite_batch(sub["SUMMARY"].tolist())
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "LANG_NO": str(lang),
-                            "SUMMARY": list(mapping.keys()),
-                            "SUMMARY_REWRITTEN": list(mapping.values()),
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    out = distinct.mapInPandas(_rewrite, schema=_REWRITE_SCHEMA)
-    # Tracked persist: release via operators.cache (cache_scope around the
-    # pipeline run, or release_all in long-lived sessions).
-    return persist_tracked(out)
+    by_lang: dict[str, list[str]] = {}
+    for lang, summary in distinct:
+        by_lang.setdefault(lang, []).append(summary)
+    values = "".join(
+        f"({sql_literal(lang)}, {sql_literal(text)}, {sql_literal(out)}), "
+        for lang, texts in by_lang.items()
+        for text, out in SummaryRewriter(lang, model).rewrite_batch(texts).items()
+    )
+    return df.sparkSession.sql(_REWRITES_SQL.format(values))

@@ -6,8 +6,8 @@ Parity with reference text_processing.py:33-141, Spark-first:
   one ``CASE`` on LANG_NO per generic column instead of a per-record
   Python loop — all four languages in one pass, JVM-side.
 - The rewrite lookup (reference :76 + :124 ``summary_translated.get``)
-  is a broadcast left join against the persisted distinct-summary
-  rewrite table (see ``pipeline.llm``) — not a driver-side dict.
+  reads the rewrite table (see ``pipeline.llm``) into one constant map,
+  language → summary → rewrite — no join, no broadcast.
 - U2 (the renderer, reference :66-126) is row-procedural in the
   reference: order-preserving nested grouping GROUP → SUMMARY
   [→ COMMENT] with first-seen block regrouping. ``render_generic_reports``
@@ -49,13 +49,10 @@ _DEFAULT_TEXT = (
     + " ELSE '' END"
 )
 
-# Renderer input: the rewrite lookup key (reference :75-76) beside the
-# columns the tree assembly reads. Block key: (raw SUMMARY, raw COMMENT
-# for the default branch).
+# Renderer input: the columns the tree assembly reads. Block key: (raw
+# SUMMARY, raw COMMENT for the default branch).
 _ROWS = [
     "RECORD_ID", "ord", "rec_ord", "request", "`GROUP`", "SUMMARY",
-    f"{_LANG} AS _lang",
-    "trim(SUMMARY) AS _summary_key",
     f"SUMMARY = {_DEFAULT_TEXT} AS _is_default",
     "trim(CAST(ITEM_CODE AS STRING)) AS _code_t",
     "trim(CAST(ITEM_NAME AS STRING)) AS _name_t",
@@ -63,16 +60,12 @@ _ROWS = [
     "trim(CAST(SUMMARY AS STRING)) AS _summary_t",
     f"CASE WHEN SUMMARY = {_DEFAULT_TEXT} THEN COMMENT_G END AS _blk_com",
 ]
-_REWRITE_INPUT = ["LANG_NO AS _lang", "SUMMARY AS _summary_key", "SUMMARY_REWRITTEN"]
 # All encounter orders are min(ord) per RAW value — groups unify
 # non-adjacent repeats, exactly like pandas groupby(sort=False); plus the
-# first occurrence of each ITEM_CODE / comment within a block. The
-# rewrite falls back to the original (stripped) summary — reference
-# :124's ``summary_translated.get(summary, summary)``.
+# first occurrence of each ITEM_CODE / comment within a block.
 _BLK = "RECORD_ID, `GROUP`, SUMMARY, _blk_com"
 _ROW_ORDERS = [
     "*",
-    "trim(CAST(coalesce(SUMMARY_REWRITTEN, _summary_key) AS STRING)) AS _rewritten_t",
     "min(ord) OVER (PARTITION BY RECORD_ID, `GROUP`) AS _grp_ord",
     "min(ord) OVER (PARTITION BY RECORD_ID, `GROUP`, SUMMARY) AS _sum_ord",
     f"min(ord) OVER (PARTITION BY {_BLK}) AS _com_ord",
@@ -120,6 +113,24 @@ _REPORT_OUTPUT = [
 ]
 
 
+def _rewritten(rewrites: DataFrame) -> str:
+    """``_rewritten_t`` as SQL text (reference :75-76, :124): the row's
+    trimmed language, then its stripped summary, looked up in one
+    constant map of ``rewrites``, else the stripped summary. ``rewrites``
+    is collected, so it must fit the driver. A null key or rewrite gets
+    no entry: such a row keeps its own summary."""
+    table: dict[str, dict[str, str]] = {}
+    for lang, summary, out in rewrites.select("LANG_NO", "SUMMARY", "SUMMARY_REWRITTEN").collect():
+        if None not in (lang, summary, out):
+            table.setdefault(lang, {})[summary] = out
+    maps = ", ".join(
+        f"{sql_literal(lang)}, map({', '.join(sql_literal(t) for kv in texts.items() for t in kv)})"
+        for lang, texts in table.items()
+    )
+    lookup = f"map({maps})[{_LANG}][trim(SUMMARY)]" if table else "NULL"
+    return f"trim(coalesce({lookup}, trim(SUMMARY))) AS _rewritten_t"
+
+
 def with_generic_columns(df: DataFrame) -> DataFrame:
     """P4 for all four languages at once: add GROUP / ITEM_NAME /
     COMMENT_G / SUMMARY picked by each row's LANG_NO."""
@@ -155,11 +166,7 @@ def render_generic_reports(generic: DataFrame, rewrites: DataFrame) -> DataFrame
     - line assembly → ``concat_ws('\\n', ...)`` (skips NULL parts) per
       block, ``array_join(sort_array(collect_list(...)))`` per record.
     """
-    # The rewrite lookup (reference :76 + :124) is a broadcast left join
-    # against the persisted distinct-summary rewrite table.
-    rows = generic.selectExpr(*_ROWS).join(
-        F.broadcast(rewrites.selectExpr(*_REWRITE_INPUT)), ["_lang", "_summary_key"], "left"
-    )
+    rows = generic.selectExpr(*_ROWS, _rewritten(rewrites))
     # One COARSE exchange for the whole renderer (r14, guide §2.4):
     # every window/groupBy below is keyed by a superset of
     # {RECORD_ID}, so hashpartitioning(RECORD_ID) satisfies all of

@@ -2,16 +2,17 @@
 
 ``reports_for_batch`` is the one batch body, reference
 text_processing.py:144-177 (``POST /process``): flatten → enrich →
-clean → rewrite → render, all lazy until the caller acts (collect /
-write). Every served input calls it: the API (``process_records``, over
-the driver's request list), file ingest (``records_from_json_files``)
-and each stream micro-batch; only the nested frame differs. A request
-list is a small batch, so ``process_records`` plans it in the caller's
-:func:`served_session`, whose one difference is AQE off: runtime
-re-optimization gains such a plan nothing and costs a job and a re-plan
-at every shuffle. Files and streams keep the caller's session, AQE on.
-CSV checkpoints are optional sinks, matching the reference's two
-timestamped CSV artifacts.
+clean → rewrite → render. Building it fires one job, the collect of the
+distinct summaries the driver rewrites (``pipeline.llm``); the rest is
+lazy until the caller acts (collect / write). Every served input calls
+it: the API (``process_records``, over the driver's request list), file
+ingest (``records_from_json_files``) and each stream micro-batch; only
+the nested frame differs. A request list is a small batch, so
+``process_records`` plans it in the caller's :func:`served_session`,
+whose one difference is AQE off: runtime re-optimization gains such a
+plan nothing and costs a job and a re-plan at every shuffle. Files and
+streams keep the caller's session, AQE on. CSV checkpoints are optional
+sinks, matching the reference's two timestamped CSV artifacts.
 """
 
 from __future__ import annotations
@@ -73,6 +74,8 @@ def reports_for_batch(
     """Nested records (BATCH_SCHEMA) → (record_id, report, request,
     rec_ord), in no particular order: the stream sink needs none, and a
     global sort would cost a range exchange and its sampling job.
+    Building it runs the rewrite's one job and LLM calls (one per
+    distinct text), never repeated however often the plan runs.
 
     With no ``dims``, ``resolve_dims`` picks the source: MongoDB when
     MONGO_URI is set, else no tables, for which ``enrich`` computes the
@@ -83,7 +86,7 @@ def reports_for_batch(
     if dims is None:
         dims = resolve_dims(nested.sparkSession, flat)
     # Persisted barrier (r13): `cleaned` has two consumers — the
-    # distinct-summary rewrite branch and the renderer (three with the
+    # rewrite's distinct-summary collect and the renderer (three with the
     # CSV checkpoint) — and is itself the whole front half (flatten →
     # enrich → clean: explode, dim joins, dedup windows). Without the
     # barrier the front half recomputes per consumer; measured at sf0.1

@@ -7,9 +7,9 @@ One place to encode the engine's execution posture:
   plans it in a clone of this session with AQE off
   (``pipeline.run.served_session``), which saves a job and a re-plan
   at every shuffle.
-- Arrow on — every pandas-interop boundary (LLM mapInPandas stage,
-  the Arrow-batched vector kernels) crosses via Arrow batches, not
-  pickled rows.
+- Arrow on — every pandas-interop boundary (the Arrow-batched vector
+  and media kernels) crosses via Arrow batches, not pickled rows. The
+  served paths cross none: the LLM rewrite runs on the driver.
 - UTC session timezone — parity with DuckDB oracle timestamps.
 - a generated-class cache that holds a served request's classes, so a
   warm server compiles nothing per request.

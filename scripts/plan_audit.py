@@ -10,10 +10,12 @@ row-at-a-time Python UDFs (BatchEvalPython) and unbounded cartesian
 products — plus Exchange counts as a shuffle budget overview.
 
 Arrow-batched boundaries (ArrowEvalPython / MapInPandas /
-FlatMapGroupsInPandas) are the sanctioned Python path and are counted
-separately, not flagged. BroadcastNestedLoopJoin over a 1-row bounds
-frame (gap-fill spine, zorder bounds) is bounded work, reported but
-not fatal.
+FlatMapGroupsInPandas) are the sanctioned Python path for registry
+queries and are counted separately, not flagged. The two served entry
+points run no Python on an executor at all (the summary rewrite runs on
+the driver), so there every Python node is fatal.
+BroadcastNestedLoopJoin over a 1-row bounds frame (gap-fill spine,
+zorder bounds) is bounded work, reported but not fatal.
 
 Usage: python scripts/plan_audit.py [sf_dir] [name ...]
 Exit code 1 if any query trips a fatal flag.
@@ -35,6 +37,8 @@ FILE_ENTRY = "file:records_from_json_files"
 SAMPLE_REQUEST = os.path.join(ROOT, "tests", "sample_request.json")
 
 FATAL = ("BatchEvalPython", "CartesianProduct")
+# Also fatal on the served entries: any node that runs Python.
+SERVED_FATAL = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
 INFO = (
     "ArrowEvalPython",
     "MapInPandas",
@@ -150,10 +154,11 @@ def main() -> int:
             print(f"ERROR {name}: {type(exc).__name__}: {str(exc)[:120]}")
             rc = 1
             continue
-        fatal = [f for f in FATAL if f in plan]
+        served = name in (API_ENTRY, FILE_ENTRY)
+        fatal = [f for f in FATAL + (SERVED_FATAL if served else ()) if f in plan]
         if n_upw and name not in UNPARTITIONED_WINDOW_ALLOWED:
             fatal.append(f"UnpartitionedWindow×{n_upw} (not allowlisted)")
-        info = [f for f in INFO if f in plan]
+        info = [f for f in INFO if f in plan and f not in fatal]
         if n_upw and name in UNPARTITIONED_WINDOW_ALLOWED:
             info.append(f"UnpartitionedWindow×{n_upw}[allowed]")
         n_ex = len(re.findall(r"Exchange (?:hash|range|Single)", plan))

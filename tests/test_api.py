@@ -59,8 +59,8 @@ def _with_items(items) -> dict:
     return {"RECORD_ID": "R1", "LANG_NO": "1", "ORG_ID": "ORG_A", "ITEMS": items}
 
 
-# (payload, the ValueError's message): one case per shape
-# the JVM parser would reject only at collect time.
+# (payload, the ValueError's message): one case per shape the JVM
+# parser would reject only at collect time, and per kind of absent id.
 _BAD_PAYLOADS = {
     "payload_not_list": ("R1", "records: expected a list or an object, got str"),
     "record_not_object": ([_with_items([]), ["R2"]], "records[1]: expected an object, got list"),
@@ -74,6 +74,13 @@ _BAD_PAYLOADS = {
         _with_items([{"ITEM_CODE": "I1", "FINDINGS": [{"COMMENT": "ok"}, None]}]),
         "records[0].ITEMS[0].FINDINGS[1]: expected an object, got NoneType",
     ),
+    # No RECORD_ID: clean would render the record under ''.
+    "record_id_missing": (
+        [_with_items([]), {"LANG_NO": "1", "ITEMS": []}],
+        "records[1].RECORD_ID: expected a non-blank id, got None",
+    ),
+    "record_id_null": ({**_with_items([]), "RECORD_ID": None}, "records[0].RECORD_ID: expected a non-blank id, got None"),
+    "record_id_blank": ({**_with_items([]), "RECORD_ID": " \t"}, "records[0].RECORD_ID: expected a non-blank id, got ' \\t'"),
 }
 
 

@@ -1,5 +1,5 @@
 """Round-9 additions: the two composed-pipeline driver queries
-(VERDICT r6 #2/#3) — the real mapInPandas LLM stage and the full
+(VERDICT r6 #2/#3) — the real LLM rewrite stage and the full
 ingest→enrich→clean front half — plan guards + semantic spot checks
 on top of the oracle parity they get from test_oracle_parity.
 """
@@ -13,17 +13,19 @@ from medical_examination_data_etl_system_spark.schemas import LANGU_MAP
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Plan nodes that run Python on an executor.
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 class TestPipelineLlmRewrite:
-    def test_plan_has_mapinpandas_and_no_row_udf(self, spark):
-        df = all_queries()["pipeline_llm_rewrite"].fn(spark, SF_DIR)
-        plan = _executed_plan(df)
-        assert "MapInPandas" in plan  # the real U1 Arrow-batch stage
-        assert "BatchEvalPython" not in plan
+    def test_plan_has_no_python_node(self, spark):
+        # The rewrite runs on the driver; the table is a constant.
+        plan = _executed_plan(all_queries()["pipeline_llm_rewrite"].fn(spark, SF_DIR))
+        assert not [n for n in PYTHON_NODES if n in plan]
 
     def test_skip_list_and_mock_semantics(self, spark):
         rows = all_queries()["pipeline_llm_rewrite"].fn(spark, SF_DIR).collect()
@@ -47,13 +49,13 @@ class TestPipelineLlmRewrite:
 
 class TestPipelineE2EReports:
     def test_plan_and_report_grammar(self, spark):
-        """The composed pipeline must carry the Arrow rewrite stage and
-        emit reports in the reference indentation grammar with
-        [LLM_OUTPUT] on every non-default summary line."""
+        """The composed pipeline runs no Python on an executor (the
+        rewrite is a constant lookup) and emits reports in the reference
+        indentation grammar with [LLM_OUTPUT] on every non-default
+        summary line."""
         df = all_queries()["pipeline_e2e_reports"].fn(spark, SF_DIR)
         plan = _executed_plan(df)
-        assert "MapInPandas" in plan  # the real U1 stage inside the composition
-        assert "BatchEvalPython" not in plan
+        assert not [n for n in PYTHON_NODES if n in plan]
         rows = df.collect()
         assert rows
         defaults = set(LANGU_MAP.values())

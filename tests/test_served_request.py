@@ -1,16 +1,23 @@
 """The served request's fixed cost: no Janino recompiles once warm, no
-range exchange or global sort in the plan, a bounded job count, a
-request list parsed in the JVM (no Python-RDD scan) and planned with
-AQE off in a served session that leaves the caller's conf alone."""
+range exchange or global sort in the plan, a bounded job count, no
+Python node in the served plans, a request list parsed in the JVM (no
+Python-RDD scan) and planned with AQE off in a served session that
+leaves the caller's conf alone."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
 from medical_examination_data_etl_system_spark.api import handle_process_request
-from medical_examination_data_etl_system_spark.operators.cache import cache_scope, release_all
+from medical_examination_data_etl_system_spark.operators.cache import cache_scope
 from medical_examination_data_etl_system_spark.pipeline import process_records
-from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
+from medical_examination_data_etl_system_spark.pipeline.ingest import (
+    flatten,
+    records_from_json_files,
+    records_to_df,
+)
 from medical_examination_data_etl_system_spark.pipeline.run import reports_for_batch, served_session
 from medical_examination_data_etl_system_spark.schemas import (
     BATCH_SCHEMA,
@@ -22,6 +29,7 @@ from medical_examination_data_etl_system_spark.schemas import (
 
 from .fixtures import finding, item, multilang_edge_batch, record, sample_request
 from .test_enrich import _odd_key_batch
+from .test_round9 import PYTHON_NODES
 
 # Jobs one process_records(...).collect() fires on the sample request.
 _MAX_JOBS = 3
@@ -44,13 +52,9 @@ def _plan_nodes(plan):
 def test_repeated_request_compiles_no_generated_class(spark):
     """The codegen cache holds a whole request's generated classes, so
     serving the same request again compiles nothing."""
+    # No frame of an earlier test is left persisted (conftest), so the
+    # first request runs the whole plan, not a cached subtree.
     payload = sample_request()
-    # A request list plans as a constant, so a frame that another caller
-    # left persisted for this same payload would serve the first request
-    # from its cache, and only the second would run (and compile) the
-    # cached subtree. Release such leftovers so the first request runs
-    # the whole plan.
-    release_all()
     first = handle_process_request(spark, payload)
     before = _compiles(spark)
     second = handle_process_request(spark, payload)
@@ -82,6 +86,21 @@ def test_served_request_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= _MAX_JOBS
+
+
+def test_served_plans_have_no_python_node(spark, tmp_path):
+    """The API request and the file-ingest body (the stream's micro-batch
+    body too) run no Python on an executor: the summary rewrite runs on
+    the driver while the plan is built."""
+    jsonl = tmp_path / "records.jsonl"
+    jsonl.write_text("".join(json.dumps(r) + "\n" for r in sample_request()), encoding="utf-8")
+    with cache_scope():
+        for df in (
+            process_records(spark, sample_request()),
+            reports_for_batch(records_from_json_files(spark, str(jsonl))),
+        ):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert not [n for n in PYTHON_NODES if n in plan]
 
 
 def test_sql_literal_round_trips(spark):
